@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Metadata ingest (SURVEY.md §3.1, reference `lambda_2.py`): RSS XML →
   * time / podcast / episode dimensions. One declarative DAG replaces the
@@ -10,12 +11,22 @@ import org.apache.spark.sql.functions._
   */
 object FeedIngest {
 
+  /** The RSS fields the ingest reads, all as strings. Pinned: inference
+    * costs a scan per read, types a channel whose every feed has one
+    * `<item>` as a struct (which `explode` rejects), and types a title
+    * like `1984` as a number, whose xxhash64 differs from the string's.
+    */
+  private val RssSchema: StructType = StructType.fromDDL(
+    "title STRING, description STRING, item ARRAY<STRUCT<" +
+      "title: STRING, description: STRING, pubDate: STRING, " +
+      "enclosure: STRUCT<_url: STRING, _type: STRING>>>")
+
   /** E5 — RSS source (`lambda_2.py:168-189`, xmltodict): Spark 4
     * built-in XML, one row per `<channel>`. Works on a directory of
-    * feeds — each file is a row, schema inferred or fixed.
+    * feeds — each file is a row, read with the pinned `RssSchema`.
     */
   def readRss(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml").option("rowTag", "channel").load(path)
+    spark.read.format("xml").option("rowTag", "channel").schema(RssSchema).load(path)
 
   case class FeedDims(time: DataFrame, podcast: DataFrame, episode: DataFrame)
 
@@ -37,9 +48,12 @@ object FeedIngest {
 
   /** The ingest proper (`lambda_2.py:173-238`). Surrogate keys are
     * xxhash64 of the natural unique key (podcast_title / link) — stable
-    * across retries, no driver-side sequence at 100 TB. pubDate parses
-    * RFC-822 with null-on-failure (S9, `lambda_2.py:108-114`) via
-    * try_to_timestamp (ANSI-safe).
+    * across retries, no driver-side sequence at 100 TB. An episode's
+    * podcast_id is computed from its own channel's title, the key the
+    * podcast dimension carries, so no lookup join is needed (J1); a
+    * channel without a title has no podcast row and its items are
+    * dropped. pubDate parses RFC-822 with null-on-failure (S9,
+    * `lambda_2.py:108-114`) via try_to_timestamp (ANSI-safe).
     */
   def ingest(channels: DataFrame): FeedDims = {
     val podcast = channels
@@ -49,26 +63,16 @@ object FeedIngest {
         col("description"))
       .dropDuplicates("podcast_title")
 
-    val items = channels
-      .select(col("title").as("podcast_title"), explode(col("item")).as("it"))
+    val episode = channels
+      .filter(col("title").isNotNull)
+      .select(xxhash64(col("title")).as("podcast_id"), explode(col("item")).as("it"))
       .select(
-        col("podcast_title"),
+        xxhash64(col("it.enclosure._url")).as("episode_id"),
         col("it.enclosure._url").as("link"),
+        col("podcast_id"),
         parsePubDate(col("it.pubDate")).as("episode_release_date"),
         col("it.title").as("episode_title"),
-        col("it.description").as("episode_description"))
-
-    val episode = items
-      .join(
-        broadcast(podcast.select(col("podcast_title"), col("podcast_id"))),
-        Seq("podcast_title"))                       // J1 lookup join
-      .select(
-        xxhash64(col("link")).as("episode_id"),
-        col("link"),
-        col("podcast_id"),
-        col("episode_release_date"),
-        col("episode_title"),
-        col("episode_description"),
+        col("it.description").as("episode_description"),
         lit(false).as("downloaded"),
         lit(0).as("num_chunks"))
       .dropDuplicates("link")                       // unique key on link

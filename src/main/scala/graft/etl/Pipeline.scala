@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
 /** End-to-end pipeline façade (SURVEY.md §3): composes ingest, the
   * transcript reduce, and entity alignment into the five warehouse
   * tables. The reference's 8-Lambda / 2-queue / 6-S3-event choreography
-  * (`main.tf:151-669`) collapses into two Spark DAGs with two shuffles
-  * (groupBy episode; per-episode windows).
+  * (`main.tf:151-669`) collapses into Spark DAGs that shuffle only by
+  * episode: the sentence table is one groupBy over the chunks; the entity
+  * table reduces the ready chunks again and aligns them to the sentence
+  * spans (a per-episode window and an equi-join on episode_id).
   */
 object Pipeline {
 

@@ -1,8 +1,9 @@
 package graft.etl
 
 import graft.nlp.Stubs
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Transcript reduce pipeline (SURVEY.md §3.2, reference `lambda_5.py` +
   * `lambda_71.py`): per-chunk transcription JSON → barrier on chunk
@@ -12,16 +13,29 @@ import org.apache.spark.sql.functions._
   */
 object Transcripts {
 
+  /** The part of a Transcribe output the pipeline reads
+    * (`lambda_5.py:76-79`). Pinned, so reading the chunks starts no
+    * schema-inference scan.
+    */
+  private val ChunkSchema: StructType = StructType.fromDDL(
+    "results STRUCT<transcripts: ARRAY<STRUCT<transcript: STRING>>>")
+
   /** E10/E11-shaped source: a directory tree
     * `{base}/episode_{id}/chunk_{n}.json` of Transcribe outputs
     * (`{"results":{"transcripts":[{"transcript":"..."}]}}`,
     * `lambda_5.py:76-79`). Path parsing = S3/S4
-    * (`element_at(split(...))`, `lambda_5.py:24-38`).
+    * (`element_at(split(...))`, `lambda_5.py:24-38`). The tree is
+    * listed from its one root on the driver: a glob would expand to a
+    * path per file and, past 32 paths, Spark lists them in a parallel
+    * job.
     */
   def readChunks(spark: SparkSession, base: String): DataFrame =
     spark.read
+      .schema(ChunkSchema)
       .option("multiLine", true)
-      .json(s"$base/*/*.json")
+      .option("recursiveFileLookup", true)
+      .option("pathGlobFilter", "*.json")
+      .json(base)
       .withColumn("path", input_file_name())
       .select(
         regexp_extract(col("path"), "episode_(\\d+)/", 1).cast("long")
@@ -44,20 +58,22 @@ object Transcripts {
       .filter(col("arrived") >= col("num_chunks"))
       .select(col("episode_id"))
 
+  // A7's ordered text per episode, defined once so that
+  // `reduceTranscripts` and `sentenceDimension` cannot drift apart.
+  private val orderedText: Column =
+    array_join(
+      transform(
+        array_sort(collect_list(struct(col("chunk_num"), col("text")))),
+        x => x.getField("text")),
+      " ")
+
   /** A7 — ordered concat reduce (`lambda_5.py:71-81`): chunk texts
     * joined with " " in chunk order. Order is explicit via
     * array_sort over (chunk_num, text) structs — never bare
     * collect_list (SURVEY §7.3 determinism trap).
     */
   def reduceTranscripts(chunks: DataFrame): DataFrame =
-    chunks
-      .groupBy(col("episode_id"))
-      .agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("chunk_num"), col("text")))),
-            x => x.getField("text")),
-          " ").as("text"))
+    chunks.groupBy(col("episode_id")).agg(orderedText.as("text"))
 
   /** F1 — sentence tokenizer (`lambda_5.py:84-87`, NLTK punkt): the
     * engine's declared semantics are a regex split after `.`/`!`/`?` +
@@ -137,12 +153,21 @@ object Transcripts {
     * sentence_dimension rows (`lambda_71.py:74-121` zip-by-index +
     * load). sentence_id = xxhash64(episode_id, sentence_index) — the
     * natural unique key (`lambda_2.py:68`).
+    *
+    * The barrier and the reduce are one aggregate: each episode's chunk
+    * count and ordered text come out of the same groupBy, so the chunks
+    * are read once. Row-identical to
+    * `tokenize(reduceTranscripts(chunks ⋈ completeEpisodes))`.
     */
   def sentenceDimension(
       chunks: DataFrame,
       expected: DataFrame): DataFrame = {
-    val ready = completeEpisodes(chunks, expected)
-    val transcripts = reduceTranscripts(chunks.join(ready, Seq("episode_id")))
+    val transcripts = chunks
+      .groupBy(col("episode_id"))
+      .agg(count(lit(1)).as("arrived"), orderedText.as("text"))
+      .join(expected, Seq("episode_id"))
+      .filter(col("arrived") >= col("num_chunks"))
+      .select(col("episode_id"), col("text"))
     val sentences = tokenize(transcripts)
     Stubs.sentimentScored(sentences, "sentence_text")
       .select(

@@ -14,10 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (sentence_index, sentence) rows, splitting after `.` `!` `?` +
   * whitespace, in a single pass over the UTF-8 bytes.
   *
-  * The default tokenize path stays `split` + `posexplode` (fully
-  * codegen'd); this Generator exists for the taxonomy and for callers
-  * that want the explode without materializing the intermediate array —
-  * the two are asserted row-identical in SentenceGeneratorSpec.
+  * This is the tokenize path (`Transcripts.tokenize`): it explodes
+  * without materializing an intermediate array per row. The `split` +
+  * `posexplode` formulation is the executable reference it is asserted
+  * row-identical to in SentenceGeneratorSpec.
   */
 case class SentenceGenerator(child: Expression)
     extends UnaryExpression with Generator with CodegenFallback {

@@ -1,14 +1,16 @@
 package graft.nlp
 
+import graft.functions.WordGenerator
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deterministic stand-ins for the reference's external ML services
   * (SURVEY.md §2.9 X1–X3: AWS Transcribe / Comprehend). The sandbox has
   * no network, so these compute stable pseudo-outputs from content
   * hashes — same schema and join shape as the real services, fully
-  * reproducible. All are pure Column expressions (codegen'd, no UDFs).
+  * reproducible. No UDFs: sentiment is a pure Column expression
+  * (codegen'd); entities come from a Catalyst Generator
+  * (`WordGenerator`) plus Column expressions.
   */
 object Stubs {
 
@@ -52,19 +54,9 @@ object Stubs {
     * Input: (episode_id, text). Output: (episode_id, entity_text,
     * entity_type, begin_off, end_off).
     */
-  def stubEntities(transcripts: DataFrame, textCol: String): DataFrame = {
-    val w = Window
-      .partitionBy(col("episode_id"))
-      .orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+  def stubEntities(transcripts: DataFrame, textCol: String): DataFrame =
     transcripts
-      .select(
-        col("episode_id"),
-        posexplode(split(col(textCol), "\\s+")).as(Seq("pos", "word")))
-      .withColumn("wlen", length(col("word")).cast("long"))
-      .withColumn(
-        "begin_off",
-        coalesce(sum(col("wlen") + 1).over(w), lit(0L)))
+      .select(col("episode_id"), WordGenerator.words(col(textCol)))
       .filter(pmod(col("pos"), lit(5)) === 2)
       .select(
         col("episode_id"),
@@ -74,6 +66,5 @@ object Stubs {
           (pmod(xxhash64(col("word")), lit(3)) + 1).cast("int"))
           .as("entity_type"),
         col("begin_off"),
-        (col("begin_off") + col("wlen")).as("end_off"))
-  }
+        (col("begin_off") + length(col("word"))).as("end_off"))
 }

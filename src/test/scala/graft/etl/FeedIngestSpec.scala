@@ -1,5 +1,7 @@
 package graft.etl
 
+import java.nio.file.Files
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -50,7 +52,7 @@ class FeedIngestSpec extends SparkSpec {
     assert(rows.head.getAs[Int]("day") == 2)
   }
 
-  test("episode FK resolves via broadcast lookup join (J1)") {
+  test("episode FK resolves to its channel's podcast (J1)") {
     val joined = dims.episode.join(
       dims.podcast, Seq("podcast_id"), "left_anti")
     assert(joined.count() == 0) // every episode's podcast_id resolves
@@ -60,5 +62,58 @@ class FeedIngestSpec extends SparkSpec {
     val again = FeedIngest.ingest(FeedIngest.readRss(spark, res("feeds")))
     assert(dims.episode.select("episode_id").except(
       again.episode.select("episode_id")).count() == 0)
+  }
+
+  /** A directory of feeds, one per (channel title, item links). */
+  private def feedDir(channels: (String, Seq[String])*): String = {
+    val dir = Files.createTempDirectory("feeds")
+    channels.zipWithIndex.foreach { case ((title, links), i) =>
+      val items = links.map { link =>
+        s"""  <item>
+           |    <title>ep</title><description>d</description>
+           |    <pubDate>Mon, 02 Jan 2023 15:04:05 +0000</pubDate>
+           |    <enclosure url="$link" type="audio/mpeg"/>
+           |  </item>""".stripMargin
+      }
+      Files.writeString(dir.resolve(s"feed$i.xml"),
+        s"""<?xml version="1.0" encoding="UTF-8"?>
+           |<rss version="2.0"><channel>
+           |  <title>$title</title><description>d</description>
+           |${items.mkString("\n")}
+           |</channel></rss>
+           |""".stripMargin)
+    }
+    dir.toString
+  }
+
+  // Inferred, `item` would be a struct here: every channel has one.
+  lazy val oneItemFeeds: String = feedDir(
+    "Pod A" -> Seq("https://example.com/a/ep1.mp3"),
+    "Pod B" -> Seq("https://example.com/b/ep1.mp3"))
+
+  // Inferred, the title would be a long here: the only channel's is numeric.
+  lazy val numericTitleFeeds: String = feedDir(
+    "1984" -> Seq("https://example.com/1984/ep1.mp3", "https://example.com/1984/ep2.mp3"))
+
+  test("channels with one <item> each ingest (item pinned as an array)") {
+    val d = FeedIngest.ingest(FeedIngest.readRss(spark, oneItemFeeds))
+    assert(d.podcast.count() == 2)
+    assert(d.episode.select("link").collect().map(_.getString(0)).toSet == Set(
+      "https://example.com/a/ep1.mp3", "https://example.com/b/ep1.mp3"))
+  }
+
+  test("a numeric title is a string: podcast_id is xxhash64 of \"1984\"") {
+    val d = FeedIngest.ingest(FeedIngest.readRss(spark, numericTitleFeeds))
+    val want = spark.range(1).select(xxhash64(lit("1984"))).head().getLong(0)
+    val pod = d.podcast.collect()
+    assert(pod.length == 1 && pod.head.getAs[String]("podcast_title") == "1984")
+    assert(pod.head.getAs[Long]("podcast_id") == want)
+    assert(d.episode.select("podcast_id").collect().map(_.getLong(0)).toSeq == Seq(want, want))
+  }
+
+  test("readRss starts no Spark job (pinned schema, no inference scan)") {
+    assert(jobsStarted(FeedIngest.readRss(spark, res("feeds"))) == 0)
+    assert(jobsStarted(FeedIngest.readRss(spark, oneItemFeeds)) == 0)
+    assert(jobsStarted(FeedIngest.readRss(spark, numericTitleFeeds)) == 0)
   }
 }
