@@ -134,8 +134,9 @@ object Bench {
     // every timed number, so SessionCache.warmEntries admits ONLY
     // frames consumed by ≥ 2 registered queries (pinned by
     // WarmPolicySpec). Single-consumer intermediates must be in-query
-    // lazy localCheckpoints — computed once per execution, timed with
-    // their query.
+    // localCheckpoint(eager = false)s — computed once per execution,
+    // timed with their query (under AQE their shuffle stages run while
+    // the query's DataFrame is built, so they land in its build time).
     try graft.queries.SessionCache.warm(spark, sfDir)
     catch { case e: Throwable =>
       System.err.println(s"[bench] cache warmup failed: ${e.getMessage}")

@@ -36,10 +36,15 @@ object SortFirst {
     * between (the doc-keyed session-cache layouts removed those
     * exchanges on purpose): the range partitioner's sampling pass
     * re-runs everything from the last shuffle boundary, i.e. the whole
-    * per-doc aggregation/window, a second time. The lazy checkpoint
+    * per-doc aggregation/window, a second time. The checkpoint
     * materializes the output-sized frame once; the sampling pass
     * re-reads persisted blocks. The recompute→storage trade of guide
     * §5, applied at the output sort.
+    *
+    * Not lazy in effect: under AQE, `localCheckpoint(eager = false)`
+    * runs every shuffle stage below the plan's last exchange while the
+    * DataFrame is being built, so that work is paid by the caller's
+    * construction, not by its first action.
     */
   def checkpointedSort(df: DataFrame, keys: Column*): DataFrame =
     df.localCheckpoint(eager = false).orderBy(keys: _*)

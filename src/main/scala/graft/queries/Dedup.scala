@@ -1,7 +1,9 @@
 package graft.queries
 
 import graft.Tables._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -690,12 +692,14 @@ object Dedup {
     * anything is dropped. Connected components over the d3 LSH pairs
     * via min-label propagation: every doc starts labeled with itself;
     * each round takes the min of its own and its neighbors' labels
-    * (one equi-join + hash agg per round); the unique fixpoint labels
-    * each component with its smallest doc_id = the kept doc (d1's
-    * keep-min rule, applied transitively). Rounds needed = component
-    * diameter — near-dup clusters are tiny, and each round is fully
-    * partition-parallel, so this is the 100 TB shape (it is GraphX's
-    * own connected-components algorithm, expressed on DataFrames).
+    * (one Spark job per round, see [[propagateLabels]]); the unique
+    * fixpoint labels each component with its smallest doc_id = the
+    * kept doc (d1's keep-min rule, applied transitively). Rounds
+    * needed = component diameter — near-dup clusters are tiny, and
+    * each round is fully partition-parallel, so this is the 100 TB
+    * shape (it is GraphX's own connected-components algorithm, on
+    * RDDs like GraphX's). A corpus with no near-dup pair has no edge
+    * vertex: every doc is its own cluster.
     * Deterministic fixpoint → oracle-checkable against a DuckDB
     * recursive CTE.
     */
@@ -718,56 +722,106 @@ object Dedup {
   /** The min-label propagation itself → (doc_id, label) for edge
     * vertices only (see dedupClusters).
     */
-  private def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashLsh(spark, dir).select(col("a_id"), col("b_id"))
-    // localCheckpoint (not persist): an iterative loop must TRUNCATE
-    // lineage each round, or every round's plan chains all previous
-    // rounds plus the whole LSH pipeline and Catalyst re-analysis grows
-    // without bound (measured: 1.8 s → 2.8 s → 6.7 s per round on a
-    // 479-vertex graph). Exactly GraphX's own checkpointing discipline;
-    // a long-running cluster job would use reliable checkpoint() for
-    // fault tolerance instead.
-    val edges = pairs
-      .unionByName(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .select(col("a_id").as("u"), col("b_id").as("v"))
-      .localCheckpoint()
-    // Only vertices that appear in an edge can ever change label —
-    // propagate over the edge vertex set alone (∝ near-dup docs, a
-    // sliver of the corpus); every other doc is its own cluster and
-    // joins back at the end. Each round is two joins over that sliver.
-    var labels = edges.select(col("u").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id")).localCheckpoint()
-    // Convergence via the label sum: labels only ever decrease, so the
-    // sum strictly decreases until the (unique) fixpoint — one scalar
-    // action per round instead of a change-row join.
-    var prevSum = java.lang.Long.MIN_VALUE
+  private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    propagateLabels(
+      minhashLsh(spark, dir).select(col("a_id").as("u"), col("b_id").as("v")))._1
+
+  /** Min-label propagation over an undirected (u, v) edge list (either
+    * orientation; duplicates and self-loops are harmless) → (labels,
+    * rounds): one (doc_id, label) row per edge vertex with label =
+    * component minimum, plus the rounds taken (component diameter + 1,
+    * the last round confirming the fixpoint).
+    *
+    * Only vertices that appear in an edge can ever change label, so
+    * the state is the edge vertex set alone (∝ near-dup docs, a sliver
+    * of the corpus); every other doc is its own cluster and joins back
+    * in dedupClusters. The edge list is built by Catalyst, then held as
+    * a persisted, hash-partitioned RDD keyed by its target vertex. Each
+    * round is ONE Spark job: a co-partitioned (narrow) join of the
+    * labels against the edges sends every label to its neighbours, a
+    * `reduceByKey(min)` keeps the smallest, and a fold sums the new
+    * labels. Labels only ever decrease, so the sum strictly decreases
+    * until the (unique) fixpoint; an unchanged sum ends the loop, and
+    * an edge-free graph converges on an empty state (sum 0).
+    *
+    * Round state is localCheckpointed (see [[untilStable]]): lineage
+    * stays one round deep, but a lost executor fails the fit instead of
+    * recomputing it — a long-running cluster job would use a reliable
+    * `checkpoint()` for fault tolerance instead.
+    */
+  private[queries] def propagateLabels(pairs: DataFrame): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val input = longPairs(pairs)
+    val part =
+      new org.apache.spark.HashPartitioner(math.max(1, input.getNumPartitions))
+    // (v, u): u hears v's label; both orientations, keyed for the join
+    val edges = input
+      .flatMap { case (u, v) => Iterator((v, u), (u, v)) }
+      .partitionBy(part)
+      .persist()
+    try {
+      val labels0 = edges.keys.distinct().map(v => (v, v))
+      val (labels, rounds) =
+        untilStable(labels0, java.lang.Long.MIN_VALUE, "label propagation") {
+          l => edges.join(l).values.union(l).reduceByKey(part, math.min(_, _))
+        } {
+          _.values.fold(0L)(Math.addExact(_: Long, _: Long))
+        }
+      (labels.toDF("doc_id", "label"), rounds)
+    } finally edges.unpersist(blocking = false)
+  }
+
+  /** (u, v) as non-null longs, built by Catalyst. */
+  private def longPairs(e: DataFrame): RDD[(Long, Long)] =
+    e.select(col("u").cast("long"), col("v").cast("long")).na.drop()
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+
+  /** The exact-state fit loop shared by [[propagateLabels]] and
+    * [[starContract]]: apply `round` until `fingerprint` repeats,
+    * starting from `state0` whose fingerprint is `fp0`. Each round is
+    * ONE Spark job — the fingerprint fold materializes the
+    * localCheckpointed next state — with no DataFrame plan to analyse,
+    * optimize and compile. The superseded state is unpersisted once
+    * the next state's fingerprint is known, so only the returned
+    * (final) state's blocks survive; on failure nothing does.
+    *
+    * localCheckpoint (not persist) TRUNCATES lineage each round, or
+    * every round's lineage chains all previous rounds (GraphX's own
+    * checkpointing discipline). Its fault-tolerance cost: the blocks
+    * live only on the executors, so a lost executor fails the fit
+    * instead of recomputing it.
+    */
+  private def untilStable[F](state0: RDD[(Long, Long)], fp0: F, what: String)(
+      round: RDD[(Long, Long)] => RDD[(Long, Long)])(
+      fingerprint: RDD[(Long, Long)] => F): (RDD[(Long, Long)], Int) = {
+    val maxRounds = 50
+    var state = state0
+    var next: RDD[(Long, Long)] = null
+    var fp = fp0
     var rounds = 0
     var converged = false
-    val maxRounds = 50
-    while (!converged && rounds < maxRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("v"), col("label").as("vl")), "v")
-        .groupBy(col("u")).agg(min(col("vl")).as("nl"))
-      val next = labels
-        .join(nbrMin.select(col("u").as("doc_id"), col("nl")), Seq("doc_id"), "left")
-        .select(
-          col("doc_id"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-        .localCheckpoint()
-      val s = next.agg(sum(col("label"))).head().getLong(0)
-      converged = s == prevSum
-      prevSum = s
-      labels = next
-      rounds += 1
+    try {
+      while (!converged && rounds < maxRounds) {
+        next = round(state).localCheckpoint()
+        val nfp = fingerprint(next)
+        state.unpersist(blocking = false)
+        converged = nfp == fp
+        fp = nfp
+        state = next
+        next = null
+        rounds += 1
+      }
+    } finally if (!converged) {
+      state.unpersist(blocking = false)
+      if (next != null) next.unpersist(blocking = false)
     }
-    // rounds needed = component diameter; a component deeper than the
-    // cap means labels are NOT the fixpoint — fail loudly rather than
-    // ship wrong clusters (the oracle computes the true closure and
-    // would divergently "catch" it only where an oracle exists)
-    require(converged,
-      s"label propagation did not converge within $maxRounds rounds " +
-        "(a near-dup component has pathological diameter)")
-    labels
+    // a component deeper than the cap means labels are NOT the
+    // fixpoint — fail loudly rather than ship wrong clusters (the
+    // oracle computes the true closure and would divergently "catch"
+    // it only where an oracle exists)
+    require(converged, s"$what did not converge within $maxRounds rounds")
+    (state, rounds)
   }
 
   /** d10 — cross-document duplicated-n-gram coverage, the substring-level
@@ -1334,76 +1388,69 @@ object Dedup {
     * chain (100 TB corpora grow them — serial crawls of the same
     * evolving page) needs 10⁶ barriers. Star contraction halves
     * star-height per round pair, converging in O(log² n) rounds on
-    * ANY topology; each round is two hash-agg + equi-join passes over
-    * the current edge set, which only ever shrinks toward one edge
-    * per non-root vertex. Same lineage discipline as d9:
-    * localCheckpoint every round, convergence by comparing a
-    * (count, hash-sum) fingerprint — bounded control data, no
-    * driver-side edge list.
+    * ANY topology; the edge set only ever shrinks toward one edge per
+    * non-root vertex.
     *
-    * Edge set is kept canonical: (u, v) with u > v. large-star hangs
-    * every larger neighbor off the neighborhood minimum; small-star
-    * re-points each vertex's smaller neighbors (and itself) at that
-    * minimum. Fixpoint = a star per component rooted at its minimum.
+    * Edge set is kept canonical: (u, v) with u > v, as a distinct
+    * `RDD[(Long, Long)]` built from the Catalyst edge frame.
+    * large-star (a `groupByKey` over both orientations) hangs every
+    * larger neighbor off the neighborhood minimum; small-star (a
+    * `groupByKey` over the hi→lo rows, then `distinct`) re-points each
+    * vertex's smaller neighbors (and itself) at that minimum. Fixpoint
+    * = a star per component rooted at its minimum. Each round pair is
+    * ONE Spark job (see [[untilStable]]); convergence compares a
+    * (count, XOR of xxhash64(u, v)) fold of the edge set — bounded
+    * control data, no driver-side edge list.
+    *
+    * Round state is localCheckpointed: lineage stays one round deep,
+    * but a lost executor fails the fit instead of recomputing it.
     */
   def starContract(edgesIn: DataFrame): (DataFrame, Int) = {
-    def canonical(e: DataFrame): DataFrame =
-      e.filter(col("u") =!= col("v"))
-        .select(
-          greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-        .distinct()
-    def largeStar(canon: DataFrame): DataFrame = {
-      val sym = canon.unionByName(
-        canon.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy(col("u"))
-        .agg(least(min(col("v")), col("u")).as("m"))
-      // v > u ≥ m, so (v, m) is already hi→lo canonical
-      sym.join(m, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-    }
-    def smallStar(canon: DataFrame): DataFrame = {
-      // canon is hi→lo: u's smaller neighborhood is exactly its rows
-      val m = canon.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val j = canon.join(m, "u")
-      j.select(col("u"), col("m").as("v"))
-        .unionByName(
-          j.filter(col("v") =!= col("m"))
-            .select(col("v").as("u"), col("m").as("v")))
-        .distinct()
-    }
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      // XOR fold (not SUM — ANSI overflow) — order-independent and
-      // overflow-free like p15's digest
-      val r = e
-        .agg(
-          count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var canon = canonical(edgesIn).localCheckpoint()
-    var fp = fingerprint(canon)
-    var rounds = 0
-    var converged = canon.isEmpty
-    val maxRounds = 50
-    while (!converged && rounds < maxRounds) {
-      val next = smallStar(largeStar(canon)).localCheckpoint()
-      val nfp = fingerprint(next)
-      converged = nfp == fp
-      fp = nfp
-      canon = next
-      rounds += 1
-    }
-    require(converged,
-      s"star contraction did not converge within $maxRounds rounds")
-    val labels = canon.select(col("u").as("doc_id"), col("v").as("label"))
-      .unionByName(
-        canon.select(col("v").as("doc_id"), col("v").as("label")))
+    val spark = edgesIn.sparkSession
+    import spark.implicits._
+    val canon0 = longPairs(edgesIn)
+      .flatMap { case (u, v) =>
+        if (u == v) Iterator.empty else Iterator((math.max(u, v), math.min(u, v)))
+      }
       .distinct()
-    (labels, rounds)
+      .localCheckpoint()
+    val fp0 = edgeFingerprint(canon0)
+    val (canon, rounds) =
+      if (fp0._1 == 0L) (canon0, 0)
+      else untilStable(canon0, fp0, "star contraction")(
+        c => smallStar(largeStar(c)))(edgeFingerprint)
+    val labels = canon.flatMap { case (u, v) => Iterator((u, v), (v, v)) }
+      .distinct()
+    (labels.toDF("doc_id", "label"), rounds)
+  }
+
+  private def largeStar(canon: RDD[(Long, Long)]): RDD[(Long, Long)] =
+    canon.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
+      .groupByKey()
+      .flatMap { case (u, ns) =>
+        val m = math.min(ns.min, u)
+        // v > u ≥ m, so (v, m) is already hi→lo canonical; duplicates
+        // are left to small-star's distinct
+        ns.iterator.filter(_ > u).map(v => (v, m))
+      }
+
+  private def smallStar(canon: RDD[(Long, Long)]): RDD[(Long, Long)] =
+    // canon is hi→lo: u's smaller neighborhood is exactly its rows
+    canon.groupByKey()
+      .flatMap { case (u, vs) =>
+        val m = vs.min
+        Iterator((u, m)) ++ vs.iterator.filter(_ != m).map(v => (v, m))
+      }
+      .distinct()
+
+  /** (count, XOR fold of xxhash64(u, v)) — order-independent and
+    * overflow-free like p15's digest; the hash is Spark's `xxhash64`.
+    */
+  private def edgeFingerprint(e: RDD[(Long, Long)]): (Long, Long) = {
+    def h(u: Long, v: Long) = XXH64.hashLong(v, XXH64.hashLong(u, 42L))
+    e.aggregate((0L, 0L))(
+      { case ((n, x), (u, v)) => (n + 1, x ^ h(u, v)) },
+      { case ((n1, x1), (n2, x2)) => (n1 + n2, x1 ^ x2) })
   }
 
   /** d18 — d9's cluster assignment recomputed by star contraction

@@ -112,9 +112,11 @@ object SessionCache {
     * shared intermediates (the round-2 rationale: whichever query
     * touches a cold shared cache first absorbs a build that belongs to
     * no one query). A frame consumed by ONE query must stay inside
-    * that query as a lazy localCheckpoint (computed once per
-    * execution, still timed) — r17's "s1TopkPairs" warm entry hid
-    * s18's ground-truth build this way and was reverted in r18.
+    * that query as a `localCheckpoint(eager = false)` (computed once
+    * per execution, still timed — under AQE its shuffle stages run
+    * while the query's DataFrame is built, so they count in its build
+    * time) — r17's "s1TopkPairs" warm entry hid s18's ground-truth
+    * build this way and was reverted in r18.
     */
   def warmEntries(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
     TextOps.warmFrames(spark, dir) ++

@@ -1968,8 +1968,10 @@ object Similarity {
   def retrievalEval(spark: SparkSession, dir: String): DataFrame = {
     // r18 opt (guide §5 recompute↔storage, §3.3 plan-size note): the
     // exact ground truth AND each variant pipeline are materialized
-    // once per eval execution via lazy localCheckpoint — the q6
-    // discipline. Before, ONE union plan embedded all nine variant
+    // once per eval execution via localCheckpoint(eager = false) — the
+    // q6 discipline; under AQE each one runs its shuffle stages while
+    // the eval's DataFrame is being built (see Dedup.dedupEval).
+    // Before, ONE union plan embedded all nine variant
     // pipelines plus the exact set's cache scan (3 702 formatted plan
     // lines) and the driver spent ~0.8 s/invocation in pure ANALYSIS
     // (PhaseBench build phase); with per-component checkpoints the

@@ -1005,58 +1005,111 @@ object TextOps {
     *
     * Scale shape — the fastBPE/HuggingFace-trainer shape: learning
     * runs on the DISTINCT-WORD frequency table, never the corpus. One
-    * corpus-sized hash agg builds (word, n_word) — vocabulary-sized by
-    * Heaps' law (t18 measures it: ~10⁶–10⁷ rows at 100 TB vs 10¹¹
-    * corpus words) — and every round after that is one hash agg + a
-    * global top-1 over PAIR-sized data, with the merge state itself
-    * [[MergeRounds]] rows of driver control data (the s5 k-means /
-    * s14 bounded-control-data discipline). The per-round driver loop
-    * is inherent to BPE (merge i+1's counts depend on merge i's
-    * rewrite — famously sequential); what stays distributed is
-    * everything data-sized. Pair explode = bounded fan-out (symbols−1
-    * per word); rewrite = one codegen'd `replace` projection.
+    * corpus-sized hash agg builds (seg, n_word) in Catalyst —
+    * vocabulary-sized by Heaps' law (t18 measures it: ~10⁶–10⁷ rows at
+    * 100 TB vs 10¹¹ corpus words) — and the loop runs on that table as
+    * a persisted RDD: each round is ONE Spark job (a flatMap of
+    * adjacent pairs, a `reduceByKey`, a global `takeOrdered(1)`) with
+    * no per-round DataFrame plan to analyse, optimize and compile, and
+    * the merge state itself is [[MergeRounds]] rows of driver control
+    * data (the s5 k-means / s14 bounded-control-data discipline). The
+    * per-round driver loop is inherent to BPE (merge i+1's counts
+    * depend on merge i's rewrite — famously sequential); what stays
+    * distributed is everything data-sized. Pair explode = bounded
+    * fan-out (symbols−1 per word); rewrite = one `String.replace` map.
+    *
+    * Same answer as the SQL formulation, character for character: the
+    * segmentation is encoded in Catalyst by the same `regexp_replace`
+    * (Java's `.` skips U+0085/U+2028/U+2029, which stay glued inside
+    * a neighbouring symbol); [[bpeSymbols]] is
+    * `split(ltrim(rtrim(seg, ␟), ␟), "␟␟")`; `String.replace` is
+    * Spark's left-to-right non-overlapping `replace`; ties break in
+    * Spark's string order ([[BpePairOrder]]); counts sum with
+    * `Math.addExact`, so an overflow fails as ANSI `sum` does.
+    *
+    * Round state: each round's rewritten segmentation is persisted and
+    * the one it was computed from is unpersisted once the next round's
+    * job has read it; the vocabulary is unpersisted when the fit ends.
+    * persist, not localCheckpoint: lineage grows by one narrow map per
+    * round (≤ [[MergeRounds]]), so a lost executor's blocks are
+    * recomputed from the vocabulary instead of failing the fit.
     */
-  def bpeMerges(spark: SparkSession, dir: String): DataFrame = {
+  def bpeMerges(spark: SparkSession, dir: String): DataFrame =
+    mergeTable(spark, learnMerges(spark, dir))
+
+  /** t21's fit loop (see [[bpeMerges]]): the merge table as driver
+    * control data.
+    */
+  private def learnMerges(
+      spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
     val S = BpeSep
     val vocab = cachedWords(spark, dir)
       .groupBy(col("word")).agg(count(lit(1)).as("n_word"))
-      .withColumn("seg", regexp_replace(col("word"), "(.)", s"$S$$1$S"))
+      .select(regexp_replace(col("word"), "(.)", s"$S$$1$S"), col("n_word"))
+      .rdd.map(r => (r.getString(0), r.getLong(1)))
       .persist()
+    var seg = vocab  // the segmentation the next round reads
+    var read = vocab // the one `seg` is computed from
     try {
-      var seg = vocab
-      val merges = Seq.newBuilder[(Long, String, String, Long)]
-      for (step <- 1L to MergeRounds.toLong) {
-        val syms = split(ltrim(rtrim(col("seg"), S), S), s"$S$S")
+      (1L to MergeRounds.toLong).map { step =>
         val best = seg
-          .select(col("n_word"), syms.as("sym"))
-          .filter(size(col("sym")) >= 2)
-          .select(
-            col("n_word"), col("sym"),
-            explode(sequence(lit(1), size(col("sym")) - 1)).as("i"))
-          .select(
-            col("n_word"),
-            element_at(col("sym"), col("i")).as("a"),
-            element_at(col("sym"), col("i") + 1).as("b"))
-          .groupBy(col("a"), col("b"))
-          .agg(sum(col("n_word")).as("n"))
-          .orderBy(col("n").desc, col("a"), col("b"))
-          .limit(1)
-          .collect()
+          .flatMap { case (s, n) =>
+            val sym = bpeSymbols(s)
+            Iterator.range(1, sym.length).map(i => ((sym(i - 1), sym(i)), n))
+          }
+          .reduceByKey(Math.addExact(_: Long, _: Long))
+          .takeOrdered(1)(BpePairOrder)
+        if (read ne vocab) read.unpersist(blocking = false)
         assert(best.nonEmpty,
           s"BPE round $step found no adjacent pairs — MergeRounds " +
             s"($MergeRounds) exceeds this corpus's merge capacity")
-        val (a, b, n) = (best(0).getString(0), best(0).getString(1),
-          best(0).getLong(2))
-        merges += ((step, a, b, n))
-        seg = seg.withColumn(
-          "seg",
-          replace(col("seg"), lit(s"$S$a$S$S$b$S"), lit(s"$S$a$b$S")))
+        val ((a, b), n) = best(0)
+        val (from, to) = (s"$S$a$S$S$b$S", s"$S$a$b$S")
+        read = seg
+        seg = seg.map { case (s, w) => (s.replace(from, to), w) }.persist()
+        (step, a, b, n)
       }
-      import spark.implicits._
-      merges.result()
-        .toDF("step", "merge_left", "merge_right", "n_pair")
-        .orderBy(col("step"))
-    } finally vocab.unpersist()
+    } finally Seq(vocab, read, seg).foreach(_.unpersist(blocking = false))
+  }
+
+  private def mergeTable(
+      spark: SparkSession, merges: Seq[(Long, String, String, Long)]): DataFrame = {
+    import spark.implicits._
+    merges.toDF("step", "merge_left", "merge_right", "n_pair")
+      .orderBy(col("step"))
+  }
+
+  private val BpeSymbolSplit = java.util.regex.Pattern.compile(BpeSep * 2)
+
+  /** A word's symbols from its ␟-encoded segmentation:
+    * `split(ltrim(rtrim(seg, ␟), ␟), "␟␟")` — Spark's `split` is Java's
+    * `String.split(regex, -1)`, and U+001F is not a regex metacharacter.
+    */
+  private[queries] def bpeSymbols(seg: String): Array[String] = {
+    val sep = BpeSep.charAt(0)
+    var i = 0
+    var j = seg.length
+    while (i < j && seg.charAt(i) == sep) i += 1
+    while (j > i && seg.charAt(j - 1) == sep) j -= 1
+    BpeSymbolSplit.split(seg.substring(i, j), -1)
+  }
+
+  /** t21's round argmax order: count descending, then (left, right) in
+    * Spark's string order — `UTF8String.binaryCompare`, i.e. code-point
+    * order. `String.compareTo` is UTF-16 order, which differs from it
+    * for characters above U+FFFF.
+    */
+  private[queries] object BpePairOrder extends Ordering[((String, String), Long)] {
+    private def utf8(s: String) =
+      org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    def compare(x: ((String, String), Long), y: ((String, String), Long)): Int = {
+      val byCount = java.lang.Long.compare(y._2, x._2)
+      if (byCount != 0) byCount
+      else {
+        val left = utf8(x._1._1).binaryCompare(utf8(y._1._1))
+        if (left != 0) left else utf8(x._1._2).binaryCompare(utf8(y._1._2))
+      }
+    }
   }
 
   /** t21's learned merge table memoized as session control data
@@ -1067,22 +1120,14 @@ object TextOps {
     */
   private def cachedMerges(
       spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
-    SessionCache.memo(spark, dir, "bpeMerges") {
-      bpeMerges(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq
-    }
+    SessionCache.memo(spark, dir, "bpeMerges")(learnMerges(spark, dir))
 
   /** Registered t21 entry: rebuilds the merge table frame from the
     * memoized control data (first call in a session learns, every
     * later call — t25, bench reps — is free).
     */
-  def bpeMergesQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    cachedMerges(spark, dir)
-      .toDF("step", "merge_left", "merge_right", "n_pair")
-      .orderBy(col("step"))
-  }
+  def bpeMergesQ(spark: SparkSession, dir: String): DataFrame =
+    mergeTable(spark, cachedMerges(spark, dir))
 
   /** Token ids at or above this offset are MERGE tokens
     * (id = offset + merge step); base-character tokens get dense ids
