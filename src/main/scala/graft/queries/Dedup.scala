@@ -742,7 +742,9 @@ object Dedup {
     * `reduceByKey(min)` keeps the smallest, and a fold sums the new
     * labels. Labels only ever decrease, so the sum strictly decreases
     * until the (unique) fixpoint; an unchanged sum ends the loop, and
-    * an edge-free graph converges on an empty state (sum 0).
+    * an edge-free graph converges on an empty state (sum 0). The join
+    * buffers one vertex's neighbours per key, so the largest vertex
+    * degree must fit in executor memory.
     *
     * Round state is localCheckpointed (see [[untilStable]]): lineage
     * stays one round deep, but a lost executor fails the fit instead of
@@ -1400,7 +1402,9 @@ object Dedup {
     * = a star per component rooted at its minimum. Each round pair is
     * ONE Spark job (see [[untilStable]]); convergence compares a
     * (count, XOR of xxhash64(u, v)) fold of the edge set — bounded
-    * control data, no driver-side edge list.
+    * control data, no driver-side edge list. Both `groupByKey`s hold
+    * one vertex's whole neighborhood in memory, so the largest vertex
+    * degree (a template-spam hub) must fit in executor memory.
     *
     * Round state is localCheckpointed: lineage stays one round deep,
     * but a lost executor fails the fit instead of recomputing it.

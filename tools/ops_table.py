@@ -8,11 +8,10 @@ DataFrame), plan_s, exec_s, jobs and driver_only_s, slowest build
 first. `jobs` and `driver_only_s` are only recorded by traced runs
 (--trace 1); untraced records show them as "-".
 
-Usage: ops_table.py [--pass N | --all-passes] RECORD [RECORD ...]
+Usage: ops_table.py RECORD [RECORD ...]
 
-By default only the cold pass (pass 0) is read: warm passes reuse the
-session caches and fitted models, so mixing them in hides the cold
-cost.
+Only the cold pass (pass 0) is read: warm passes reuse the session
+caches and fitted models, so mixing them in would hide the cold cost.
 """
 import argparse
 import json
@@ -22,17 +21,16 @@ import sys
 FIELDS = ["build_s", "plan_s", "exec_s", "jobs", "driver_only_s"]
 
 
-def ops_of(path, pass_no):
+def ops_of(path):
     with open(path) as f:
         rec = json.load(f)
-    return [op for op in rec.get("ops", [])
-            if pass_no is None or op.get("pass") == pass_no]
+    return [op for op in rec.get("ops", []) if op.get("pass") == 0]
 
 
-def table(paths, pass_no):
+def table(paths):
     samples = {}
     for path in paths:
-        for op in ops_of(path, pass_no):
+        for op in ops_of(path):
             per_field = samples.setdefault(op["query"], {f: [] for f in FIELDS})
             for f in FIELDS:
                 if op.get(f) is not None:
@@ -55,12 +53,8 @@ def fmt(v, field):
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("records", nargs="+")
-    which = ap.add_mutually_exclusive_group()
-    which.add_argument("--pass", dest="pass_no", type=int, default=0,
-                       help="read only this pass (default 0, the cold pass)")
-    which.add_argument("--all-passes", action="store_true")
     args = ap.parse_args(argv)
-    rows = table(args.records, None if args.all_passes else args.pass_no)
+    rows = table(args.records)
     if not rows:
         print("no ops in the given records", file=sys.stderr)
         return 1
