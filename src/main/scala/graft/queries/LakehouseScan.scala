@@ -433,8 +433,9 @@ object LakehouseScan {
     scd2Dim(spark, dir)
   }
 
-  /** x22 — Delta scan through the log replay + deletion-vector
-    * anti-join, filtered and ordered. Oracle: the original customer
+  /** x22 — Delta scan through `DeltaLog.read` (the `graft-delta`
+    * scan: log replay, deletion vectors applied per file on the
+    * executors), filtered and ordered. Oracle: the original customer
     * parquet minus the DV-deleted keys.
     */
   def deltaScan(spark: SparkSession, dir: String): DataFrame =
@@ -570,8 +571,8 @@ object LakehouseScan {
     * `graft.delta.`path`` and the whole query — projection, WHERE,
     * ORDER BY — runs as SQL text over the DSv2 table (planner
     * pushdown included). Held to x22's oracle SQL verbatim: three
-    * read paths (bespoke, DataFrame-DSv2, SQL), one byte-identical
-    * result.
+    * surfaces (`DeltaLog.read`, `spark.read.format`, SQL) over one
+    * scan, one byte-identical result.
     */
   def sqlCatalogScan(spark: SparkSession, dir: String): DataFrame = {
     val t = deltaCustomer(spark, dir)
@@ -762,8 +763,9 @@ object LakehouseScan {
     * (`spark.read.format("graft-delta")`, r16): the same DV-deleted
     * customer table read the way a PLAIN Spark user reads it, filter
     * and projection planner-pushed (file skipping asserted in
-    * Dsv2ReadSpec). Held to x22's oracle SQL VERBATIM — the two read
-    * paths must converge on the byte-identical result.
+    * Dsv2ReadSpec). Held to x22's oracle SQL VERBATIM — the format
+    * reader and the `DeltaLog.read` wrapper must give the
+    * byte-identical result.
     */
   def deltaDsv2Scan(spark: SparkSession, dir: String): DataFrame =
     spark.read.format("graft-delta").load(deltaCustomer(spark, dir))

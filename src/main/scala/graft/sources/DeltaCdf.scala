@@ -80,10 +80,6 @@ object DeltaCdf {
       org.apache.spark.sql.types.StructField("_commit_version",
         org.apache.spark.sql.types.LongType)))
 
-    val canon = (c: org.apache.spark.sql.Column) =>
-      regexp_replace(
-        url_decode(regexp_replace(c, "^file:/*", "/")), "/+", "/")
-
     /** Rows of `files` (absolute path, partition values), restricted
       * by `positions` (Some(keep=true) = only those positions,
       * Some(keep=false) = all BUT those positions, None = all rows),
@@ -97,7 +93,7 @@ object DeltaCdf {
       import spark.implicits._
       val base = spark.read.schema(dataSchema)
         .parquet(files.map(_._1): _*)
-        .withColumn("__f", canon(col("_metadata.file_path")))
+        .withColumn("__f", DeltaLog.canonPath(col("_metadata.file_path")))
         .withColumn("__i", col("_metadata.row_index"))
       val posPairs: Seq[(String, Long)] = positions.toSeq
         .flatMap { case (f, idxs) => idxs.map(f -> _) }
@@ -157,7 +153,7 @@ object DeltaCdf {
           org.apache.spark.sql.types.StructField("_change_type", StringType))
         val base = spark.read.schema(cdcSchema)
           .parquet(files.map(_._1): _*)
-          .withColumn("__f", canon(col("_metadata.file_path")))
+          .withColumn("__f", DeltaLog.canonPath(col("_metadata.file_path")))
         val withPv =
           if (stTo.partitionCols.isEmpty) base
           else {

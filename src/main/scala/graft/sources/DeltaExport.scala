@@ -1162,7 +1162,7 @@ object DeltaExport {
     * the data out via the existing multi-dimensional rewrite
     * ([[zorder]] — delta-spark's OPTIMIZE on a clustered table
     * performs the same locality rewrite). The feature is WRITER-only:
-    * every reader (bespoke and DSv2) already reads clustered tables —
+    * the reader already reads clustered tables —
     * DeltaClusteredSpec pins a foreign fixture.
     */
   def clusterBy(
@@ -1493,14 +1493,14 @@ object DeltaExport {
     * skipping keeps working). The matched (file, index) set is
     * driver-held — bounded by rows DELETED in this call, the
     * metadata-not-data discipline every DV writer shares. Returns the
-    * committed version, or None when nothing matched. Single
+    * committed version, or None when no live row matched. Single
     * delete-writer contract per table (concurrent deleteWhere calls
     * would need Delta's full conflict checker).
     */
   def deleteWhere(
       spark: org.apache.spark.sql.SparkSession, table: String,
       condition: org.apache.spark.sql.Column): Option[Long] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.DataType
     val st = DeltaLog.stateAt(spark, table, None)
     require(st.configuration
@@ -1510,28 +1510,10 @@ object DeltaExport {
     val dataSchema = StructType(
       schema.fields.filterNot(f => st.partitionCols.contains(f.name)))
     if (st.active.isEmpty) return None
-    val filesAbs = st.active.values.toSeq.map(a =>
-      DeltaLog.absPath(table, a.path))
-    val canonF = org.apache.spark.sql.functions.regexp_replace(
-      org.apache.spark.sql.functions.url_decode(
-        org.apache.spark.sql.functions.regexp_replace(
-          col("_metadata.file_path"), "^file:/*", "/")), "/+", "/")
-    val base = spark.read.schema(dataSchema).parquet(filesAbs: _*)
-      .select(col("*"), canonF.as("__f"),
-        col("_metadata.row_index").as("__i"))
-    val withPv =
-      if (st.partitionCols.isEmpty) base
-      else {
-        val pvFrame = DeltaLog.activeFiles(spark, table)
-          .withColumnRenamed("file", "__pv_file")
-        val joined = base.join(
-          broadcast(pvFrame), col("__f") === col("__pv_file"))
-        st.partitionCols.foldLeft(joined.drop("__pv_file")) { (d, c) =>
-          d.withColumn(c, col(c).cast(schema(c).dataType))
-        }
-      }
-    // the matched set: bounded by rows deleted in THIS call
-    val matched = withPv.filter(condition)
+    // the matched set: bounded by rows deleted in THIS call (rows a
+    // vector already deletes do not match again)
+    val matched = DeltaLog.positionedScan(spark, table, st, dataSchema)
+      .filter(condition)
       .select(col("__f"), col("__i")).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     if (matched.isEmpty) return None
@@ -1685,46 +1667,16 @@ object DeltaExport {
       }
     if (rewrites.isEmpty) return (before, before)
     val newRels = rewrites.flatMap { case (pv, rels, nOut) =>
-      val abs = rels.map(DeltaLog.absPath(table, _))
-      // deleted (file, index) pairs of the victims — bounded by rows
-      // DELETED, the DV discipline; anti-joined away during rewrite
-      val dvPairs: Seq[(String, Long)] = rels.flatMap { rel =>
-        byPath.get(rel).toSeq.flatMap(_.dv.toSeq.flatMap(d =>
-          DeltaDv.indexesOf(table, d)
-            .map(i => (DeltaLog.absPath(table, rel), i))))
-      }
-      // ROW-TRACKING rewrites read each victim row WITH its id and
-      // commit version (materialized-or-computed) and write them out
-      // as the config-named MATERIALIZED columns — the protocol's
+      // the victims' live rows: deletion-vector positions anti-joined
+      // away (bounded by rows DELETED). ROW-TRACKING rewrites read
+      // each victim row WITH its id and commit version
+      // (materialized-or-computed) and write them out as the
+      // config-named MATERIALIZED columns — the protocol's
       // id-preserving OPTIMIZE, mirroring the Iceberg v3 path
-      val scanned =
-        if (!rowTracking) spark.read.schema(dataSchema).parquet(abs: _*)
-        else DeltaRowTracking.scanForRewrite(spark, table, st,
-          rels.flatMap(byPath.get), dataSchema)
-      val purged = {
-        import org.apache.spark.sql.functions.{broadcast, col, regexp_replace, url_decode}
-        import spark.implicits._
-        if (dvPairs.isEmpty) {
-          if (rowTracking) scanned.drop("__f", "__i") else scanned
-        } else if (rowTracking) {
-          scanned
-            .join(broadcast(dvPairs.toDF("__df", "__di")),
-              col("__f") === col("__df") && col("__i") === col("__di"),
-              "left_anti")
-            .drop("__f", "__i")
-        } else {
-          val canon = regexp_replace(
-            url_decode(regexp_replace(
-              col("_metadata.file_path"), "^file:/*", "/")), "/+", "/")
-          scanned
-            .withColumn("__cf", canon)
-            .withColumn("__ci", col("_metadata.row_index"))
-            .join(broadcast(dvPairs.toDF("__df", "__di")),
-              col("__cf") === col("__df") && col("__ci") === col("__di"),
-              "left_anti")
-            .drop("__cf", "__ci")
-        }
-      }
+      val purged = DeltaLog.livePositions(spark, table,
+        rels.flatMap(byPath.get), dataSchema,
+        if (rowTracking) Some(DeltaRowTracking.matColNames(st)) else None)
+        .drop("__f", "__i")
       val df = purged.coalesce(nOut)
       VariantWrite.applyPosture(df.sparkSession)
       val stage = Files.createTempDirectory("delta_compact")
@@ -2204,7 +2156,8 @@ object DeltaExport {
 
   private def ckptAddRow(a: DeltaLog.AddFile): org.apache.spark.sql.Row =
     org.apache.spark.sql.Row(
-      a.path, a.partitionValues, 0L, true, a.stats.orNull,
+      a.path, a.partitionValues, a.size.map(Long.box).orNull, true,
+      a.stats.orNull,
       a.dv.map(d => org.apache.spark.sql.Row(d.storageType,
         d.pathOrInlineDv, d.offset, d.sizeInBytes, d.cardinality)).orNull,
       a.baseRowId.map(Long.box).orNull,

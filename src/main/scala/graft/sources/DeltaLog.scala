@@ -5,9 +5,13 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.KnownFiles
+import org.apache.spark.sql.sources.{And, GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
+
+import graft.sources.dsv2.{DeltaDsv2, FilterPrune}
 
 /** Read-only Delta Lake table reader built from the OPEN Delta
   * transaction-log protocol (delta-io PROTOCOL.md: a `_delta_log/`
@@ -39,12 +43,11 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
   *
   * Scale shape: the log replay is metadata work — the same
   * driver-side snapshot state delta-spark itself keeps — bounded by
-  * files-in-table, not rows; the DATA read is one
-  * `spark.read.parquet` over the active file set (distributed scan,
-  * schema pushed down), and partition values attach via ONE broadcast
-  * equi-join on the canonical file path (metadata-sized build side),
-  * never a per-partition union whose plan would grow with partition
-  * count.
+  * files-in-table, not rows. The DATA read is the `graft-delta`
+  * DataSourceV2 scan ([[graft.sources.dsv2.DeltaTableProvider]]): one
+  * input partition per file slice, partition values and deletion
+  * vectors shipped with each slice and applied on the executors.
+  * Writers that need row positions scan through [[positionedScan]].
   */
 object DeltaLog {
 
@@ -69,8 +72,8 @@ object DeltaLog {
       // row-id columns, so readers never footer-probe self-written
       // files (foreign tables, lacking the tag, still probe)
       tags: Map[String, String] = Map.empty,
-      // add.size (bytes) — the DSv2 planner sizes its PartitionedFile
-      // slices from the log instead of a per-file filesystem stat
+      // add.size (bytes) — the DSv2 scan's size estimate for the join
+      // planner (its slices are cut from the size on disk)
       size: Option[Long] = None)
   private[sources] case class State(
       schemaJson: Option[String],
@@ -498,24 +501,31 @@ object DeltaLog {
     case other => other
   }
 
-  /** `file:`-scheme- and URL-decoding-insensitive canonical path, so
-    * `input_file_name()`'s URI spelling joins against the log's
-    * (URL-encoded, usually relative) `add.path`.
-    */
-  private def canon(abs: String): String =
-    java.net.URLDecoder
-      .decode(abs.replaceFirst("^file:/*", "/"), "UTF-8")
-      .replaceAll("/+", "/")
-
-  /** Absolute data-file path for an add entry (add.path may be
-    * URL-encoded and relative to the table root, or absolute).
+  /** Absolute on-disk path of an add entry's data file. `add.path`
+    * is URL-encoded and relative to the table root, or absolute;
+    * decoding it ONCE gives the name on disk — a Hive-escaped
+    * partition directory such as `ts=2024-01-01 09%3A00%3A00` is
+    * logged as `ts=2024-01-01%2009%253A00%253A00` and keeps its
+    * `%3A`.
     */
   private[sources] def absPath(table: String, rel: String): String = {
     val decoded = java.net.URLDecoder.decode(rel, "UTF-8")
-    if (decoded.startsWith("/") || decoded.contains("://"))
-      canon(decoded)
-    else canon(Paths.get(table).toAbsolutePath.toString + "/" + decoded)
+    val abs =
+      if (decoded.startsWith("/") || decoded.contains("://")) decoded
+      else Paths.get(table).toAbsolutePath.toString + "/" + decoded
+    abs.replaceFirst("^file:/*", "/").replaceAll("/+", "/")
   }
+
+  /** A scanned row's file in [[absPath]]'s spelling, as a codegen
+    * column expression (no Scala UDF): `_metadata.file_path` and
+    * `input_file_name()` give the file's URI, so strip the `file:`
+    * scheme, URL-decode once and squeeze slashes. Positions and
+    * per-file metadata join on it in the Delta writers, the change
+    * feeds and the Iceberg readers.
+    */
+  private[sources] def canonPath(c: Column): Column =
+    regexp_replace(
+      url_decode(regexp_replace(c, "^file:/*", "/")), "/+", "/")
 
   /** The active-file frame of the snapshot: (file, one column per
     * partition key as STRING). Exposed for audits; `read` is the
@@ -524,21 +534,26 @@ object DeltaLog {
   def activeFiles(
       spark: SparkSession, table: String,
       versionAsOf: Option[Long] = None): DataFrame = {
-    import spark.implicits._
     val st = stateAt(spark, table, versionAsOf)
-    // name-mapped tables key add.partitionValues by PHYSICAL name;
-    // the emitted columns stay logical (physName = the logical name
-    // on unmapped tables, so this is one code path)
-    val physKey: Map[String, String] = st.schemaJson.map { js =>
-      val schema = DataType.fromJson(js).asInstanceOf[StructType]
-      st.partitionCols.map(c =>
-        c -> schema.fields.find(_.name == c).map(physName).getOrElse(c)).toMap
-    }.getOrElse(Map.empty)
-    val rows = st.active.values.toSeq
+    filesFrame(spark, table, st, st.active.values.toSeq)
+  }
+
+  /** (file, one STRING column per partition key) of `files`.
+    * Name-mapped tables key add.partitionValues by PHYSICAL name; the
+    * emitted columns stay logical (physName = the logical name on
+    * unmapped tables, so this is one code path).
+    */
+  private def filesFrame(
+      spark: SparkSession, table: String, st: State,
+      files: Seq[AddFile]): DataFrame = {
+    import spark.implicits._
+    val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
+    val physKeys = st.partitionCols.map(c =>
+      schema.fields.find(_.name == c).map(physName).getOrElse(c))
+    files
       .map(a => (absPath(table, a.path),
-        st.partitionCols.map(c =>
-          a.partitionValues.getOrElse(physKey.getOrElse(c, c), null))))
-    rows.map { case (f, pv) => (f, pv) }.toDF("file", "pv")
+        physKeys.map(a.partitionValues.getOrElse(_, null))))
+      .toDF("file", "pv")
       .select(
         col("file") +:
           st.partitionCols.zipWithIndex.map { case (c, i) =>
@@ -546,219 +561,117 @@ object DeltaLog {
           }: _*)
   }
 
-  /** Read the table at `versionAsOf` (or latest). Columns appear in
-    * table-schema order; partition columns are reconstructed from the
-    * log and cast to their declared types.
+  /** Read the table at `versionAsOf` (or latest) through the
+    * `graft-delta` DataSourceV2 scan: columns in table-schema order,
+    * partition values from the log at their declared types, deletion
+    * vectors resolved per file on the executors, and filters on the
+    * result pushed down to file skipping.
     */
   def read(
       spark: SparkSession, table: String,
-      versionAsOf: Option[Long] = None): DataFrame =
-    readCore(spark, table, versionAsOf, _ => true)
-
-  /** One add.stats JSON value ordered against a predicate bound in the
-    * value domain: numbers numerically, booleans false < true, strings
-    * and ISO dates lexicographically (ISO dates ARE lexicographic).
-    * TEMPORAL bounds (Timestamp/Instant/Date/LocalDateTime) are parsed
-    * into the time domain on BOTH sides — foreign delta-spark tables
-    * write timestamp stats in ISO 'T' form while
-    * `java.sql.Timestamp.toString` uses a space, and since 'T' > ' ' a
-    * lexicographic comparison inverts same-day bounds and prunes files
-    * that match. If the stat text does not parse temporally the file
-    * is KEPT (skipping is an optimization, never a correctness call).
-    */
-  private def toInstant(s: String): Option[java.time.Instant] = {
-    import java.time._
-    val t = s.trim
-    def tryP(f: => Instant): Option[Instant] =
-      try Some(f) catch { case _: Exception => None }
-    tryP(Instant.parse(t))
-      .orElse(tryP(OffsetDateTime.parse(t).toInstant))
-      .orElse(tryP(LocalDateTime.parse(t.replace(' ', 'T'))
-        .toInstant(ZoneOffset.UTC)))
-      .orElse(tryP(LocalDate.parse(t).atStartOfDay.toInstant(ZoneOffset.UTC)))
-  }
-  private def boundInstant(b: Any): Option[java.time.Instant] = b match {
-    case t: java.sql.Timestamp => Some(t.toInstant)
-    // Date via its ISO string (not getTime, which is JVM-TZ-local) so
-    // both sides land in the same UTC frame
-    case d: java.sql.Date => toInstant(d.toString)
-    case i: java.time.Instant => Some(i)
-    case d: java.time.LocalDate =>
-      Some(d.atStartOfDay.toInstant(java.time.ZoneOffset.UTC))
-    case d: java.time.LocalDateTime =>
-      Some(d.toInstant(java.time.ZoneOffset.UTC))
-    case _ => None
-  }
-  private def statLeq(a: JsonNode, b: Any): Boolean = (a, b) match {
-    case (n, x: java.lang.Number) if n.isNumber =>
-      BigDecimal(n.asText()) <= BigDecimal(x.toString)
-    case (n, x) if n.isTextual => boundInstant(x) match {
-      case Some(bi) => toInstant(n.asText()).forall(!_.isAfter(bi))
-      case None => n.asText() <= x.toString
-    }
-    case (n, x: Boolean) if n.isBoolean => !n.asBoolean() || x
-    case _ => true // incomparable → cannot prune on it
-  }
-  private def statGeq(a: JsonNode, b: Any): Boolean = (a, b) match {
-    case (n, x: java.lang.Number) if n.isNumber =>
-      BigDecimal(n.asText()) >= BigDecimal(x.toString)
-    case (n, x) if n.isTextual => boundInstant(x) match {
-      case Some(bi) => toInstant(n.asText()).forall(!_.isBefore(bi))
-      case None => n.asText() >= x.toString
-    }
-    case (n, x: Boolean) if n.isBoolean => n.asBoolean() || !x
-    case _ => true
+      versionAsOf: Option[Long] = None): DataFrame = {
+    val reader = spark.read.format("graft-delta")
+    versionAsOf.fold(reader)(v => reader.option("versionAsOf", v))
+      .load(table)
   }
 
-  /** The active files that COULD hold a row with `column` ∈ [lo, hi],
-    * by their add.stats min/max — (kept, total). Files without stats
-    * for the column are kept (skipping is an optimization, never a
-    * correctness decision); a file whose column is entirely null is
-    * dropped (a range predicate never matches null). Driver-side
-    * metadata work bounded by files-in-table.
+  /** The active files that COULD hold a row with `column` ∈ [lo, hi]
+    * — (kept, total) — by the same per-file admission the
+    * `graft-delta` scan prunes with: add.stats min/max/nullCount and
+    * exact partition values. Files without stats for the column are
+    * kept (skipping is an optimization, never a correctness
+    * decision); a file whose column is entirely null is dropped (a
+    * range predicate never matches null). Driver-side metadata work
+    * bounded by files-in-table.
     */
   def prunedFiles(
       spark: SparkSession, table: String, column: String,
       lo: Any, hi: Any,
       versionAsOf: Option[Long] = None): (Seq[String], Int) = {
     val st = stateAt(spark, table, versionAsOf)
-    // column-mapped tables key add.stats by PHYSICAL name — the
-    // logical-name lookup would silently degrade to keep-all
-    val statKey = st.schemaJson.flatMap { js =>
-      DataType.fromJson(js).asInstanceOf[StructType]
-        .fields.find(_.name == column).map(physName)
-    }.getOrElse(column)
-    val kept = st.active.values.toSeq.filter { a =>
-      a.stats.forall { js =>
-        try {
-          val s = mapper.readTree(js)
-          val mn = Option(s.get("minValues")).flatMap(m => Option(m.get(statKey)))
-          val mx = Option(s.get("maxValues")).flatMap(m => Option(m.get(statKey)))
-          val allNull = for {
-            nc <- Option(s.get("nullCount")).flatMap(m => Option(m.get(statKey)))
-            n <- Option(s.get("numRecords"))
-          } yield nc.asLong() == n.asLong() && n.asLong() > 0L
-          if (allNull.contains(true)) false
-          else (mn, mx) match {
-            // keep iff [min,max] ∩ [lo,hi] ≠ ∅
-            case (Some(a2), Some(b2)) => statLeq(a2, hi) && statGeq(b2, lo)
-            case _ => true
-          }
-        } catch { case _: Exception => true }
-      }
-    }.map(_.path).sorted
-    (kept, st.active.size)
+    val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
+    // column-mapped tables key add.stats by PHYSICAL name
+    val physOf = schema.fields.map(f => f.name -> physName(f)).toMap
+    val range =
+      And(GreaterThanOrEqual(column, lo), LessThanOrEqual(column, hi))
+    val kept = st.active.values.toSeq.filter(a =>
+      FilterPrune.admits(
+        DeltaDsv2.statsView(a, schema, st.partitionCols, physOf), range))
+    (kept.map(_.path).sorted, st.active.size)
   }
 
-  /** Log-level FILE SKIPPING read: `read(...)` restricted to the
-    * [[prunedFiles]] of `column` ∈ [lo, hi], with the row-level filter
-    * still applied — semantics identical to
-    * `read(...).filter(col(column).between(lo, hi))`, cost proportional
-    * to the files that can match. At 100 TB this is THE scan lever: a
-    * z-ordered table answers a 2-D range probe from a handful of
-    * files.
+  /** Log-level FILE SKIPPING read: `read(...)` filtered to `column` ∈
+    * [lo, hi]. The filter pushes down into the `graft-delta` scan,
+    * which plans only the [[prunedFiles]] and re-applies the filter
+    * row by row — cost proportional to the files that can match. At
+    * 100 TB this is THE scan lever: a z-ordered table answers a 2-D
+    * range probe from a handful of files.
     */
   def readRange(
       spark: SparkSession, table: String, column: String,
       lo: Any, hi: Any,
-      versionAsOf: Option[Long] = None): DataFrame = {
-    val keep = prunedFiles(spark, table, column, lo, hi, versionAsOf)
-      ._1.toSet
-    readCore(spark, table, versionAsOf, a => keep.contains(a.path))
-      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
+      versionAsOf: Option[Long] = None): DataFrame =
+    read(spark, table, versionAsOf).filter(col(column).between(lo, hi))
 
-  private def readCore(
-      spark: SparkSession, table: String,
-      versionAsOf: Option[Long],
-      fileFilter: AddFile => Boolean): DataFrame = {
-    val st0 = stateAt(spark, table, versionAsOf)
-    val st = st0.copy(active = st0.active.filter {
-      case (_, a) => fileFilter(a)
-    })
-    val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
-    val mapMode = st.configuration
-      .getOrElse("delta.columnMapping.mode", "none")
-    val mapped = mapMode == "name"
-    val idMapped = mapMode == "id"
-    val dataFields = schema.fields.filterNot(f =>
-      st.partitionCols.contains(f.name))
-    // name-mapped tables store PHYSICAL column names in the parquet
-    // files: read with the physical schema, then remap physical →
-    // logical below (top level by alias, nested levels by a
-    // structurally-identical cast, which renames positionally).
-    // id-mapped tables resolve by parquet FOOTER FIELD-IDS instead —
-    // the read schema keeps logical names and carries the ids.
-    val dataSchema =
-      if (mapped)
-        StructType(dataFields.map(f =>
-          f.copy(name = physName(f),
-            dataType = toPhysical(f.dataType))))
-      else if (idMapped)
-        withFieldIds(StructType(dataFields)).asInstanceOf[StructType]
-      else StructType(dataFields)
-    val files = st.active.values.toSeq.map(a => absPath(table, a.path))
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .select(schema.fieldNames.map(col): _*)
-    if (idMapped) {
-      // runtime-settable; only changes behavior for read schemas that
-      // carry parquet.field.id metadata (exactly this scan). A footer
-      // WITHOUT ids then fails loudly instead of name-matching.
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    }
-    // listing-free scan over the log's exact file set (see
-    // graftext.KnownFiles — the replayed state IS the listing)
-    val scanned = org.apache.spark.sql.graftext.KnownFiles
-      .parquetFrame(spark, dataSchema, files)
-    // DELETION VECTORS: a DV'd file's rows filter by their in-file
-    // row index — the deleted (file, index) pairs build an anti-join
-    // side (bounded by total deleted rows; the metadata-not-data
-    // discipline every DV reader shares), resolved per row against
-    // parquet's _metadata.row_index
-    val dvPairs: Seq[(String, Long)] = st.active.values.toSeq.flatMap { a =>
-      a.dv.toSeq.flatMap(d =>
-        DeltaDv.indexesOf(table, d).map(idx => (absPath(table, a.path), idx)))
-    }
-    val data =
-      if (dvPairs.isEmpty) scanned
-      else {
-        import spark.implicits._
-        val deleted = dvPairs.toDF("__dv_file", "__dv_idx")
-        scanned
-          .withColumn("__dv_f", udfFreeCanon(col("_metadata.file_path")))
-          .withColumn("__dv_i", col("_metadata.row_index"))
-          .join(broadcast(deleted),
-            col("__dv_f") === col("__dv_file") &&
-              col("__dv_i") === col("__dv_idx"),
-            "left_anti")
-          .drop("__dv_f", "__dv_i")
-      }
-    val withParts =
-      if (st.partitionCols.isEmpty) data
-      else {
-        val pvFrame = activeFiles(spark, table, versionAsOf)
-        data
-          .withColumn("__canon_file", udfFreeCanon(input_file_name()))
-          .join(broadcast(pvFrame), col("__canon_file") === col("file"))
-          .drop("__canon_file", "file")
-      }
-    withParts.select(schema.fields.map { f =>
-      if (st.partitionCols.contains(f.name))
-        col(f.name).cast(f.dataType).as(f.name)
-      else if (mapped)
-        col(physName(f)).cast(f.dataType).as(f.name)
-      else col(f.name) // id-mapped scans already emit logical names
-    }: _*)
-  }
-
-  /** [[canon]] as a codegen-friendly column expression (no Scala UDF):
-    * strip the `file:` scheme, URL-decode, squeeze slashes.
+  /** The live rows of `files` with their positions — what the
+    * writers that author deletion vectors or rewrite files scan (the
+    * DSv2 scan behind [[read]] does not expose positions). Each row
+    * carries the `dataSchema` columns plus `__f` (its file, in
+    * [[absPath]]'s spelling) and `__i` (its row index in that file);
+    * rows a deletion vector deletes are anti-joined away through one
+    * broadcast of the deleted (file, index) pairs, bounded by deleted
+    * rows. `rowIds` names a row-tracking table's (row id, commit
+    * version) columns: each row then carries both
+    * ([[DeltaRowTracking.scanForRewrite]]).
     */
-  private def udfFreeCanon(c: org.apache.spark.sql.Column) =
-    regexp_replace(
-      url_decode(regexp_replace(c, "^file:/*", "/")), "/+", "/")
+  private[sources] def livePositions(
+      spark: SparkSession, table: String, files: Seq[AddFile],
+      dataSchema: StructType, rowIds: Option[(String, String)]): DataFrame = {
+    val scanned = rowIds match {
+      case Some((ridCol, rvcCol)) =>
+        DeltaRowTracking.scanForRewrite(
+          spark, table, files, dataSchema, ridCol, rvcCol)
+      case None =>
+        // listing-free scan over the log's exact file set (see
+        // graftext.KnownFiles — the replayed state IS the listing)
+        KnownFiles.parquetFrame(
+          spark, dataSchema, files.map(a => absPath(table, a.path)))
+          .select(col("*"), canonPath(col("_metadata.file_path")).as("__f"),
+            col("_metadata.row_index").as("__i"))
+    }
+    val deleted: Seq[(String, Long)] = files.flatMap(a =>
+      a.dv.toSeq.flatMap(d =>
+        DeltaDv.indexesOf(table, d).map(i => (absPath(table, a.path), i))))
+    if (deleted.isEmpty) scanned
+    else {
+      import spark.implicits._
+      scanned.join(broadcast(deleted.toDF("__df", "__di")),
+        col("__f") === col("__df") && col("__i") === col("__di"),
+        "left_anti")
+    }
+  }
+
+  /** [[livePositions]] of every active file with the partition
+    * columns re-attached from the log at their declared types (one
+    * broadcast join on the file, bounded by files): the table's live
+    * rows plus `__f`/`__i`.
+    */
+  private[sources] def positionedScan(
+      spark: SparkSession, table: String, st: State, dataSchema: StructType,
+      rowIds: Option[(String, String)] = None): DataFrame = {
+    val files = st.active.values.toSeq.sortBy(_.path)
+    val live = livePositions(spark, table, files, dataSchema, rowIds)
+    if (st.partitionCols.isEmpty) live
+    else {
+      val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
+      val pv = filesFrame(spark, table, st, files)
+        .withColumnRenamed("file", "__pf")
+      st.partitionCols.foldLeft(
+        live.join(broadcast(pv), col("__f") === col("__pf")).drop("__pf")) {
+        (d, c) => d.withColumn(c, col(c).cast(schema(c).dataType))
+      }
+    }
+  }
 
   /** The last `txn` version committed for `appId`, or None — the
     * reader half of Delta's exactly-once streaming handshake: a

@@ -143,46 +143,10 @@ object DeltaMerge {
     val outCols: Seq[Column] = schema.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name))
     val srcKeys = source.select(keys.map(col): _*)
-    val canonF = regexp_replace(
-      url_decode(regexp_replace(
-        col("_metadata.file_path"), "^file:/*", "/")), "/+", "/")
     val targetLive: Option[DataFrame] =
       if (st.active.isEmpty) None
-      else {
-        val filesAbs = st.active.values.toSeq.map(a =>
-          DeltaLog.absPath(table, a.path))
-        val base =
-          if (rowTracking)
-            DeltaRowTracking.scanForRewrite(spark, table, st,
-              st.active.values.toSeq.sortBy(_.path), dataSchema)
-          else spark.read.schema(dataSchema).parquet(filesAbs: _*)
-            .select(col("*"), canonF.as("__f"),
-              col("_metadata.row_index").as("__i"))
-        val dvPairs: Seq[(String, Long)] = st.active.values.toSeq
-          .flatMap(a => a.dv.toSeq.flatMap(d =>
-            DeltaDv.indexesOf(table, d)
-              .map(i => (DeltaLog.absPath(table, a.path), i))))
-        val live =
-          if (dvPairs.isEmpty) base
-          else {
-            import spark.implicits._
-            base.join(broadcast(dvPairs.toDF("__df", "__di")),
-              col("__f") === col("__df") && col("__i") === col("__di"),
-              "left_anti")
-          }
-        val withPv =
-          if (st.partitionCols.isEmpty) live
-          else {
-            val pvFrame = DeltaLog.activeFiles(spark, table)
-              .withColumnRenamed("file", "__pv_file")
-            val joined = live.join(
-              broadcast(pvFrame), col("__f") === col("__pv_file"))
-            st.partitionCols.foldLeft(joined.drop("__pv_file")) { (d, c) =>
-              d.withColumn(c, col(c).cast(schema(c).dataType))
-            }
-          }
-        Some(withPv)
-      }
+      else Some(DeltaLog.positionedScan(spark, table, st, dataSchema,
+        if (rowTracking) Some((ridCol, rvcCol)) else None))
     val touched: Seq[String] = targetLive match {
       case Some(t) =>
         t.join(srcKeys, keys, "left_semi")
@@ -417,49 +381,13 @@ object DeltaMerge {
     val srcKeys = source.select(keys.map(col): _*)
 
     // ---- live target rows (DV'd positions excluded), with __f/__i --
-    val canonF = regexp_replace(
-      url_decode(regexp_replace(
-        col("_metadata.file_path"), "^file:/*", "/")), "/+", "/")
+    // a ROW-TRACKING target scans with each row's (id, commit
+    // version) attached — materialized-or-computed — so the rewrite
+    // can carry them
     val targetLive: Option[DataFrame] =
       if (st.active.isEmpty) None
-      else {
-        val filesAbs = st.active.values.toSeq.map(a =>
-          DeltaLog.absPath(table, a.path))
-        // a ROW-TRACKING target scans with each row's (id, commit
-        // version) attached — materialized-or-computed, the
-        // scanForRewrite frame — so the rewrite can carry them
-        val base =
-          if (rowTracking)
-            DeltaRowTracking.scanForRewrite(spark, table, st,
-              st.active.values.toSeq.sortBy(_.path), dataSchema)
-          else spark.read.schema(dataSchema).parquet(filesAbs: _*)
-            .select(col("*"), canonF.as("__f"),
-              col("_metadata.row_index").as("__i"))
-        val dvPairs: Seq[(String, Long)] = st.active.values.toSeq
-          .flatMap(a => a.dv.toSeq.flatMap(d =>
-            DeltaDv.indexesOf(table, d)
-              .map(i => (DeltaLog.absPath(table, a.path), i))))
-        val live =
-          if (dvPairs.isEmpty) base
-          else {
-            import spark.implicits._
-            base.join(broadcast(dvPairs.toDF("__df", "__di")),
-              col("__f") === col("__df") && col("__i") === col("__di"),
-              "left_anti")
-          }
-        val withPv =
-          if (st.partitionCols.isEmpty) live
-          else {
-            val pvFrame = DeltaLog.activeFiles(spark, table)
-              .withColumnRenamed("file", "__pv_file")
-            val joined = live.join(
-              broadcast(pvFrame), col("__f") === col("__pv_file"))
-            st.partitionCols.foldLeft(joined.drop("__pv_file")) { (d, c) =>
-              d.withColumn(c, col(c).cast(schema(c).dataType))
-            }
-          }
-        Some(withPv)
-      }
+      else Some(DeltaLog.positionedScan(spark, table, st, dataSchema,
+        if (rowTracking) Some((ridCol, rvcCol)) else None))
 
     // ---- touched files: the distinct file list, never rows ---------
     // an insert-only merge (no matched action) rewrites NOTHING:

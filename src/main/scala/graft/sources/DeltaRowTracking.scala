@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.KnownFiles
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Delta ROW TRACKING (PROTOCOL.md "Row Tracking") — the Delta-side
@@ -138,32 +139,25 @@ object DeltaRowTracking {
       finally reader.close()
     }).booleanValue()
 
-  /** The rewrite source for OPTIMIZE / MERGE on a row-tracking table:
-    * exactly `adds`' rows as `dataSchema` columns PLUS the two
-    * MATERIALIZED columns (config-named) carrying each row's id and
-    * commit version — coalesced from already-materialized values or
-    * computed baseRowId + position — plus `__f`/`__i` for the
-    * caller's DV purge. Writing this frame out IS the id-preserving
-    * rewrite.
+  /** The row-tracking base scan of [[DeltaLog.livePositions]]:
+    * exactly `adds`' rows as `dataSchema` columns plus `ridCol` /
+    * `rvcCol` carrying each row's id and commit version — coalesced
+    * from the materialized columns of that name where a file has
+    * them, else computed as baseRowId + position and
+    * defaultRowCommitVersion — plus `__f`/`__i`. Writing the id
+    * columns out under the config-named materialized names IS the
+    * id-preserving rewrite.
     */
   private[sources] def scanForRewrite(
-      spark: SparkSession, table: String, st: DeltaLog.State,
-      adds: Seq[DeltaLog.AddFile], dataSchema: StructType): DataFrame = {
-    def named(key: String): String = st.configuration.getOrElse(key,
-      throw new IllegalArgumentException(
-        s"rewriting a row-tracking table without $key configured " +
-          "(a foreign table that never chose materialized column " +
-          "names): refused rather than inventing names this writer's " +
-          "commit would not record"))
-    val ridCol = named(RowIdColKey)
-    val rvcCol = named(RowCommitColKey)
+      spark: SparkSession, table: String, adds: Seq[DeltaLog.AddFile],
+      dataSchema: StructType, ridCol: String, rvcCol: String): DataFrame = {
     adds.find(_.baseRowId.isEmpty).foreach(a =>
       throw new IllegalArgumentException(
         s"rewrite victim ${a.path} has no baseRowId (un-backfilled " +
           "foreign table) — refused rather than materializing null ids"))
-    val canon = regexp_replace(
-      url_decode(regexp_replace(
-        col("_metadata.file_path"), "^file:/*", "/")), "/+", "/")
+    // two branches: files WITH the materialized columns (post-OPTIMIZE)
+    // and without — each reads its own physical shape, both emit the
+    // same __mat_* columns so the union is shape-identical
     val (mat, plain) = adds.partition(a =>
       hasMaterialized(spark, table, a, ridCol))
     val branches = Seq((plain, false), (mat, true))
@@ -179,10 +173,12 @@ object DeltaRowTracking {
           else Seq(
             lit(null).cast(LongType).as("__mat_rid"),
             lit(null).cast(LongType).as("__mat_rvc"))
-        spark.read.schema(readSchema).parquet(paths: _*)
+        KnownFiles.parquetFrame(spark, readSchema, paths)
           .select(dataSchema.fieldNames.map(col).toSeq ++ matCols ++ Seq(
-            canon.as("__f"), col("_metadata.row_index").as("__i")): _*)
+            DeltaLog.canonPath(col("_metadata.file_path")).as("__f"),
+            col("_metadata.row_index").as("__i")): _*)
       }
+    // per-file constants: ONE metadata-sized broadcast
     import spark.implicits._
     val consts = adds.map(a => (
       DeltaLog.absPath(table, a.path),
@@ -202,7 +198,9 @@ object DeltaRowTracking {
     * delta-spark's `row_id`/`row_commit_version` metadata columns.
     * Fresh files compute baseRowId + position through one
     * metadata-sized broadcast; rewritten files read their
-    * materialized columns; deletion vectors apply as in any read.
+    * materialized columns; deletion vectors and partition values
+    * apply through [[DeltaLog.positionedScan]], the scan the writers
+    * share.
     */
   def readRowIds(
       spark: SparkSession, table: String,
@@ -239,15 +237,12 @@ object DeltaRowTracking {
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
         DeltaLog.withFieldIds(physFields).asInstanceOf[StructType]
     }
-    // physical → logical rename map for the final projection
-    val physToLogical: Seq[(String, String)] =
-      dataFields.toSeq.map(f => DeltaLog.physName(f) -> f.name)
-    val files = st.active.values.toSeq.sortBy(_.path)
     // a FOREIGN table that enabled row tracking mid-life without a
     // baseRowId backfill has active files with NO id assignment —
     // emitting null lineage for them would contradict this module's
     // refuse-loudly discipline (a consumer keyed on _row_id would
     // silently collapse every such row onto null)
+    val files = st.active.values.toSeq.sortBy(_.path)
     files.find(_.baseRowId.isEmpty).foreach(a =>
       throw new IllegalArgumentException(
         s"$table has active files without baseRowId (first: ${a.path}) " +
@@ -259,78 +254,16 @@ object DeltaRowTracking {
         StructType(schema.fields ++ Seq(
           StructField("_row_id", LongType),
           StructField("_row_commit_version", LongType))))
-    val canon = regexp_replace(
-      url_decode(regexp_replace(
-        col("_metadata.file_path"), "^file:/*", "/")), "/+", "/")
-    // two branches: files WITH the materialized columns (post-OPTIMIZE)
-    // and without — each reads its own physical shape, both emit the
-    // same __mat_* columns so the union is shape-identical
-    val (mat, plain) = files.partition(a =>
-      hasMaterialized(spark, table, a, ridCol))
-    val branches = Seq(
-      (plain, false),
-      (mat, true)).filter(_._1.nonEmpty).map { case (fs, hasMat) =>
-      val paths = fs.map(a => DeltaLog.absPath(table, a.path))
-      val readSchema =
-        if (!hasMat) dataSchema
-        else StructType(dataSchema.fields ++ Seq(
-          StructField(ridCol, LongType), StructField(rvcCol, LongType)))
-      val matCols =
-        if (hasMat) Seq(
-          col(ridCol).as("__mat_rid"), col(rvcCol).as("__mat_rvc"))
-        else Seq(
-          lit(null).cast(LongType).as("__mat_rid"),
-          lit(null).cast(LongType).as("__mat_rvc"))
-      spark.read.schema(readSchema).parquet(paths: _*)
-        .select(dataSchema.fieldNames.map(col).toSeq ++ matCols ++ Seq(
-          canon.as("__f"), col("_metadata.row_index").as("__i")): _*)
-    }
-    val scanned = branches.reduce(_.unionByName(_))
-    // DV anti-join (bounded by deleted rows), as in DeltaLog.read
-    val dvPairs: Seq[(String, Long)] = files.flatMap { a =>
-      a.dv.toSeq.flatMap(d =>
-        DeltaDv.indexesOf(table, d)
-          .map(i => (DeltaLog.absPath(table, a.path), i)))
-    }
-    val live =
-      if (dvPairs.isEmpty) scanned
-      else {
-        import spark.implicits._
-        scanned.join(broadcast(dvPairs.toDF("__dvf", "__dvi")),
-          col("__f") === col("__dvf") && col("__i") === col("__dvi"),
-          "left_anti")
-      }
-    // per-file constants: ONE metadata-sized broadcast
-    import spark.implicits._
-    val consts = files.map(a => (
-      DeltaLog.absPath(table, a.path),
-      a.baseRowId.map(Long.box).orNull,
-      a.defaultRowCommitVersion.map(Long.box).orNull))
-      .toDF("__cf", "__base", "__defv")
-    val withIds = live
-      .join(broadcast(consts), col("__f") === col("__cf"))
-      .withColumn("_row_id",
-        coalesce(col("__mat_rid"), col("__base") + col("__i")))
-      .withColumn("_row_commit_version",
-        coalesce(col("__mat_rvc"), col("__defv")))
-    // partition columns attach from the log like any Delta read
-    val withPv =
-      if (st.partitionCols.isEmpty) withIds
-      else {
-        val pvFrame = DeltaLog.activeFiles(spark, table, versionAsOf)
-          .withColumnRenamed("file", "__pvf")
-        st.partitionCols.foldLeft(
-          withIds.join(broadcast(pvFrame), col("__f") === col("__pvf"))) {
-          (d, c) => d.withColumn(c, col(c).cast(schema(c).dataType))
-        }
-      }
     // final projection in table-schema order, physical names renamed
     // back to logical (physName = logical on unmapped: one code path)
     val outCols = schema.fields.toSeq.map { f =>
       if (st.partitionCols.contains(f.name)) col(f.name)
       else col(DeltaLog.physName(f)).as(f.name)
     }
-    withPv.select(outCols ++ Seq(
-      col("_row_id"), col("_row_commit_version")): _*)
+    DeltaLog.positionedScan(spark, table, st, dataSchema,
+      rowIds = Some((ridCol, rvcCol)))
+      .select(outCols ++ Seq(
+        col(ridCol).as("_row_id"),
+        col(rvcCol).as("_row_commit_version")): _*)
   }
 }

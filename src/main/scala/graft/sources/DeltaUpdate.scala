@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, regexp_replace, url_decode}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Delta UPDATE — the deletion-vector copy shape delta-spark's own
@@ -53,39 +53,9 @@ object DeltaUpdate {
     val dataSchema = StructType(
       schema.fields.filterNot(f => st.partitionCols.contains(f.name)))
     if (st.active.isEmpty) return None
-    val filesAbs = st.active.values.toSeq.map(a =>
-      DeltaLog.absPath(table, a.path))
-    val canonF = regexp_replace(
-      url_decode(regexp_replace(
-        col("_metadata.file_path"), "^file:/*", "/")), "/+", "/")
-    val base = spark.read.schema(dataSchema).parquet(filesAbs: _*)
-      .select(col("*"), canonF.as("__f"),
-        col("_metadata.row_index").as("__i"))
     // rows already DV-deleted must neither re-mark nor re-emit
-    val dvPairs: Seq[(String, Long)] = st.active.values.toSeq.flatMap { a =>
-      a.dv.toSeq.flatMap(d => DeltaDv.indexesOf(table, d)
-        .map(i => (DeltaLog.absPath(table, a.path), i)))
-    }
-    val live =
-      if (dvPairs.isEmpty) base
-      else {
-        import spark.implicits._
-        base.join(broadcast(dvPairs.toDF("__df", "__di")),
-          col("__f") === col("__df") && col("__i") === col("__di"),
-          "left_anti")
-      }
-    val withPv =
-      if (st.partitionCols.isEmpty) live
-      else {
-        val pvFrame = DeltaLog.activeFiles(spark, table)
-          .withColumnRenamed("file", "__pv_file")
-        val joined = live.join(
-          broadcast(pvFrame), col("__f") === col("__pv_file"))
-        st.partitionCols.foldLeft(joined.drop("__pv_file")) { (d, c) =>
-          d.withColumn(c, col(c).cast(schema(c).dataType))
-        }
-      }
-    val matchedRows = withPv.filter(condition)
+    val matchedRows = DeltaLog.positionedScan(spark, table, st, dataSchema)
+      .filter(condition)
     // bounded by rows updated in THIS call
     val matched = matchedRows
       .select(col("__f"), col("__i")).collect()
@@ -188,43 +158,10 @@ object DeltaUpdate {
       schema.fields.filterNot(f => st.partitionCols.contains(f.name)))
     val matched: Array[(String, Long)] =
       if (st.active.isEmpty) Array.empty
-      else {
-        val filesAbs = st.active.values.toSeq.map(a =>
-          DeltaLog.absPath(table, a.path))
-        val canonF = regexp_replace(
-          url_decode(regexp_replace(
-            col("_metadata.file_path"), "^file:/*", "/")), "/+", "/")
-        val base = spark.read.schema(dataSchema).parquet(filesAbs: _*)
-          .select(col("*"), canonF.as("__f"),
-            col("_metadata.row_index").as("__i"))
-        val dvPairs: Seq[(String, Long)] = st.active.values.toSeq
-          .flatMap { a =>
-            a.dv.toSeq.flatMap(d => DeltaDv.indexesOf(table, d)
-              .map(i => (DeltaLog.absPath(table, a.path), i)))
-          }
-        val live =
-          if (dvPairs.isEmpty) base
-          else {
-            import spark.implicits._
-            base.join(broadcast(dvPairs.toDF("__df", "__di")),
-              col("__f") === col("__df") && col("__i") === col("__di"),
-              "left_anti")
-          }
-        val withPv =
-          if (st.partitionCols.isEmpty) live
-          else {
-            val pvFrame = DeltaLog.activeFiles(spark, table)
-              .withColumnRenamed("file", "__pv_file")
-            val joined = live.join(
-              broadcast(pvFrame), col("__f") === col("__pv_file"))
-            st.partitionCols.foldLeft(joined.drop("__pv_file")) { (d, c) =>
-              d.withColumn(c, col(c).cast(schema(c).dataType))
-            }
-          }
-        withPv.filter(condition)
-          .select(col("__f"), col("__i")).collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-      }
+      else DeltaLog.positionedScan(spark, table, st, dataSchema)
+        .filter(condition)
+        .select(col("__f"), col("__i")).collect()
+        .map(r => (r.getString(0), r.getLong(1)))
 
     val staged = stageIn(
       df.select(schema.fields.toSeq.map(f =>

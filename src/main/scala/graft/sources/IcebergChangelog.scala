@@ -52,10 +52,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   */
 object IcebergChangelog {
 
-  private def canon(c: Column): Column =
-    regexp_replace(
-      url_decode(regexp_replace(c, "^file:/*", "/")), "/+", "/")
-
   /** (referenced data file → deleted positions) of every puffin
     * deletion vector at a snapshot (driver-side, bounded by rows
     * deleted).
@@ -190,7 +186,7 @@ object IcebergChangelog {
         def pairsOf(paths: Seq[String]): Option[DataFrame] =
           if (paths.isEmpty) None
           else Some(spark.read.schema(posSchema).parquet(paths: _*)
-            .select(canon(col("file_path")).as("__cl_f"),
+            .select(DeltaLog.canonPath(col("file_path")).as("__cl_f"),
               col("pos").as("__cl_i")))
         val dvP = parentSnap.map(p => dvPositions(table, meta, p))
           .getOrElse(Map.empty[String, Array[Long]])

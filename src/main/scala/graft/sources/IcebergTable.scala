@@ -749,14 +749,6 @@ object IcebergTable {
       finally reader.close()
     }).booleanValue()
 
-  /** [[DeltaLog]]'s canonical-path discipline: `input_file_name()`'s
-    * URI spelling → the manifests' absolute-path spelling, as a
-    * codegen column expression (no Scala UDF).
-    */
-  private def canonFile(c: org.apache.spark.sql.Column) =
-    regexp_replace(
-      url_decode(regexp_replace(c, "^file:/*", "/")), "/+", "/")
-
   /** Structural compatibility ignoring field NAMES (renames are the
     * point of field-id resolution), admitting exactly the spec's
     * LOSSLESS type promotions (int → long, float → double, decimal
@@ -1466,7 +1458,7 @@ object IcebergTable {
           anyIdentity || eqDeletes.nonEmpty
         val metaCols =
           (if (needFile)
-            Seq(canonFile(col("_metadata.file_path")).as("__ib_f"))
+            Seq(DeltaLog.canonPath(col("_metadata.file_path")).as("__ib_f"))
           else Nil) ++
             (if (posDeletes.nonEmpty || dvFiles.nonEmpty ||
               withPos || withLineage)
@@ -1536,7 +1528,7 @@ object IcebergTable {
             .schema(StructType.fromDDL("file_path STRING, pos BIGINT"))
             .parquet(posDeletes: _*)
             .select(
-              canonFile(col("file_path")).as("__del_f"),
+              DeltaLog.canonPath(col("file_path")).as("__del_f"),
               col("pos").as("__del_i")))
         val dvDel =
           if (dvFiles.isEmpty) None

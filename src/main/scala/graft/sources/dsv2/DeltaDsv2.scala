@@ -33,13 +33,13 @@ import graft.sources.{DeltaDv, DeltaLog}
   *   spark.readStream.format("graft-delta").load(path)    // snapshot+tail
   * }}}
   *
-  * The planner-facing contract this closes (vs the bespoke
-  * [[graft.sources.DeltaLog.read]] API): `.filter(...)` pushes down
+  * This is the one Delta read path: [[graft.sources.DeltaLog.read]]
+  * and `readRange` are wrappers over it. `.filter(...)` pushes down
   * through `SupportsPushDownFilters` and prunes at TWO levels —
   * file skipping against `add.stats` min/max/nullCount and exact
-  * partition values (the same state [[DeltaLog.prunedFiles]] uses),
-  * then parquet row-group/page skipping inside Spark's own reader;
-  * `.select(...)` prunes columns through
+  * partition values ([[FilterPrune]], which [[DeltaLog.prunedFiles]]
+  * reports with), then parquet row-group/page skipping inside Spark's
+  * own reader; `.select(...)` prunes columns through
   * `SupportsPushDownRequiredColumns` down to the parquet scan. Every
   * filter is also reported residual so Spark re-applies it row-level
   * — skipping is never a correctness decision.
@@ -47,11 +47,11 @@ import graft.sources.{DeltaDv, DeltaLog}
   * Deletion vectors apply per file inside the [[GraftFileBatch]]
   * readers (row-index binary search, bounded by deleted rows),
   * shipped as DESCRIPTORS and resolved on the executors (r17).
-  * COLUMN-MAPPED tables (r17) read through both protocol modes the
-  * bespoke reader implements: NAME mode scans under the stable
-  * physical parquet names (logical names re-attach positionally),
-  * ID mode resolves by parquet footer field-ids; `add.stats` and
-  * `add.partitionValues` lookups key by physical name in both.
+  * COLUMN-MAPPED tables (r17) read through both protocol modes:
+  * NAME mode scans under the stable physical parquet names (logical
+  * names re-attach positionally), ID mode resolves by parquet footer
+  * field-ids; `add.stats` and `add.partitionValues` lookups key by
+  * physical name in both.
   *
   * Scale shape: planning is the same driver-side metadata replay
   * delta-spark performs — bounded by files, never by deleted rows;
@@ -89,7 +89,7 @@ class DeltaTableProvider extends TableProvider with DataSourceRegister {
       properties.asScala.toMap.map { case (k, v) => (k.toLowerCase, v) })
 }
 
-private[dsv2] object DeltaDsv2 {
+private[sources] object DeltaDsv2 {
 
   private val mapper = new ObjectMapper()
 
@@ -138,6 +138,12 @@ private[dsv2] object DeltaDsv2 {
       case BooleanType => raw.toBoolean
       case DateType =>
         java.time.LocalDate.parse(raw).toEpochDay.toInt
+      case TimestampNTZType =>
+        // wall-clock value, no zone: micros of the local date-time
+        // read as UTC (Spark's own NTZ encoding)
+        val t = java.time.LocalDateTime.parse(raw.replace(' ', 'T'))
+        org.apache.spark.sql.catalyst.util.DateTimeUtils
+          .localDateTimeToMicros(t)
       case TimestampType =>
         // delta-spark interprets ZONELESS partition timestamp strings
         // in the SESSION time zone (spark.sql.session.timeZone), not
@@ -172,7 +178,7 @@ private[dsv2] object DeltaDsv2 {
   def externalPartValue(raw: String, dt: DataType): Any =
     if (raw == null) null
     else dt match {
-      case StringType | TimestampType => raw
+      case StringType | TimestampType | TimestampNTZType => raw
       case DateType => java.time.LocalDate.parse(raw)
       case BooleanType => raw.toBoolean
       case _ => BigDecimal(raw)
@@ -503,9 +509,13 @@ private[dsv2] case class DeltaDsv2Scan(
     if (DeltaDsv2.isCdf(options)) cdfPartitions()
     else {
       val kept = keptFiles()
+      // slices are cut from the file's size ON DISK, not add.size: a
+      // log whose size under-states the file would make the reader
+      // skip every row group past it without an error (and a missing
+      // file fails here, at planning)
       val withSize = kept.map { a =>
         val abs = DeltaLog.absPath(table, a.path)
-        (a, abs, a.size.getOrElse(Files.size(Paths.get(abs))))
+        (a, abs, Files.size(Paths.get(abs)))
       }
       // large files split at Spark's own maxSplitBytes formula (r17):
       // one slice per FILE caps parallelism at the file count — a

@@ -7,7 +7,8 @@ import org.apache.spark.sql.sources._
   * skipping state (Delta `add.stats` min/max/nullCount, Iceberg
   * manifest `lower_bounds`/`upper_bounds`/`null_value_counts`,
   * partition values) into planner-driven pruning for a plain
-  * `spark.read.format("graft-delta").load(p).filter(...)` user.
+  * `spark.read.format("graft-delta").load(p).filter(...)` user, and
+  * the one comparator behind `DeltaLog.prunedFiles` too.
   *
   * Conservative by construction: every comparison that cannot be
   * decided (missing stats, incomparable types, unsupported filter
@@ -16,7 +17,7 @@ import org.apache.spark.sql.sources._
   * because the ScanBuilder reports every filter as residual, the same
   * belt-and-braces contract the built-in parquet source uses).
   */
-private[dsv2] object FilterPrune {
+private[sources] object FilterPrune {
 
   /** Per-file metadata view a format adapter supplies. All values in
     * EXTERNAL form (String/Long/BigDecimal/java.sql.Date/...).
@@ -71,8 +72,7 @@ private[dsv2] object FilterPrune {
     * comparisons are TYPE-DIRECTED by the filter bound (the stat side
     * may arrive as an ISO string — delta-spark writes timestamp stats
     * in ISO 'T' form, and 'T' vs ' ' inverts lexicographic same-day
-    * bounds, the exact hazard [[graft.sources.DeltaLog]]'s skipping
-    * already guards). STRINGS compare by UTF-8 binary order (code
+    * bounds). STRINGS compare by UTF-8 binary order (code
     * points), not Java's UTF-16 code units: parquet/Delta/Iceberg
     * min/max string bounds are UTF-8-ordered, and for supplementary
     * characters (above U+FFFF, encoded as surrogate pairs that sort

@@ -41,13 +41,18 @@ object KnownFiles {
 
   /** DataFrame reading exactly `paths` (local filesystem) as parquet
     * under `dataSchema`. Unpartitioned relation; `_metadata` columns
-    * behave as with any file-source scan.
+    * behave as with any file-source scan. A path with no file behind
+    * it fails here: `File.length()` of an absent file is 0, and a
+    * 0-byte status would make the scan skip the file's rows silently.
     */
   def parquetFrame(
       spark: SparkSession, dataSchema: StructType,
       paths: Seq[String]): DataFrame = {
     val statuses = paths.map { p =>
       val f = new java.io.File(p)
+      if (!f.isFile)
+        throw new java.io.FileNotFoundException(
+          s"data file $p listed by the table metadata does not exist")
       new FileStatus(
         f.length(), false, 1, 134217728L, f.lastModified(),
         new Path(f.toURI))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
@@ -173,6 +173,24 @@ class DeltaLogSpec extends SparkSpec {
       DeltaLog.read(spark, table.toString)
     }
     assert(ex.getMessage.contains("minReaderVersion=2"), ex.getMessage)
+  }
+
+  test("a data file missing from disk fails the read instead of dropping its rows") {
+    val table = Files.createTempDirectory("delta_missing").resolve("t").toString
+    DeltaExport.create(
+      (0L until 100L).map(i => (i, s"p$i")).toDF("id", "payload")
+        .repartitionByRange(2, col("id")), table)
+    val files = DeltaLog.stateAt(spark, table, None).active.keys.toSeq.sorted
+    assert(files.size == 2, files)
+    Files.delete(Paths.get(DeltaLog.absPath(table, files.head)))
+    val e = intercept[Exception](DeltaLog.read(spark, table).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(chain.exists {
+      case _: java.io.FileNotFoundException |
+          _: java.nio.file.NoSuchFileException => true
+      case _ => false
+    }, chain.map(_.toString).mkString("\n"))
   }
 
   test("activeFiles exposes the snapshot's file-level partition map") {

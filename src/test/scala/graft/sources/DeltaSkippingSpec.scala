@@ -50,6 +50,25 @@ class DeltaSkippingSpec extends SparkSpec {
     assert(pruned == full && full.size == 17, s"pruned read drifted")
   }
 
+  test("string stats prune in UTF-8 order: a supplementary-plane max is kept") {
+    // U+1F600 lies inside [U+E000, U+10FFFF] by code point, but its
+    // UTF-16 surrogate pair sorts BELOW U+E000: a UTF-16 comparison
+    // of the file's max against the bound would skip the file
+    val t = tbl()
+    DeltaExport.create(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1), t)
+    DeltaExport.append(Seq((3L, "\uD83D\uDE00")).toDF("id", "s").coalesce(1), t)
+    val (lo, hi) = ("\uE000", "\uDBFF\uDFFF")
+    val full = DeltaLog.read(spark, t).filter(col("s").between(lo, hi))
+      .collect().map(_.getLong(0)).toSet
+    assert(full == Set(3L))
+    val ranged = DeltaLog.readRange(spark, t, "s", lo, hi)
+      .collect().map(_.getLong(0)).toSet
+    assert(ranged == full, s"readRange dropped rows: $ranged")
+    val (kept, total) = DeltaLog.prunedFiles(spark, t, "s", lo, hi)
+    assert(total == 2 && kept.size == 1, s"$kept of $total")
+  }
+
   test("ISO-'T' timestamp stats compare temporally against Timestamp bounds") {
     // foreign delta-spark tables write timestamp stats in ISO 'T'
     // form; java.sql.Timestamp.toString uses a space. 'T' > ' ', so a

@@ -260,6 +260,36 @@ class DeltaV2CheckpointSpec extends SparkSpec {
     assert(e.getMessage.contains("collations-preview"), e.getMessage)
   }
 
+  test("timestampNtz PARTITION values read through graft-delta and prune") {
+    val table = Files.createTempDirectory("delta_ntz_pv")
+    writeOneParquet(Seq(1L, 2L).toDF("id"),
+      table.resolve("p1/f1.parquet"))
+    writeOneParquet(Seq(3L).toDF("id"),
+      table.resolve("p2/f2.parquet"))
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("at", TimestampNTZType)))
+    val ss = schema.json.replace("\\", "\\\\").replace("\"", "\\\"")
+    writeCommit(table, 0, Seq(
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["timestampNtz"],"writerFeatures":["timestampNtz"]}}""",
+      s"""{"metaData":{"id":"ntz-pv-fixture","format":{"provider":"parquet","options":{}},"schemaString":"$ss","partitionColumns":["at"],"configuration":{},"createdTime":1700000000000}}""",
+      """{"add":{"path":"p1/f1.parquet","partitionValues":{"at":"2024-03-05 08:30:00"},"dataChange":true}}""",
+      """{"add":{"path":"p2/f2.parquet","partitionValues":{"at":"2024-03-06 20:45:00.5"},"dataChange":true}}"""))
+    val late = java.time.LocalDateTime.of(2024, 3, 6, 20, 45, 0, 500000000)
+    val want = Seq(
+      (1L, java.time.LocalDateTime.of(2024, 3, 5, 8, 30)),
+      (2L, java.time.LocalDateTime.of(2024, 3, 5, 8, 30)),
+      (3L, late))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getAs[java.time.LocalDateTime](1))).toSeq
+    val dsv2 = spark.read.format("graft-delta").load(table.toString)
+    assert(dsv2.schema("at").dataType == TimestampNTZType)
+    assert(rows(dsv2) == want)
+    assert(rows(DeltaLog.read(spark, table.toString)) == want)
+    // the exact partition value prunes the other file
+    assert(rows(dsv2.filter(col("at") === lit(late))) == Seq((3L, late)))
+    assert(graft.sources.dsv2.Dsv2Planning.plannedFor(table.toString) == Some((1, 2)))
+  }
+
   private def writeOneParquet(
       df: org.apache.spark.sql.DataFrame, dest: Path): Unit = {
     val tmp = Files.createTempDirectory("v2ck_part")

@@ -54,8 +54,8 @@ class DeltaWideningDefaultsSpec extends SparkSpec {
     val footer = spark.read.parquet(DeltaLog.absPath(t, preWiden)).schema
     assert(footer("k").dataType == IntegerType,
       s"pre-widen file must stay narrow, saw ${footer("k").dataType}")
-    // bespoke + DSv2 reads agree and promote
-    val bespoke = DeltaLog.read(spark, t)
+    // reference + DSv2 reads agree and promote
+    val bespoke = DeltaReadReference.read(spark, t)
     assert(bespoke.schema("k").dataType == LongType)
     assert(bespoke.collect().map(_.getLong(0)).toSet == (0L until 60L).toSet)
     val dsv2 = spark.read.format("graft-delta").load(t)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
@@ -30,6 +31,27 @@ class IcebergSpec extends SparkSpec {
     val got = out.orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
     assert(got == in.sortBy(_._1))
+  }
+
+  test("a data file missing from disk fails the read instead of dropping its rows") {
+    val t = tmpTable()
+    IcebergExport.create(
+      df((0L until 100L).map(i => (i, s"n$i", i.toDouble)))
+        .repartitionByRange(2, col("id")), t)
+    val data = {
+      val s = Files.walk(Paths.get(t))
+      try s.iterator().asScala.filter(p =>
+        p.getFileName.toString.endsWith(".parquet") &&
+          !p.toString.contains("/metadata/")).toVector.sorted
+      finally s.close()
+    }
+    assert(data.size == 2, data)
+    Files.delete(data.head)
+    val e = intercept[Exception](IcebergTable.read(spark, t).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[java.io.FileNotFoundException]),
+      chain.map(_.toString).mkString("\n"))
   }
 
   test("append advances the snapshot; time travel reads the old one") {

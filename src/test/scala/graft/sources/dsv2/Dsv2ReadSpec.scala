@@ -3,7 +3,7 @@ package graft.sources.dsv2
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.sources.{DeltaExport, DeltaLog, IcebergExport, IcebergTable}
+import graft.sources.{DeltaExport, DeltaReadReference, IcebergExport, IcebergTable}
 import org.apache.spark.sql.functions._
 
 /** The DataSourceV2 read path: `spark.read.format("graft-delta")` /
@@ -31,7 +31,7 @@ class Dsv2ReadSpec extends SparkSpec {
     DeltaExport.create(
       rows100.repartitionByRange(4, col("id")).sortWithinPartitions("id"), t)
     DeltaExport.deleteWhere(spark, t, col("id") % 10 === 3)
-    val bespoke = DeltaLog.read(spark, t)
+    val bespoke = DeltaReadReference.read(spark, t)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     val dsv2 = spark.read.format("graft-delta").load(t)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
@@ -73,7 +73,7 @@ class Dsv2ReadSpec extends SparkSpec {
     DeltaExport.create(rows100, t, partitionBy = Seq("grp"))
     val all = spark.read.format("graft-delta").load(t)
     assert(all.schema.fieldNames.toSet == Set("id", "grp", "name"))
-    val bespoke = DeltaLog.read(spark, t)
+    val bespoke = DeltaReadReference.read(spark, t)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("grp"))).toSet
     assert(all.collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[Int]("grp"))).toSet == bespoke)
@@ -189,7 +189,7 @@ class Dsv2ReadSpec extends SparkSpec {
           r.getAs[org.apache.spark.sql.Row]("info").getLong(0),
           r.getAs[String]("region"))
       val got = dsv2.collect().map(key).toSet
-      val bespoke = graft.sources.DeltaLog.read(spark, t)
+      val bespoke = DeltaReadReference.read(spark, t)
         .collect().map(key).toSet
       assert(got == bespoke && got == Set(
         (1L, "alpha", 5L, "us"), (2L, "beta", 7L, "us"),
