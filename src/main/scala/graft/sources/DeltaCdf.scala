@@ -34,9 +34,9 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   *
   * Scale shape: log replay per version is driver-side metadata work;
   * deleted POSITIONS are bounded by rows deleted (the DV
-  * discipline); the data reads are one distributed
-  * `spark.read.parquet` per (version, change kind) over exactly the
-  * files that changed — never a snapshot diff scan.
+  * discipline); the data reads are one distributed listing-free scan
+  * (`DeltaLog.positioned`) per (version, change kind) over exactly
+  * the files that changed — never a snapshot diff scan.
   *
   * Scope: unmapped tables (this repo's writers author none mapped);
   * shrunken deletion vectors (un-deletes) are refused loudly.
@@ -91,10 +91,7 @@ object DeltaCdf {
         keepListed: Boolean,
         changeType: String, version: Long): DataFrame = {
       import spark.implicits._
-      val base = spark.read.schema(dataSchema)
-        .parquet(files.map(_._1): _*)
-        .withColumn("__f", DeltaLog.canonPath(col("_metadata.file_path")))
-        .withColumn("__i", col("_metadata.row_index"))
+      val base = DeltaLog.positioned(spark, dataSchema, files.map(_._1))
       val posPairs: Seq[(String, Long)] = positions.toSeq
         .flatMap { case (f, idxs) => idxs.map(f -> _) }
       val joined =
@@ -105,24 +102,9 @@ object DeltaCdf {
           broadcast(posPairs.toDF("__pf", "__pi")),
           col("__f") === col("__pf") && col("__i") === col("__pi"),
           if (keepListed) "left_semi" else "left_anti")
-      val withPv =
-        if (stTo.partitionCols.isEmpty) joined
-        else {
-          val pvFrame = files.map { case (f, pv) =>
-            (f, stTo.partitionCols.map(c => pv.getOrElse(c, null)))
-          }.toDF("__pvf", "__pv")
-            .select(col("__pvf") +:
-              stTo.partitionCols.zipWithIndex.map { case (c, i) =>
-                col("__pv").getItem(i).as(c)
-              }: _*)
-          joined.join(broadcast(pvFrame), col("__f") === col("__pvf"))
-        }
-      withPv.select(schema.fields.map { f =>
-        if (stTo.partitionCols.contains(f.name))
-          col(f.name).cast(f.dataType).as(f.name)
-        else col(f.name)
-      } :+ lit(changeType).as("_change_type")
-        :+ lit(version).as("_commit_version"): _*)
+      DeltaLog.withPartitions(spark, stTo, joined, files)
+        .select(schema.fieldNames.map(col) :+ lit(changeType).as("_change_type")
+          :+ lit(version).as("_commit_version"): _*)
     }
 
     def dvIndexes(a: DeltaLog.AddFile): Array[Long] =
@@ -151,28 +133,10 @@ object DeltaCdf {
         // cdc files carry _change_type themselves
         val cdcSchema = StructType(dataSchema.fields :+
           org.apache.spark.sql.types.StructField("_change_type", StringType))
-        val base = spark.read.schema(cdcSchema)
-          .parquet(files.map(_._1): _*)
-          .withColumn("__f", DeltaLog.canonPath(col("_metadata.file_path")))
-        val withPv =
-          if (stTo.partitionCols.isEmpty) base
-          else {
-            import spark.implicits._
-            val pvFrame = files.map { case (f, pv) =>
-              (f, stTo.partitionCols.map(c => pv.getOrElse(c, null)))
-            }.toDF("__pvf", "__pv")
-              .select(col("__pvf") +:
-                stTo.partitionCols.zipWithIndex.map { case (c, i) =>
-                  col("__pv").getItem(i).as(c)
-                }: _*)
-            base.join(broadcast(pvFrame), col("__f") === col("__pvf"))
-          }
-        Seq(withPv.select(schema.fields.map { f =>
-          if (stTo.partitionCols.contains(f.name))
-            col(f.name).cast(f.dataType).as(f.name)
-          else col(f.name)
-        } :+ col("_change_type")
-          :+ lit(v).as("_commit_version"): _*))
+        Seq(DeltaLog.withPartitions(spark, stTo,
+          DeltaLog.positioned(spark, cdcSchema, files.map(_._1)), files)
+          .select(schema.fieldNames.map(col) :+ col("_change_type")
+            :+ lit(v).as("_commit_version"): _*))
       } else {
         val prevActive: Map[String, DeltaLog.AddFile] =
           if (v == 0L) Map.empty

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.StructType
 
 /** Write-side complement of [[DeltaLog]]: export DataFrames AS a
@@ -87,8 +88,8 @@ object DeltaExport {
   }
 
   /** Hive-layout `k=v` partition values of a relative file path, in
-    * `partitionCols` order; values are URL-decoded like Spark writes
-    * them encoded.
+    * `partitionCols` order; values are un-escaped the way Spark
+    * escapes them in directory names (`%XX` only: a `+` is a `+`).
     */
   private[sources] def partitionValuesOf(
       rel: String, partitionCols: Seq[String]): Map[String, String] = {
@@ -96,7 +97,7 @@ object DeltaExport {
     val kv = dirs.flatMap { d =>
       val i = d.indexOf('=')
       if (i > 0)
-        Some(d.take(i) -> java.net.URLDecoder.decode(d.drop(i + 1), "UTF-8"))
+        Some(d.take(i) -> ExternalCatalogUtils.unescapePathName(d.drop(i + 1)))
       else None
     }.toMap
     partitionCols.flatMap(c => kv.get(c).map(c -> _)).toMap
@@ -1973,7 +1974,7 @@ object DeltaExport {
       retentionMs: Long): Seq[String] = {
     val st = DeltaLog.stateAt(spark, table, None)
     val active = st.active.values
-      .map(a => java.net.URLDecoder.decode(a.path, "UTF-8")).toSet
+      .map(a => DeltaLog.decodePath(a.path)).toSet
     val cutoff = System.currentTimeMillis() - retentionMs
     // UniForm-converted tables share the directory with an Iceberg
     // view whose OWN files (position-delete parquet under data/) are
@@ -2524,7 +2525,7 @@ object DeltaExport {
         def curDel(a: DeltaLog.AddFile): Array[Long] =
           a.dv.map(DeltaDv.indexesOf(table, _)).getOrElse(Array.empty)
         val removes = st.active.values.toSeq.sortBy(_.path).filter { a =>
-          desiredByRel.get(java.net.URLDecoder.decode(a.path, "UTF-8"))
+          desiredByRel.get(DeltaLog.decodePath(a.path))
             match {
             case None => true // vanished from the Iceberg snapshot
             case Some(w) => !java.util.Arrays.equals(curDel(a), w.del)

@@ -501,15 +501,22 @@ object DeltaLog {
     case other => other
   }
 
-  /** Absolute on-disk path of an add entry's data file. `add.path`
-    * is URL-encoded and relative to the table root, or absolute;
-    * decoding it ONCE gives the name on disk — a Hive-escaped
-    * partition directory such as `ts=2024-01-01 09%3A00%3A00` is
-    * logged as `ts=2024-01-01%2009%253A00%253A00` and keeps its
-    * `%3A`.
+  /** `add.path` as the name on disk: URI percent-decoding, applied
+    * ONCE. A Hive-escaped partition directory such as
+    * `ts=2024-01-01 09%3A00%3A00` is logged as
+    * `ts=2024-01-01%2009%253A00%253A00` and keeps its `%3A`; a literal
+    * `+` stays a `+` (URI decoding, not form decoding, which would
+    * turn it into a space).
+    */
+  private[sources] def decodePath(rel: String): String =
+    java.net.URLDecoder.decode(rel.replace("+", "%2B"), "UTF-8")
+
+  /** Absolute on-disk path of an add entry's data file: `add.path` is
+    * URL-encoded and relative to the table root, or absolute
+    * ([[decodePath]]).
     */
   private[sources] def absPath(table: String, rel: String): String = {
-    val decoded = java.net.URLDecoder.decode(rel, "UTF-8")
+    val decoded = decodePath(rel)
     val abs =
       if (decoded.startsWith("/") || decoded.contains("://")) decoded
       else Paths.get(table).toAbsolutePath.toString + "/" + decoded
@@ -519,13 +526,16 @@ object DeltaLog {
   /** A scanned row's file in [[absPath]]'s spelling, as a codegen
     * column expression (no Scala UDF): `_metadata.file_path` and
     * `input_file_name()` give the file's URI, so strip the `file:`
-    * scheme, URL-decode once and squeeze slashes. Positions and
-    * per-file metadata join on it in the Delta writers, the change
-    * feeds and the Iceberg readers.
+    * scheme, URI-decode once (a literal `+` stays a `+`, as in
+    * [[decodePath]]) and squeeze slashes. Positions and per-file
+    * metadata join on it in the Delta writers, the change feeds and
+    * the Iceberg readers.
     */
   private[sources] def canonPath(c: Column): Column =
     regexp_replace(
-      url_decode(regexp_replace(c, "^file:/*", "/")), "/+", "/")
+      url_decode(regexp_replace(
+        regexp_replace(c, "^file:/*", "/"), "\\+", "%2B")),
+      "/+", "/")
 
   /** The active-file frame of the snapshot: (file, one column per
     * partition key as STRING). Exposed for audits; `read` is the
@@ -535,24 +545,29 @@ object DeltaLog {
       spark: SparkSession, table: String,
       versionAsOf: Option[Long] = None): DataFrame = {
     val st = stateAt(spark, table, versionAsOf)
-    filesFrame(spark, table, st, st.active.values.toSeq)
+    filesFrame(spark, st, withAbsPaths(table, st.active.values.toSeq))
   }
 
-  /** (file, one STRING column per partition key) of `files`.
-    * Name-mapped tables key add.partitionValues by PHYSICAL name; the
-    * emitted columns stay logical (physName = the logical name on
-    * unmapped tables, so this is one code path).
+  /** Each file's (absolute path, partition values). */
+  private def withAbsPaths(
+      table: String, files: Seq[AddFile]): Seq[(String, Map[String, String])] =
+    files.map(a => absPath(table, a.path) -> a.partitionValues)
+
+  /** (file, one STRING column per partition key) of `files` —
+    * (absolute path, partition values) pairs. Name-mapped tables key
+    * add.partitionValues by PHYSICAL name; the emitted columns stay
+    * logical (physName = the logical name on unmapped tables, so
+    * this is one code path).
     */
   private def filesFrame(
-      spark: SparkSession, table: String, st: State,
-      files: Seq[AddFile]): DataFrame = {
+      spark: SparkSession, st: State,
+      files: Seq[(String, Map[String, String])]): DataFrame = {
     import spark.implicits._
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
     val physKeys = st.partitionCols.map(c =>
       schema.fields.find(_.name == c).map(physName).getOrElse(c))
     files
-      .map(a => (absPath(table, a.path),
-        physKeys.map(a.partitionValues.getOrElse(_, null))))
+      .map { case (f, pv) => (f, physKeys.map(pv.getOrElse(_, null))) }
       .toDF("file", "pv")
       .select(
         col("file") +:
@@ -632,12 +647,7 @@ object DeltaLog {
         DeltaRowTracking.scanForRewrite(
           spark, table, files, dataSchema, ridCol, rvcCol)
       case None =>
-        // listing-free scan over the log's exact file set (see
-        // graftext.KnownFiles — the replayed state IS the listing)
-        KnownFiles.parquetFrame(
-          spark, dataSchema, files.map(a => absPath(table, a.path)))
-          .select(col("*"), canonPath(col("_metadata.file_path")).as("__f"),
-            col("_metadata.row_index").as("__i"))
+        positioned(spark, dataSchema, files.map(a => absPath(table, a.path)))
     }
     val deleted: Seq[(String, Long)] = files.flatMap(a =>
       a.dv.toSeq.flatMap(d =>
@@ -651,26 +661,47 @@ object DeltaLog {
     }
   }
 
+  /** Every row of the parquet files at `paths` (absolute) under
+    * `dataSchema`, plus `__f` (its file, in [[absPath]]'s spelling)
+    * and `__i` (its row index in that file). Listing-free: the log's
+    * exact file set is the listing (graftext.KnownFiles).
+    */
+  private[sources] def positioned(
+      spark: SparkSession, dataSchema: StructType,
+      paths: Seq[String]): DataFrame =
+    KnownFiles.parquetFrame(spark, dataSchema, paths)
+      .select(col("*"), canonPath(col("_metadata.file_path")).as("__f"),
+        col("_metadata.row_index").as("__i"))
+
+  /** `rows` (carrying `__f`) with `st`'s partition columns re-attached
+    * at their declared types from `files` — (absolute path, partition
+    * values) pairs — through one broadcast join on the file, bounded
+    * by files.
+    */
+  private[sources] def withPartitions(
+      spark: SparkSession, st: State, rows: DataFrame,
+      files: Seq[(String, Map[String, String])]): DataFrame =
+    if (st.partitionCols.isEmpty) rows
+    else {
+      val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
+      val pv = filesFrame(spark, st, files).withColumnRenamed("file", "__pf")
+      st.partitionCols.foldLeft(
+        rows.join(broadcast(pv), col("__f") === col("__pf")).drop("__pf")) {
+        (d, c) => d.withColumn(c, col(c).cast(schema(c).dataType))
+      }
+    }
+
   /** [[livePositions]] of every active file with the partition
-    * columns re-attached from the log at their declared types (one
-    * broadcast join on the file, bounded by files): the table's live
-    * rows plus `__f`/`__i`.
+    * columns re-attached ([[withPartitions]]): the table's live rows
+    * plus `__f`/`__i`.
     */
   private[sources] def positionedScan(
       spark: SparkSession, table: String, st: State, dataSchema: StructType,
       rowIds: Option[(String, String)] = None): DataFrame = {
     val files = st.active.values.toSeq.sortBy(_.path)
-    val live = livePositions(spark, table, files, dataSchema, rowIds)
-    if (st.partitionCols.isEmpty) live
-    else {
-      val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
-      val pv = filesFrame(spark, table, st, files)
-        .withColumnRenamed("file", "__pf")
-      st.partitionCols.foldLeft(
-        live.join(broadcast(pv), col("__f") === col("__pf")).drop("__pf")) {
-        (d, c) => d.withColumn(c, col(c).cast(schema(c).dataType))
-      }
-    }
+    withPartitions(spark, st,
+      livePositions(spark, table, files, dataSchema, rowIds),
+      withAbsPaths(table, files))
   }
 
   /** The last `txn` version committed for `appId`, or None — the

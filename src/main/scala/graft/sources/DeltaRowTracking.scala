@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftext.KnownFiles
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Delta ROW TRACKING (PROTOCOL.md "Row Tracking") — the Delta-side
@@ -173,10 +172,9 @@ object DeltaRowTracking {
           else Seq(
             lit(null).cast(LongType).as("__mat_rid"),
             lit(null).cast(LongType).as("__mat_rvc"))
-        KnownFiles.parquetFrame(spark, readSchema, paths)
-          .select(dataSchema.fieldNames.map(col).toSeq ++ matCols ++ Seq(
-            DeltaLog.canonPath(col("_metadata.file_path")).as("__f"),
-            col("_metadata.row_index").as("__i")): _*)
+        DeltaLog.positioned(spark, readSchema, paths)
+          .select(dataSchema.fieldNames.map(col).toSeq ++ matCols ++
+            Seq(col("__f"), col("__i")): _*)
       }
     // per-file constants: ONE metadata-sized broadcast
     import spark.implicits._

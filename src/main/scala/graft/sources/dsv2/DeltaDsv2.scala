@@ -397,6 +397,18 @@ private[dsv2] case class DeltaDsv2Scan(
     kept
   }
 
+  /** [[keptFiles]] with each file's absolute path and size ON DISK,
+    * not add.size: a log whose size under-states the file (or logs
+    * none) would make the reader skip every row group past it
+    * without an error, and mislead the join planner. One stat per
+    * kept file; a missing file fails here, at planning.
+    */
+  private def keptOnDisk(): Seq[(DeltaLog.AddFile, String, Long)] =
+    keptFiles().map { a =>
+      val abs = DeltaLog.absPath(table, a.path)
+      (a, abs, Files.size(Paths.get(abs)))
+    }
+
   /** Post-pushdown statistics: Spark's join planner reads these to
     * auto-broadcast a selectively-filtered scan — at 100 TB this is
     * what turns "pruned dimension probe" into a broadcast join
@@ -410,13 +422,12 @@ private[dsv2] case class DeltaDsv2Scan(
         override def sizeInBytes() = java.util.OptionalLong.empty()
         override def numRows() = java.util.OptionalLong.empty()
       }
-    val kept = keptFiles()
-    val size = kept.map(a => a.size.getOrElse(
-      Files.size(Paths.get(DeltaLog.absPath(table, a.path))))).sum
+    val kept = keptOnDisk()
+    val size = kept.map(_._3).sum
     val rows: Option[Long] =
       try {
         val mapper = new ObjectMapper()
-        val counts = kept.map(_.stats.flatMap { js =>
+        val counts = kept.map(_._1.stats.flatMap { js =>
           Option(mapper.readTree(js).get("numRecords")).map(_.asLong())
         })
         if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
@@ -508,15 +519,7 @@ private[dsv2] case class DeltaDsv2Scan(
   private[dsv2] override def batchPartitions(): Array[InputPartition] =
     if (DeltaDsv2.isCdf(options)) cdfPartitions()
     else {
-      val kept = keptFiles()
-      // slices are cut from the file's size ON DISK, not add.size: a
-      // log whose size under-states the file would make the reader
-      // skip every row group past it without an error (and a missing
-      // file fails here, at planning)
-      val withSize = kept.map { a =>
-        val abs = DeltaLog.absPath(table, a.path)
-        (a, abs, Files.size(Paths.get(abs)))
-      }
+      val withSize = keptOnDisk()
       // large files split at Spark's own maxSplitBytes formula (r17):
       // one slice per FILE caps parallelism at the file count — a
       // 1 GB file must fan out like a native scan's row-group splits

@@ -54,6 +54,43 @@ class DeltaExportSpec extends SparkSpec {
     assert(got == Seq((1L, "a", morning), (3L, "c", evening)))
   }
 
+  test("a '+' in a partition value round-trips through readers and writers") {
+    val table = Files.createTempDirectory("delta_plus_part").resolve("t").toString
+    val df = Seq((1L, "a", "c++"), (2L, "b", "c++"), (3L, "c", "go"))
+      .toDF("id", "payload", "lang")
+    DeltaExport.create(df, table, partitionBy = Seq("lang"))
+    // Spark leaves '+' unescaped in the directory name; the log
+    // encodes it as %2B and keeps the value itself
+    val st = DeltaLog.stateAt(spark, table, None)
+    assert(st.active.values.map(_.partitionValues("lang")).toSet == Set("c++", "go"))
+    def got = rows(DeltaLog.read(spark, table))
+    assert(got == Seq((1L, "a", "c++"), (2L, "b", "c++"), (3L, "c", "go")))
+    assert(DeltaExport.deleteWhere(spark, table, col("id") === 1L).nonEmpty)
+    assert(got == Seq((2L, "b", "c++"), (3L, "c", "go")))
+    assert(rows(DeltaCdf.readChangeFeed(spark, table, 1L, Some(1L))) ==
+      Seq((1L, "a", "c++")))
+    assert(DeltaUpdate.updateWhere(spark, table, col("lang") === "c++",
+      Map("payload" -> lit("z"))).nonEmpty)
+    assert(got == Seq((2L, "z", "c++"), (3L, "c", "go")))
+  }
+
+  test("a '+' in the table root keeps deletion vectors applied in the writers") {
+    val table = Files.createTempDirectory("delta+root").resolve("t+1").toString
+    val df = Seq((1L, "a", "en"), (2L, "b", "en"), (3L, "c", "fr"))
+      .toDF("id", "payload", "lang")
+    DeltaExport.create(df, table, partitionBy = Seq("lang"))
+    def got = rows(DeltaLog.read(spark, table))
+    assert(DeltaExport.deleteWhere(spark, table, col("id") === 1L).nonEmpty)
+    assert(DeltaLog.stateAt(spark, table, None).active.values.exists(_.dv.nonEmpty))
+    assert(got == Seq((2L, "b", "en"), (3L, "c", "fr")))
+    // the vector already deletes the only matching row
+    assert(DeltaExport.deleteWhere(spark, table, col("id") === 1L).isEmpty)
+    // the rewrite must not bring the deleted row back
+    assert(DeltaUpdate.updateWhere(spark, table, col("lang") === "en",
+      Map("payload" -> lit("z"))).nonEmpty)
+    assert(got == Seq((2L, "z", "en"), (3L, "c", "fr")))
+  }
+
   test("append commits the next version; time travel sees the pre-append snapshot") {
     val table = Files.createTempDirectory("delta_ap").toString
     Files.delete(Paths.get(table))
