@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 object Bench {
 
@@ -96,25 +96,8 @@ object Bench {
     // of its numbers. The second (end) marker still shows the bench's
     // own sustained load, useful for spotting a neighbor mid-run.
     val loadPre = loadAvg()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Static conf, default 100 entries: with 94 registered queries at
-      // ~3-8 codegen units each, the shared generated-class cache
-      // thrashes under round-robin rep scheduling (every unit evicted
-      // between a query's reps → recompiled EVERY rep). Measured: the
-      // default cache made interleaved reps a uniform ~1.3-1.8× slower
-      // than back-to-back reps of identical plans. 10k entries holds
-      // the whole suite's classes (~1k) with room to grow.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession()
     // ERROR, not WARN: round-1's result line drowned in WARN chatter and
     // the driver recorded "parsed": null. Nothing below ERROR is signal
     // during a bench.

@@ -55,14 +55,14 @@ object Tables {
     val dt = e.schema("ts").dataType
     // The NTZ→LTZ cast interprets the wall clock in the session time
     // zone; anything but UTC silently shifts every event time, so fail
-    // loudly here rather than emit wrong windows (every engine entry
-    // point — Verify/Bench/Explain/SparkSpec — pins UTC).
+    // loudly here rather than emit wrong windows (GraftSession, the
+    // session of every entry point and of the tests, sets UTC).
     if (dt == TimestampNTZType) {
       val tz = s.conf.get("spark.sql.session.timeZone")
       require(tz == "UTC",
         s"events.ts is TIMESTAMP_NTZ and the session time zone is '$tz': " +
           "the epoch-µs derivation is only exact under UTC — set " +
-          "spark.sql.session.timeZone=UTC (the Verify/Bench discipline)")
+          "spark.sql.session.timeZone=UTC (as graft.GraftSession does)")
     }
     e.withColumn("tus", microsExpr(dt, "ts"))
   }

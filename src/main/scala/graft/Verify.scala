@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,59 +9,37 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); Spark 4 has no nanos type —
-      // read as epoch-nanos long (ordering-equivalent; queries never emit
-      // raw ts, see Dashboard.q6).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Materialize the warehouse parquet the wh_* oracle SQL reads
-    // (WarehouseQueries.DumpPath) — must land before the driver's
-    // DuckDB pass runs oracle_sql.json.
-    try graft.queries.WarehouseQueries.dumpWarehouse(spark)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] warehouse dump failed: ${e.getMessage}")
-    }
-    // Dump the fitted k-means centroids the s5 oracle reads — the fit
-    // is session-cached, so the s5 query below scores against exactly
-    // the dumped values.
-    try graft.queries.Similarity.dumpCentroids(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] centroid dump failed: ${e.getMessage}")
-    }
-    // Dump the trained PQ codebooks the s7 oracle reads — same
-    // session-cache-then-dump discipline as the centroids.
-    try graft.queries.Similarity.dumpResPqCodebooks(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] residual codebook dump failed: ${e.getMessage}")
-    }
-    try graft.queries.Similarity.dumpPqCodebooks(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] pq codebook dump failed: ${e.getMessage}")
-    }
-    // Dump the x20 bloom bytes BEFORE the query pass (r10 verdict #1):
-    // with the file present, x20's registered path runs zero
-    // stat.bloomFilter jobs — the bloom is read like any other
-    // fit-time dump.
-    try graft.queries.Extended.dumpBloom(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] x20 bloom dump failed: ${e.getMessage}")
-    }
-    // Author the lakehouse tables (Delta DV / Iceberg v2 deletes /
-    // SCD2 MERGE dim) BEFORE the query pass — x22/x23/w23 then read
-    // them like any other fit-time dump.
-    try graft.queries.LakehouseScan.dumpTables(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] lakehouse table dump failed: ${e.getMessage}")
-    }
+    // Fit-time dumps, in order, before the query pass. A failed dump is
+    // reported on stderr and the next one still runs.
+    val dumps: Seq[(String, () => Unit)] = Seq(
+      // The warehouse parquet the wh_* oracle SQL reads
+      // (WarehouseQueries.DumpPath): it must land before the driver's
+      // DuckDB pass runs oracle_sql.json.
+      "warehouse" -> (() => graft.queries.WarehouseQueries.dumpWarehouse(spark)),
+      // The fitted k-means centroids the s5 oracle reads: the fit is
+      // session-cached, so the s5 query scores against exactly the
+      // dumped values.
+      "centroid" -> (() => graft.queries.Similarity.dumpCentroids(spark, sfDir)),
+      // The trained PQ codebooks the s7 oracle reads: the same
+      // session-cache-then-dump discipline as the centroids.
+      "residual codebook" ->
+        (() => graft.queries.Similarity.dumpResPqCodebooks(spark, sfDir)),
+      "pq codebook" -> (() => graft.queries.Similarity.dumpPqCodebooks(spark, sfDir)),
+      // The x20 bloom bytes: with the file present, x20's registered
+      // path runs zero stat.bloomFilter jobs; the bloom is read like
+      // any other fit-time dump.
+      "x20 bloom" -> (() => graft.queries.Extended.dumpBloom(spark, sfDir)),
+      // The lakehouse tables (Delta DV / Iceberg v2 deletes / SCD2
+      // MERGE dim): x22/x23/w23 then read them like any other dump.
+      "lakehouse table" -> (() => graft.queries.LakehouseScan.dumpTables(spark, sfDir)))
+    for ((label, dump) <- dumps)
+      try dump()
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $label dump failed: ${e.getMessage}")
+      }
     // One retry per query: a missing parquet dir silently drops the
     // query from the driver's correctness artifact (this is how
     // x20_bloom_join lost its r9 row to a transient failure), so a

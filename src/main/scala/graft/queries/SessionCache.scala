@@ -15,22 +15,6 @@ object SessionCache {
   private val planCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
-  /** NOT computeIfAbsent: cache builds nest (clusterLabels → sigs →
-    * shingles → words), and a mapping function that updates other
-    * mappings violates the CHM contract (same-bin recursion throws
-    * "Recursive update"). Double-checked locking instead (r18): the old
-    * check-then-putIfAbsent let a RACING duplicate build lose and call
-    * `unpersist()` — but CacheManager.uncacheQuery matches by
-    * sameResult, so the loser's unpersist silently removed the
-    * WINNER's entry too: the frame stayed in planCache but was no
-    * longer cached, and every later consumer recomputed it (observed as
-    * nondeterministic cache-substitution loss under parallel test
-    * suites; reachable in production paths since the s18/d25/p16/p26
-    * compositions build components from a thread pool). The coarse
-    * lock is reentrant, so nested builds on one thread still work;
-    * builds only CONSTRUCT plans (materialization happens lazily,
-    * outside the lock), so the serialization cost is microseconds.
-    */
   /** Optional access recorder for WarmPolicySpec: queries that hide a
     * cache behind an in-query localCheckpoint (s18/d25) consume it at
     * CONSTRUCTION time, invisibly to a plan walk — the recorder makes
@@ -47,6 +31,26 @@ object SessionCache {
       spark: SparkSession, dir: String, name: String): DataFrame =
     planCache.get((spark, dir, name))
 
+  /** NOT computeIfAbsent: cache builds nest (clusterLabels → sigs →
+    * shingles → words), and a mapping function that updates other
+    * mappings violates the CHM contract (same-bin recursion throws
+    * "Recursive update"). Double-checked locking instead (r18): the old
+    * check-then-putIfAbsent let a RACING duplicate build lose and call
+    * `unpersist()` — but CacheManager.uncacheQuery matches by
+    * sameResult, so the loser's unpersist silently removed the
+    * WINNER's entry too: the frame stayed in planCache but was no
+    * longer cached, and every later consumer recomputed it (observed as
+    * nondeterministic cache-substitution loss under parallel test
+    * suites; reachable in production paths since the s18/d25/p16/p26
+    * compositions build components from a thread pool). The coarse
+    * lock is reentrant, so nested builds on one thread still work.
+    *
+    * The lock is JVM-wide and held for the whole `build`, and some
+    * builds run Spark jobs: `Similarity.cachedCentroids` →
+    * `kmeansFit` runs a `collect` to seed and one per Lloyd round, so
+    * every other thread that misses the cache waits for those jobs.
+    * ROADMAP item 5 plans per-key in-flight builds instead.
+    */
   def cached(spark: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame = {
     val log = accessLog

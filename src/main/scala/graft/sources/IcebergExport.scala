@@ -11,6 +11,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
 
 /** Write-side complement of [[IcebergTable]]: export DataFrames AS an
@@ -563,15 +564,16 @@ object IcebergExport {
   }
 
   /** Hive `k=v/` dirs of a staged relative path → raw partition
-    * values (URL-decoded, null marker preserved as the marker string
-    * for [[partAvroValue]] to null out).
+    * values (un-escaped the way Spark escapes directory names, so a
+    * `+` stays a `+`; null marker preserved as the marker string for
+    * [[partAvroValue]] to null out).
     */
   private def hivePartValues(
       rel: String, partitionBy: Seq[String]): Map[String, Option[String]] = {
     val kv = rel.split('/').dropRight(1).flatMap { d =>
       val i = d.indexOf('=')
       if (i > 0)
-        Some(d.take(i) -> java.net.URLDecoder.decode(d.drop(i + 1), "UTF-8"))
+        Some(d.take(i) -> ExternalCatalogUtils.unescapePathName(d.drop(i + 1)))
       else None
     }.toMap
     partitionBy.map { c =>

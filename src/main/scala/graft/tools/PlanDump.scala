@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `.explain("formatted")` for every registered query (or a
@@ -10,10 +9,10 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.tools.PlanDump <outDir> [suffix] [names]
   *   suffix: appended to the file name, e.g. "_before" → q1_before.txt
   *   names:  comma-separated query keys; default all.
+  * `PlanDump <outDir> "" <name>` writes one query's plan.
   *
-  * Session config mirrors Bench.scala exactly (extensions, AQE, shuffle
-  * partitions = SPARK_GRAFT_CPUS) so the dumped plans are the plans the
-  * bench actually runs.
+  * It runs in [[graft.GraftSession]], so the dumped plans are the plans
+  * the bench runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,18 +20,8 @@ object PlanDump {
     val suffix = if (args.length > 1) args(1) else ""
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val sfDir = graft.GraftSession.sfDir
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     try graft.queries.SessionCache.warm(spark, sfDir)
     catch { case e: Throwable => System.err.println(s"[plandump] warm: ${e.getMessage}") }

@@ -38,15 +38,13 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Cores of the shared test session, whatever `SPARK_GRAFT_CPUS` says:
+    * plan shapes and partition counts the suites assert depend on it.
+    */
+  val Cores = 4
+
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = GraftSession(Cores)
     s.sparkContext.setLogLevel("WARN")
     s
   }

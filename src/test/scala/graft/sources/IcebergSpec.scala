@@ -325,6 +325,19 @@ class IcebergSpec extends SparkSpec {
     assert(e.getMessage.contains("identity-partition source type"), e.getMessage)
   }
 
+  test("a '+' in a partition value reads back as '+' through both read paths") {
+    val t = tmpTable()
+    import spark.implicits._
+    IcebergExport.create(
+      Seq((1L, "c++"), (2L, "a b"), (3L, "x")).toDF("id", "p"), t, Seq("p"))
+    val want = Seq((1L, "c++"), (2L, "a b"), (3L, "x"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rows(IcebergTable.read(spark, t).select("id", "p")) == want)
+    assert(rows(spark.read.format("graft-iceberg").load(t).select("id", "p")) == want)
+    assert(rows(IcebergTable.read(spark, t).filter($"p" === "c++")) == Seq((1L, "c++")))
+  }
+
   test("append refuses a mismatched schema before staging a byte") {
     val t = tmpTable()
     import spark.implicits._
