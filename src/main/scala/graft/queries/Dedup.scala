@@ -1683,48 +1683,30 @@ object Dedup {
     */
   def dedupEval(spark: SparkSession, dir: String): DataFrame = {
     // r18 opt (the s18 discipline): the d2 truth pairs and each
-    // method pipeline are materialized once per eval execution via
-    // lazy localCheckpoint. The truth sliver was session-cached in
-    // r17 ("jaccardTruthPairs") — d25 is its ONLY consuming query, so
-    // the cache moved d2's band join into Bench's untimed warmup;
-    // reverted to an in-query checkpoint (the warmFrames
-    // ≥2-consuming-queries rule, WarmPolicySpec). Still computed once
-    // per execution, consumed four times (three hit joins + the
-    // total).
-    // CONCURRENT component materialization (guide §2.6 — see
-    // Similarity.retrievalEval for the measured rationale): under AQE
-    // the lazy checkpoint runs its stages at construction, so the four
-    // components are built from a thread pool to overlap their
-    // independent stage DAGs instead of running them back-to-back.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val truthF = Future {
-      ngramJaccard(spark, dir)
-        .select(col("a_id"), col("b_id"))
-        .localCheckpoint(eager = false)
-    }
-    val methodFs: Seq[(String, Future[DataFrame])] = Seq(
+    // method pipeline are materialized once per eval execution as
+    // concurrent components (Components). The truth sliver was
+    // session-cached in r17 ("jaccardTruthPairs") — d25 is its ONLY
+    // consuming query, so the cache moved d2's band join into Bench's
+    // untimed warmup; reverted to an in-query checkpoint (the
+    // warmFrames ≥2-consuming-queries rule, WarmPolicySpec). Still
+    // computed once per execution, consumed four times (three hit
+    // joins + the total).
+    val pairLists: Seq[(String, () => DataFrame)] = Seq(
+      "d2_truth" -> (() => ngramJaccard(spark, dir)),
       "d3_minhash_lsh" -> (() => minhashLsh(spark, dir)),
       "d6_simhash_neardup" -> (() => simhashNearDup(spark, dir)),
-      "d12_winnow_pairs" -> (() => winnowPairs(spark, dir))
-    ).map { case (n, build) =>
-      n -> Future {
-        build()
-          .select(col("a_id"), col("b_id"))
-          .localCheckpoint(eager = false)
-      }
-    }
-    val truth = Await.result(truthF, Duration.Inf)
-    val methods: Map[String, DataFrame] =
-      methodFs.map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
+      "d12_winnow_pairs" -> (() => winnowPairs(spark, dir)))
+    val parts = Components.materialize(spark)(pairLists.map { case (n, build) =>
+      n -> (() => build().select(col("a_id"), col("b_id")))
+    }: _*)
+    val truth = parts("d2_truth")
     DedupEvalMethods.map { n =>
       // ONE evaluation of the method's pipeline per report row: a
       // broadcast left join marks hits in the same pass that counts
       // predictions (the two-branch form re-ran d6's whole banding
       // chain for each of its two aggregates — measured 3.5 s → 2 s
       // at sf0.1 from this alone)
-      methods(n)
+      parts(n)
         .join(
           broadcast(truth.withColumn("__t", lit(1))),
           Seq("a_id", "b_id"), "left")

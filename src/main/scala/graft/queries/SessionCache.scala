@@ -1,110 +1,99 @@
 package graft.queries
 
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionException}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One persisted copy per (session, dir, name) of the intermediate
   * frames that feed several plan branches within a query AND repeat
   * across queries (shingles feed d2/d3/d7; quality metrics feed
-  * p1–p5; words feed nearly every text query). Round 1 persisted them
+  * p1–p5; words feed nearly every text query), and one value per key
+  * of driver-held control data (`memo`). Round 1 persisted frames
   * per-invocation, which re-cached a fresh copy every call and never
   * unpersisted ("already cached" warnings, cache growth across a
-  * multi-query bench). One persisted copy per session is the fix.
+  * multi-query bench).
+  *
+  * One locking rule for both: each key is built ONCE. The first caller
+  * of a key builds it on its own thread, outside any shared lock; a
+  * concurrent caller of the same key waits for that build only, and
+  * callers of other keys never wait for it. A build that throws leaves
+  * no entry (its waiters see the exception, the next call rebuilds).
+  * Builds may nest on other keys (clusterLabels → sigs → shingles →
+  * words, x20BloomBytes → x20Bloom): the cache graph is a DAG, so no
+  * build waits on itself. Some builds run Spark jobs
+  * (`Similarity.cachedCentroids` → `kmeansFit` collects per Lloyd
+  * round) and now hold up only the callers of their own key. Entries
+  * live for the JVM.
   */
 object SessionCache {
 
-  private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  private type Key = (SparkSession, String, String)
+
+  private val entries = new ConcurrentHashMap[Key, CompletableFuture[Any]]()
+
+  /** The value of `key`, built by `build` on this thread if no other
+    * caller holds or is building it. A build that throws removes its
+    * entry before failing its waiters, so a waiter that retries builds
+    * afresh.
+    */
+  private def once(key: Key)(build: => Any): Any = {
+    val mine = new CompletableFuture[Any]
+    val held = entries.putIfAbsent(key, mine)
+    if (held != null)
+      try held.get()
+      catch { case e: ExecutionException => throw e.getCause }
+    else
+      try {
+        val v = build
+        mine.complete(v)
+        v
+      } catch {
+        case t: Throwable =>
+          entries.remove(key, mine)
+          mine.completeExceptionally(t)
+          throw t
+      }
+  }
 
   /** Optional access recorder for WarmPolicySpec: queries that hide a
     * cache behind an in-query localCheckpoint (s18/d25) consume it at
     * CONSTRUCTION time, invisibly to a plan walk — the recorder makes
-    * that consumption countable. Off (null) outside the spec.
+    * that consumption countable. It records (dir, name), so a spec
+    * counts only the accesses under its own dir. Off (null) outside
+    * the spec.
     */
   @volatile private[queries] var accessLog:
-      java.util.concurrent.ConcurrentLinkedQueue[String] = null
+      java.util.concurrent.ConcurrentLinkedQueue[(String, String)] = null
 
   /** The already-persisted frame for a cache name, or null — lets
     * WarmPolicySpec expand a recorded access into the warm caches
     * nested inside that cache's build plan.
     */
   private[queries] def existing(
-      spark: SparkSession, dir: String, name: String): DataFrame =
-    planCache.get((spark, dir, name))
+      spark: SparkSession, dir: String, name: String): DataFrame = {
+    val f = entries.get((spark, dir, name))
+    if (f == null || !f.isDone || f.isCompletedExceptionally) null
+    else f.join().asInstanceOf[DataFrame]
+  }
 
-  /** NOT computeIfAbsent: cache builds nest (clusterLabels → sigs →
-    * shingles → words), and a mapping function that updates other
-    * mappings violates the CHM contract (same-bin recursion throws
-    * "Recursive update"). Double-checked locking instead (r18): the old
-    * check-then-putIfAbsent let a RACING duplicate build lose and call
-    * `unpersist()` — but CacheManager.uncacheQuery matches by
-    * sameResult, so the loser's unpersist silently removed the
-    * WINNER's entry too: the frame stayed in planCache but was no
-    * longer cached, and every later consumer recomputed it (observed as
-    * nondeterministic cache-substitution loss under parallel test
-    * suites; reachable in production paths since the s18/d25/p16/p26
-    * compositions build components from a thread pool). The coarse
-    * lock is reentrant, so nested builds on one thread still work.
-    *
-    * The lock is JVM-wide and held for the whole `build`, and some
-    * builds run Spark jobs: `Similarity.cachedCentroids` →
-    * `kmeansFit` runs a `collect` to seed and one per Lloyd round, so
-    * every other thread that misses the cache waits for those jobs.
-    * ROADMAP item 5 plans per-key in-flight builds instead.
-    */
+  /** The session's persisted copy of `build`, built once per key. */
   def cached(spark: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame = {
     val log = accessLog
-    if (log != null) log.add(name)
-    val key = (spark, dir, name)
-    val existing = planCache.get(key)
-    if (existing != null) existing
-    else planCache.synchronized {
-      val again = planCache.get(key)
-      if (again != null) again
-      else {
-        val df = build.persist()
-        planCache.put(key, df)
-        df
-      }
-    }
+    if (log != null) log.add((dir, name))
+    once((spark, dir, name))(build.persist()).asInstanceOf[DataFrame]
   }
-
-  private val valueCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Any]()
 
   /** Session-scoped memo for driver-held CONTROL DATA — the
     * non-DataFrame sibling of `cached`: fit statistics (s6's per-dim
     * min/max), broadcast handles (p10's Bloom filter), corpus counts
     * (the d5 guard). One keying discipline instead of a hand-rolled
-    * ConcurrentHashMap per module.
-    *
-    * NOT computeIfAbsent (r15): memo builds DO nest — x20BloomBytes
-    * falls back to the x20Bloom memo when the Verify dump is absent —
-    * and a mapping function updating another mapping violates the CHM
-    * contract whenever the two keys share a hash bin ("Recursive
-    * update", which fired NONDETERMINISTICALLY in a bench run: bin
-    * assignment depends on table capacity, so the nesting was latent
-    * until the key population shifted). Same check-then-putIfAbsent
-    * as `cached`; a racing duplicate build loses benignly (builds are
-    * deterministic fits). Entries live for the JVM, like every
-    * session cache in this file.
+    * ConcurrentHashMap per module, and one build per key: a broadcast
+    * or a persisted warehouse is made once however many threads miss
+    * the key together.
     */
-  def memo[T](spark: SparkSession, dir: String, name: String)(build: => T): T = {
-    val key = (spark, dir, name)
-    val existing = valueCache.get(key)
-    if (existing != null) existing.asInstanceOf[T]
-    else {
-      val v = build
-      // CHM rejects null values (putIfAbsent would NPE): a
-      // null-producing build degrades to UNCACHED — returned as-is,
-      // rebuilt on the next call — rather than crashing the caller
-      if (v == null) v
-      else {
-        val prev = valueCache.putIfAbsent(key, v.asInstanceOf[Any])
-        if (prev != null) prev.asInstanceOf[T] else v
-      }
-    }
-  }
+  def memo[T](spark: SparkSession, dir: String, name: String)(build: => T): T =
+    once((spark, dir, name))(build).asInstanceOf[T]
 
   /** Every frame `warm` materializes, NAMED (cache key under `cached`)
     * — exposed so WarmPolicySpec can pin the admission rule below.

@@ -1968,15 +1968,13 @@ object Similarity {
   def retrievalEval(spark: SparkSession, dir: String): DataFrame = {
     // r18 opt (guide §5 recompute↔storage, §3.3 plan-size note): the
     // exact ground truth AND each variant pipeline are materialized
-    // once per eval execution via localCheckpoint(eager = false) — the
-    // q6 discipline; under AQE each one runs its shuffle stages while
-    // the eval's DataFrame is being built (see Dedup.dedupEval).
-    // Before, ONE union plan embedded all nine variant
-    // pipelines plus the exact set's cache scan (3 702 formatted plan
-    // lines) and the driver spent ~0.8 s/invocation in pure ANALYSIS
-    // (PhaseBench build phase); with per-component checkpoints the
-    // final plan is nine `Scan ExistingRDD` semi-joins and each
-    // component subtree is analyzed once, separately.
+    // once per eval execution as concurrent components (Components).
+    // Before, ONE union plan embedded all nine variant pipelines plus
+    // the exact set's cache scan (3 702 formatted plan lines) and the
+    // driver spent ~0.8 s/invocation in pure ANALYSIS; with
+    // per-component checkpoints the final plan is nine
+    // `Scan ExistingRDD` semi-joins and each component subtree is
+    // analyzed once, separately.
     //
     // The exact set was session-cached in r17 ("s1TopkPairs") — that
     // moved its build into Bench's UNTIMED warmup even though s18 is
@@ -1985,27 +1983,8 @@ object Similarity {
     // ≥2-consuming-queries rule, WarmPolicySpec); it is still computed
     // only once per execution and consumed ten times (nine hit joins +
     // the total).
-    //
-    // CONCURRENT component materialization (guide §2.6 "overlap
-    // independent jobs"): under AQE, `localCheckpoint(eager=false)`
-    // executes the plan's shuffle stages at CONSTRUCTION time (the
-    // adaptive root materializes every exchange before handing out its
-    // RDD), so checkpointing the ten components one after another ran
-    // their pipelines back-to-back — measured s18 3.53 s vs 2.31 s for
-    // the single-plan form. Building them from a thread pool overlaps
-    // the ten independent stage DAGs on the executor (each component's
-    // tail back-fills with the next one's tasks) while keeping each
-    // component's ANALYSIS small and separate — the driver no longer
-    // optimizes one 3 700-line union tree per invocation.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val exF = Future {
-      bruteForceTopK(spark, dir)
-        .select(col("q_id"), col("vec_id"))
-        .localCheckpoint(eager = false)
-    }
-    val variantFs: Seq[(String, Future[DataFrame])] = Seq(
+    val topKs: Seq[(String, () => DataFrame)] = Seq(
+      "s1_exact" -> (() => bruteForceTopK(spark, dir)),
       "s3_ivf_topk" -> (() => ivfTopK(spark, dir)),
       "s6_sq8_topk" -> (() => sq8TopK(spark, dir)),
       "s7_pq_topk" -> (() => pqTopK(spark, dir)),
@@ -2014,19 +1993,13 @@ object Similarity {
       "s15_srp_lsh_topk" -> (() => srpLshTopK(spark, dir)),
       "s16_ivf_respq_topk" -> (() => ivfResidualPqTopK(spark, dir)),
       "s19_srp_multi_topk" -> (() => srpMultiTopK(spark, dir)),
-      "s20_sq4_topk" -> (() => sq4TopK(spark, dir))
-    ).map { case (n, build) =>
-      n -> Future {
-        build()
-          .select(col("q_id"), col("vec_id"))
-          .localCheckpoint(eager = false)
-      }
-    }
-    val ex = Await.result(exF, Duration.Inf)
-    val variantDfs: Map[String, DataFrame] =
-      variantFs.map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
+      "s20_sq4_topk" -> (() => sq4TopK(spark, dir)))
+    val parts = Components.materialize(spark)(topKs.map { case (n, topK) =>
+      n -> (() => topK().select(col("q_id"), col("vec_id")))
+    }: _*)
+    val ex = parts("s1_exact")
     EvalVariants.map { n =>
-      variantDfs(n)
+      parts(n)
         .join(broadcast(ex), Seq("q_id", "vec_id"), "left_semi")
         .agg(count(lit(1)).as("n_hits"))
         .select(lit(n).as("variant"), col("n_hits"))

@@ -828,60 +828,9 @@ object TrainingSet {
     * (flagged docs), and AQE broadcasts the anti-join build side. One
     * Expand pass emits both report grains.
     */
-  def releasePipeline(spark: SparkSession, dir: String): DataFrame = {
-    // CONCURRENT gate materialization (guide §2.6 — see
-    // Similarity.retrievalEval for the measured rationale): the three
-    // gate slivers are independent doc_id projections; lazy
-    // localCheckpoints built from a thread pool overlap their stage
-    // DAGs and keep each gate's analysis separate, instead of one
-    // plan that runs them serially stage-by-stage.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // the gates consume the components' UNSORTED frames — embedding
-    // the registered queries froze their output rangepartitioning
-    // sorts into the checkpoints, paid for nothing (the composition
-    // re-keys on doc_id)
-    val survivorsF = Future {
-      Dedup.exactDedupFrame(spark, dir)
-        .select(col("keep_id").as("doc_id"))
-        .localCheckpoint(eager = false)
-    }
-    val qualityF = Future {
-      TextOps.c4FiltersFrame(spark, dir)
-        .filter(col("keep")).select(col("doc_id"))
-        .localCheckpoint(eager = false)
-    }
-    val contamF = Future {
-      contaminationFrame(spark, dir).select(col("doc_id"))
-        .localCheckpoint(eager = false)
-    }
-    val survivors = Await.result(survivorsF, Duration.Inf)
-    val qualityKept = Await.result(qualityF, Duration.Inf)
-    val contaminated = Await.result(contamF, Duration.Inf)
-    val released = survivors
-      .join(qualityKept, Seq("doc_id"))
-      .filter(col("doc_id") >= BenchmarkDocs)
-      .join(contaminated, Seq("doc_id"), "left_anti")
-    documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .join(released, Seq("doc_id"))
-      .join(
-        TextOps.cachedQualityScore(spark, dir)
-          .select(col("doc_id"), col("n_tokens")),
-        Seq("doc_id"))
-      .withColumn("shard", shardOf(col("doc_id")))
-      .withColumn("term", digestTerm)
-      .rollup(col("shard"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        expr("bit_xor(term)").as("digest"))
-      .select(
-        coalesce(col("shard"), lit(-1L)).as("shard"),
-        col("n_docs"), col("n_tokens"), col("digest"))
-      .orderBy(col("shard"))
-  }
+  def releasePipeline(spark: SparkSession, dir: String): DataFrame =
+    release(spark, dir, () =>
+      TextOps.c4FiltersFrame(spark, dir).filter(col("keep")).select(col("doc_id")))
 
   /** p26 — the LEARNED-gate release pipeline (r12): p16's capstone
     * with the hand-written C4 rule conjunction (t12) swapped for the
@@ -898,32 +847,31 @@ object TrainingSet {
     * zero driver-side data; all composition joins are narrow doc_id
     * projections.
     */
-  def learnedReleasePipeline(spark: SparkSession, dir: String): DataFrame = {
-    // same concurrent-gate shape as releasePipeline (guide §2.6)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val survivorsF = Future {
-      Dedup.exactDedupFrame(spark, dir)
-        .select(col("keep_id").as("doc_id"))
-        .localCheckpoint(eager = false)
-    }
-    val learnedF = Future {
+  def learnedReleasePipeline(spark: SparkSession, dir: String): DataFrame =
+    release(spark, dir, () =>
       TextOps.qualityClassifierFrame(spark, dir)
-        .filter(col("pred_head")).select(col("doc_id"))
-        .localCheckpoint(eager = false)
-    }
-    val contamF = Future {
-      contaminationFrame(spark, dir).select(col("doc_id"))
-        .localCheckpoint(eager = false)
-    }
-    val survivors = Await.result(survivorsF, Duration.Inf)
-    val learnedKept = Await.result(learnedF, Duration.Inf)
-    val contaminated = Await.result(contamF, Duration.Inf)
-    val released = survivors
-      .join(learnedKept, Seq("doc_id"))
+        .filter(col("pred_head")).select(col("doc_id")))
+
+  /** The release receipt of p16 and p26, which differ only in the
+    * quality gate: `qualityKept` is the doc_ids it keeps.
+    */
+  private def release(
+      spark: SparkSession, dir: String,
+      qualityKept: () => DataFrame): DataFrame = {
+    // the three gates are independent doc_id projections, built as
+    // concurrent components (Components). They consume the
+    // components' UNSORTED frames — embedding the registered queries
+    // froze their output rangepartitioning sorts into the checkpoints,
+    // paid for nothing (the composition re-keys on doc_id)
+    val gates = Components.materialize(spark)(
+      "survivors" -> (() =>
+        Dedup.exactDedupFrame(spark, dir).select(col("keep_id").as("doc_id"))),
+      "quality" -> qualityKept,
+      "contaminated" -> (() => contaminationFrame(spark, dir).select(col("doc_id"))))
+    val released = gates("survivors")
+      .join(gates("quality"), Seq("doc_id"))
       .filter(col("doc_id") >= BenchmarkDocs)
-      .join(contaminated, Seq("doc_id"), "left_anti")
+      .join(gates("contaminated"), Seq("doc_id"), "left_anti")
     documents(spark, dir)
       .select(col("doc_id"), col("text"))
       .join(released, Seq("doc_id"))

@@ -2441,10 +2441,7 @@ object DeltaExport {
       else spark.read
         .schema(StructType.fromDDL("file_path STRING, pos BIGINT"))
         .parquet(posDeletes: _*)
-        .collect().map(r => (
-          java.net.URLDecoder.decode(
-            r.getString(0).replaceFirst("^file:/*", "/"), "UTF-8"),
-          r.getLong(1))).toSeq
+        .collect().map(r => (DeltaLog.canonFile(r.getString(0)), r.getLong(1))).toSeq
     val dvPairs: Seq[(String, Long)] = deletes
       .filter(d => d.content == 1 && d.format == "PUFFIN")
       .flatMap { d =>
@@ -2454,9 +2451,9 @@ object DeltaExport {
             s"puffin DV without content offsets in ${d.path}")
         }
         Puffin.dvBlobIndexes(blob)
-          .map(i => (d.referencedDataFile.getOrElse(
+          .map(i => (DeltaLog.canonFile(d.referencedDataFile.getOrElse(
             throw new IllegalStateException(
-              s"puffin DV entry without referenced-data-file in ${d.path}")),
+              s"puffin DV entry without referenced-data-file in ${d.path}"))),
             i))
       }
     val byFile: Map[String, Array[Long]] = (posPairs ++ dvPairs)
@@ -2478,7 +2475,7 @@ object DeltaExport {
     val desired = entries.map { e =>
       Want(relOf(e.path), e.path,
         partitionCols.map(c => c -> e.pv.getOrElse(c, None)),
-        byFile.getOrElse(e.path, Array.empty[Long]))
+        byFile.getOrElse(DeltaLog.canonFile(e.path), Array.empty[Long]))
     }
     def pvJson(pv: Seq[(String, Option[String])]): String =
       pv.sortBy(_._1).map { case (k, v) =>

@@ -520,22 +520,32 @@ object DeltaLog {
     val abs =
       if (decoded.startsWith("/") || decoded.contains("://")) decoded
       else Paths.get(table).toAbsolutePath.toString + "/" + decoded
-    abs.replaceFirst("^file:/*", "/").replaceAll("/+", "/")
+    canonFile(abs)
   }
 
   /** A scanned row's file in [[absPath]]'s spelling, as a codegen
     * column expression (no Scala UDF): `_metadata.file_path` and
-    * `input_file_name()` give the file's URI, so strip the `file:`
-    * scheme, URI-decode once (a literal `+` stays a `+`, as in
-    * [[decodePath]]) and squeeze slashes. Positions and per-file
-    * metadata join on it in the Delta writers, the change feeds and
-    * the Iceberg readers.
+    * `input_file_name()` give the file's URI, so URI-decode it once (a
+    * literal `+` stays a `+`, as in [[decodePath]]), then spell it as
+    * [[canonFile]] does. Positions and per-file metadata join on it in
+    * the Delta writers, the change feeds and the Iceberg readers.
     */
   private[sources] def canonPath(c: Column): Column =
-    regexp_replace(
-      url_decode(regexp_replace(
-        regexp_replace(c, "^file:/*", "/"), "\\+", "%2B")),
-      "/+", "/")
+    canonFile(url_decode(regexp_replace(c, "\\+", "%2B")))
+
+  /** An Iceberg metadata path (manifest entry, position-delete
+    * `file_path`, puffin `referenced-data-file`) in [[absPath]]'s
+    * spelling. Iceberg names a file as it is on disk (a Hive-escaped
+    * `a%25b` directory stays `a%25b`, a `c++` one stays `c++`), so
+    * only the `file:` scheme goes and slashes squeeze: decoding it
+    * would name a file that does not exist.
+    */
+  private[sources] def canonFile(p: String): String =
+    p.replaceFirst("^file:/*", "/").replaceAll("/+", "/")
+
+  /** [[canonFile]] as a column expression. */
+  private[sources] def canonFile(c: Column): Column =
+    regexp_replace(regexp_replace(c, "^file:/*", "/"), "/+", "/")
 
   /** The active-file frame of the snapshot: (file, one column per
     * partition key as STRING). Exposed for audits; `read` is the

@@ -186,7 +186,7 @@ object IcebergChangelog {
         def pairsOf(paths: Seq[String]): Option[DataFrame] =
           if (paths.isEmpty) None
           else Some(spark.read.schema(posSchema).parquet(paths: _*)
-            .select(DeltaLog.canonPath(col("file_path")).as("__cl_f"),
+            .select(DeltaLog.canonFile(col("file_path")).as("__cl_f"),
               col("pos").as("__cl_i")))
         val dvP = parentSnap.map(p => dvPositions(table, meta, p))
           .getOrElse(Map.empty[String, Array[Long]])

@@ -1528,7 +1528,7 @@ object IcebergTable {
             .schema(StructType.fromDDL("file_path STRING, pos BIGINT"))
             .parquet(posDeletes: _*)
             .select(
-              DeltaLog.canonPath(col("file_path")).as("__del_f"),
+              DeltaLog.canonFile(col("file_path")).as("__del_f"),
               col("pos").as("__del_i")))
         val dvDel =
           if (dvFiles.isEmpty) None

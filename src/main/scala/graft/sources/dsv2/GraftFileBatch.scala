@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{DeleteAccess, DeltaDv, Puffin}
+import graft.sources.{DeleteAccess, DeltaDv, DeltaLog, Puffin}
 
 /** Shared executor-side machinery of the lakehouse DataSourceV2
   * connectors ([[DeltaTableProvider]] / [[IcebergTableProvider]]):
@@ -155,13 +155,11 @@ private[dsv2] object GraftFileBatch {
           val blob = (s.offset, s.length) match {
             case (Some(off), Some(len)) => Puffin.readBlob(s.path, off, len)
             case _ =>
-              def canon(p: String) = java.net.URLDecoder
-                .decode(p.replaceFirst("^file:/*", "/"), "UTF-8")
-                .replaceAll("/+", "/")
               val metaBlob = Puffin.readFooter(s.path)
                 .find(b => b.tpe == "deletion-vector-v1" &&
                   b.properties.get("referenced-data-file")
-                    .map(canon).contains(canon(s.referencedDataFile)))
+                    .map(p => DeltaLog.canonFile(p))
+                    .contains(DeltaLog.canonFile(s.referencedDataFile)))
                 .getOrElse(throw new IllegalStateException(
                   s"no deletion-vector-v1 blob for " +
                     s"${s.referencedDataFile} in ${s.path}"))
@@ -181,11 +179,8 @@ private[dsv2] object GraftFileBatch {
         DeleteAccess.contentReads.incrementAndGet()
         val pf = org.apache.spark.sql.graftext.ParquetReadBridge
           .wholeFile(emptyRow, f.path, f.length, 0L)
-        def canon(p: String) = java.net.URLDecoder
-          .decode(p.replaceFirst("^file:/*", "/"), "UTF-8")
-          .replaceAll("/+", "/")
         val pairs = readFunc(pf).map { r =>
-          (canon(r.getUTF8String(0).toString), r.getLong(1))
+          (DeltaLog.canonFile(r.getUTF8String(0).toString), r.getLong(1))
         }.toArray
         pairs.groupBy(_._1).map { case (p, ps) =>
           p -> ps.map(_._2).distinct.sorted

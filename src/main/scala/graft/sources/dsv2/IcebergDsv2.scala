@@ -14,7 +14,7 @@ import org.apache.spark.sql.graftext.ParquetReadBridge
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 
-import graft.sources.{IcebergBounds, IcebergTable}
+import graft.sources.{DeltaLog, IcebergBounds, IcebergTable}
 
 /** DataSourceV2 read path over the Iceberg metadata reader — the
   * [[DeltaTableProvider]] twin:
@@ -93,14 +93,6 @@ private[dsv2] object IcebergDsv2 {
     options.get(key.toLowerCase)
 
   private[dsv2] def parseJson(js: String): JsonNode = mapper.readTree(js)
-
-  /** `file:`-scheme- and URL-decoding-insensitive canonical path (the
-    * discipline position-delete `file_path` joins require).
-    */
-  def canon(abs: String): String =
-    java.net.URLDecoder
-      .decode(abs.replaceFirst("^file:/*", "/"), "UTF-8")
-      .replaceAll("/+", "/")
 
   def isCdf(options: Map[String, String]): Boolean =
     opt(options, "readChangeFeed").exists(_.equalsIgnoreCase("true"))
@@ -203,7 +195,7 @@ private[dsv2] object IcebergDsv2 {
     val dvByFile: Map[String, Seq[GraftFileBatch.PuffinDvPositions]] =
       dvFiles.flatMap { d =>
         d.referencedDataFile.map { ref =>
-          canon(ref) -> GraftFileBatch.PuffinDvPositions(
+          DeltaLog.canonFile(ref) -> GraftFileBatch.PuffinDvPositions(
             d.path, d.contentOffset, d.contentSize, ref)
         }
       }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
@@ -696,7 +688,7 @@ private[dsv2] case class IcebergDsv2Scan(
         val raw = e.pv.get(pfName).flatten.orNull
         DeltaDsv2.internalPartValue(raw, f.dataType)
       }.toArray[Any])
-    val canonPath = IcebergDsv2.canon(e.path)
+    val canonPath = DeltaLog.canonFile(e.path)
     val drop: Seq[PositionSpec] =
       p.dvByFile.getOrElse(canonPath, Nil) ++
         (if (p.posDeleteFiles.isEmpty) Nil
@@ -904,12 +896,12 @@ private[dsv2] class IcebergCdfPlanner(
     val parentScan = parent.map(pinned)
     val parentByPath: Map[String, IcebergTable.FileEntry] =
       parentScan.map(_.p.entries.map(e =>
-        IcebergDsv2.canon(e.path) -> e).toMap).getOrElse(Map.empty)
+        DeltaLog.canonFile(e.path) -> e).toMap).getOrElse(Map.empty)
     val sPaths: Set[String] =
-      pS.entries.map(e => IcebergDsv2.canon(e.path)).toSet
+      pS.entries.map(e => DeltaLog.canonFile(e.path)).toSet
 
     val inserts = pS.entries
-      .filterNot(e => parentByPath.contains(IcebergDsv2.canon(e.path)))
+      .filterNot(e => parentByPath.contains(DeltaLog.canonFile(e.path)))
       .sortBy(_.path)
       .map(e => stamp(remap(sScan, sScan.sliceFor(e)), "insert", ord, sid))
     if (parentScan.isEmpty) return inserts
@@ -917,7 +909,7 @@ private[dsv2] class IcebergCdfPlanner(
     val pP = pScan.p
 
     val fileDeletes = pP.entries
-      .filterNot(e => sPaths.contains(IcebergDsv2.canon(e.path)))
+      .filterNot(e => sPaths.contains(DeltaLog.canonFile(e.path)))
       .sortBy(_.path)
       .map(e => stamp(remap(pScan, pScan.sliceFor(e)), "delete", ord, sid))
 
@@ -935,7 +927,7 @@ private[dsv2] class IcebergCdfPlanner(
         "refused rather than emitting a wrong feed")
 
     val common = pS.entries
-      .filter(e => parentByPath.contains(IcebergDsv2.canon(e.path)))
+      .filter(e => parentByPath.contains(DeltaLog.canonFile(e.path)))
       .sortBy(_.path)
 
     // ---- newly-dead positions on carried files ----------------------
@@ -947,7 +939,7 @@ private[dsv2] class IcebergCdfPlanner(
     def dvChanged(c: String): Boolean =
       pS.dvByFile.get(c) != pP.dvByFile.get(c)
     val posSlices = common.flatMap { e =>
-      val c = IcebergDsv2.canon(e.path)
+      val c = DeltaLog.canonFile(e.path)
       if (newPosFiles.isEmpty && !dvChanged(c)) None
       else {
         val sS = sScan.sliceFor(e)
@@ -979,7 +971,7 @@ private[dsv2] class IcebergCdfPlanner(
           // S's era (it reads the NEW key columns); parent's delete
           // state (the row must have been live at the parent)
           val sS = sScan.sliceFor(e)
-          val sP = pScan.sliceFor(parentByPath(IcebergDsv2.canon(e.path)))
+          val sP = pScan.sliceFor(parentByPath(DeltaLog.canonFile(e.path)))
           stamp(remap(sScan, sS.copy(
             drop = sP.drop, keep = null,
             eqDrop = sP.eqDrop, eqKeep = specs)), "delete", ord, sid)

@@ -111,15 +111,19 @@ class WarmPolicySpec extends SparkSpec {
     val expandMemo = scala.collection.mutable.Map.empty[String, Set[AnyRef]]
     val consumers = scala.collection.mutable.Map.empty[String, Set[String]]
       .withDefaultValue(Set.empty)
-    val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     SessionCache.accessLog = log
     try {
       for ((qname, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
         log.clear()
         val planReached =
           cachesIn(fn(spark, dir).queryExecution.withCachedData)
+        // only this spec's own dir: a suite running alongside that
+        // touches the same cache name under another dir consumes
+        // another frame
         val accessed = scala.jdk.CollectionConverters
-          .CollectionHasAsScala(log).asScala.toSet
+          .CollectionHasAsScala(log).asScala
+          .collect { case (`dir`, name) => name }.toSet
         val reached = planReached ++
           accessed.flatMap(n => expandMemo.getOrElseUpdate(n, expand(n)))
         for ((wname, key) <- warmKeys

@@ -107,4 +107,26 @@ class DeltaFromIcebergSpec extends SparkSpec {
       DeltaExport.fromIceberg(spark, t))
     assert(e.getMessage.contains("rewriteToCurrentSpec"), e.getMessage)
   }
+
+  test("deletes of files under a '+' or Hive-escaped '%' partition convert") {
+    // "c++" is a directory name with a literal '+'; "a%b" is written
+    // as the Hive-escaped directory region=a%25b. Both readers of the
+    // converted table must keep the deletes of files under them.
+    val regions = Seq("c++", "a%b", "us")
+    val df = (0L until 12L).map(i => (i, s"r$i", regions((i % 3).toInt)))
+      .toDF("id", "s", "region")
+    val want = (0L until 12L).filter(_ % 4 != 0)
+      .map(i => (i, s"r$i", regions((i % 3).toInt))).toSet
+    for ((create, delete) <- Seq(
+        (IcebergExport.create _, IcebergExport.deleteWhere _),
+        (IcebergExport.createV3 _, IcebergExport.deleteWhereDv _))) {
+      val t = tbl()
+      create(df.repartition(2, col("id")), t, Seq("region"))
+      delete(spark, t, col("id") % 4 === 0)
+      assert(rows(IcebergTable.read(spark, t)) == want)
+      DeltaExport.fromIceberg(spark, t)
+      val viaDelta = rows(DeltaLog.read(spark, t))
+      assert(viaDelta == want, s"${viaDelta -- want} came back")
+    }
+  }
 }
