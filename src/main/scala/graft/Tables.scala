@@ -14,8 +14,18 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * assumes a single file.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `dir/name.parquet`, read with its schema inferred once per
+    * (session, dir, name) and given to every later read: an inferring
+    * read starts a one-task footer job, and the queries read the same
+    * tables again and again. A file rewritten with another schema under
+    * the same dir in one session is read with the first schema.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = graft.queries.SessionCache.memo(spark, dir, s"schema:$name")(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -12,28 +12,43 @@ object Verify {
     val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // `dump`, then its directory stamped with the real path of sfDir,
+    // so tools/selfcheck.py can refuse a dump at a fixed path that a
+    // Verify of another scale factor wrote. The old stamp goes first:
+    // a dump that fails leaves none.
+    def stamped(dumpDir: String)(dump: => Unit): () => Unit = () => {
+      val stamp = Paths.get(dumpDir, StampFile)
+      Files.deleteIfExists(stamp)
+      dump
+      Files.writeString(stamp, Paths.get(sfDir).toRealPath().toString + "\n")
+    }
     // Fit-time dumps, in order, before the query pass. A failed dump is
     // reported on stderr and the next one still runs.
     val dumps: Seq[(String, () => Unit)] = Seq(
       // The warehouse parquet the wh_* oracle SQL reads
       // (WarehouseQueries.DumpPath): it must land before the driver's
       // DuckDB pass runs oracle_sql.json.
-      "warehouse" -> (() => graft.queries.WarehouseQueries.dumpWarehouse(spark)),
+      "warehouse" -> stamped(graft.queries.WarehouseQueries.DumpPath)(
+        graft.queries.WarehouseQueries.dumpWarehouse(spark)),
       // The fitted k-means centroids the s5 oracle reads: the fit is
       // session-cached, so the s5 query scores against exactly the
       // dumped values.
-      "centroid" -> (() => graft.queries.Similarity.dumpCentroids(spark, sfDir)),
+      "centroid" -> stamped(graft.queries.Similarity.CentroidDumpPath)(
+        graft.queries.Similarity.dumpCentroids(spark, sfDir)),
       // The trained PQ codebooks the s7 oracle reads: the same
       // session-cache-then-dump discipline as the centroids.
-      "residual codebook" ->
-        (() => graft.queries.Similarity.dumpResPqCodebooks(spark, sfDir)),
-      "pq codebook" -> (() => graft.queries.Similarity.dumpPqCodebooks(spark, sfDir)),
+      "residual codebook" -> stamped(graft.queries.Similarity.ResPqCodebookDumpPath)(
+        graft.queries.Similarity.dumpResPqCodebooks(spark, sfDir)),
+      "pq codebook" -> stamped(graft.queries.Similarity.PqCodebookDumpPath)(
+        graft.queries.Similarity.dumpPqCodebooks(spark, sfDir)),
       // The x20 bloom bytes: with the file present, x20's registered
       // path runs zero stat.bloomFilter jobs; the bloom is read like
       // any other fit-time dump.
-      "x20 bloom" -> (() => graft.queries.Extended.dumpBloom(spark, sfDir)),
+      "x20 bloom" -> stamped(graft.queries.Extended.BloomDumpRoot)(
+        graft.queries.Extended.dumpBloom(spark, sfDir)),
       // The lakehouse tables (Delta DV / Iceberg v2 deletes / SCD2
       // MERGE dim): x22/x23/w23 then read them like any other dump.
+      // Their paths name the scale factor already.
       "lakehouse table" -> (() => graft.queries.LakehouseScan.dumpTables(spark, sfDir)))
     for ((label, dump) <- dumps)
       try dump()
@@ -75,4 +90,9 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** The file in a dump directory that names the data dir the dump was
+    * written for; Spark and DuckDB skip `_`-prefixed files.
+    */
+  val StampFile = "_sf_dir"
 }

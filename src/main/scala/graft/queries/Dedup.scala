@@ -44,7 +44,7 @@ object Dedup {
     * queries (d2/d3/d7 all start from shingles); round 1 persisted them
     * per-invocation, which re-cached a fresh copy every call and never
     * unpersisted ("already cached" warnings, cache growth across a
-    * 47-query bench). One persisted copy per session is the fix.
+    * 47-query bench). One stored copy per session is the fix.
     */
   private def cached(spark: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
@@ -497,7 +497,7 @@ object Dedup {
     * for cross-engine stability.
     */
   def embeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm}
+    import graft.functions.VectorFunctions.vecDot
     val bound = spark.conf.getOption(MaxAllPairsVectorsKey)
       .map(_.toLong).getOrElse(MaxAllPairsVectorsDefault)
     // parquet-metadata count, memoized per (session, dir) — the guard
@@ -509,11 +509,8 @@ object Dedup {
       s"embeddingNearDup is the O(n²) all-pairs BASELINE: corpus has $n " +
         s"vectors > bound $bound. Use ivfNearDup (d8, bucketed candidates) " +
         s"at corpus scale, or raise $MaxAllPairsVectorsKey deliberately.")
-    val e = embeddings(spark, dir)
-      .select(
-        col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .withColumn("nrm", vecNorm(col("v")))
+    // the session-cached widened vectors + norms (s-queries, d8)
+    val e = Similarity.vectors(spark, dir)
     // The embeddings table is one small parquet file → a 1-split scan,
     // so the broadcast nested loop's ENTIRE O(n²) stream side ran in a
     // single task (guide §2.5 input-skew: one unsplittable input).

@@ -33,7 +33,7 @@ object Similarity {
     */
   private[queries] def vectors(spark: SparkSession, dir: String): DataFrame =
     // session-cached: every s-query (and d8) starts from the widened
-    // vectors + norms; one persisted copy instead of re-casting the
+    // vectors + norms; one stored copy instead of re-casting the
     // embedding column per query
     SessionCache.cached(spark, dir, "vectors")(
       embeddings(spark, dir)
@@ -1530,7 +1530,7 @@ object Similarity {
     */
   /** Session-cached s15 corpus band frame (vec_id, band_id, band_val):
     * the signature projection + band explode feed the s15 registered
-    * query AND its s18 ladder replay — one narrow persisted copy per
+    * query AND its s18 ladder replay — one narrow stored copy per
     * (session, dir) instead of re-signing the corpus per consumer
     * (the t24 caching discipline, applied per the r10 verdict).
     */
@@ -1719,7 +1719,7 @@ object Similarity {
     * (vec_id, tbl, band_id, band_val): the L fused signature
     * projections + table/band explode are the expensive corpus pass
     * shared by the s19 registered query and its s18 replay — one
-    * persisted copy per (session, dir), same rationale as
+    * stored copy per (session, dir), same rationale as
     * [[cachedSrpBands]].
     */
   private[queries] def cachedSrpMultiBands(
@@ -1791,7 +1791,7 @@ object Similarity {
     "s1_cosine_topk" -> bruteForceTopK,
     // the UNCACHED form: s2's registered query IS the assignment
     // computation — pointing it at the session cache would make its
-    // bench number a persisted-scan read that measures nothing.
+    // bench number a stored-rows read that measures nothing.
     // Consumers (s3/s4/d8) read cachedIvfAssign.
     "s2_ivf_assign" -> ivfAssign,
     "s3_ivf_topk" -> ivfTopK,

@@ -38,7 +38,7 @@ object TextOps {
 
   /** Session-cached words: the exploded frame feeds nearly every text
     * query (quality, lang-ID, tf-idf, shingles, SimHash votes) — one
-    * persisted copy per (session, dir) instead of re-exploding the
+    * stored copy per (session, dir) instead of re-exploding the
     * corpus per consumer.
     */
   def cachedWords(spark: SparkSession, dir: String): DataFrame =
@@ -66,7 +66,7 @@ object TextOps {
   /** Session-cached per-doc REAL tokenizer counts — t25's encode
     * narrowed to (doc_id, bpe_tokens), the frame every downstream
     * budget/packing op consumes in a production pipeline (p22 today).
-    * One persisted copy per (session, dir); t25's registered query
+    * One stored copy per (session, dir); t25's registered query
     * stays UNcached so its bench number measures the encode.
     */
   def cachedBpeTokens(spark: SparkSession, dir: String): DataFrame =
@@ -473,13 +473,15 @@ object TextOps {
     * word), document frequency per word, and tf·ln(N/df). The only
     * transcendental emitted anywhere — computed from identical exact
     * integers in both engines, rounded to 6 dp.
-    */
-  /** Cache layout note (r17, corrected r18): caching the UNSORTED
-    * pipeline was tried — consumers re-key anyway — and REVERTED after
-    * t8 regressed 0.16 → 0.77 s: with the sorted frame cached, the
-    * CacheManager serves t8's whole registered plan by fragment match;
-    * the unsorted cache had no offsetting consumer win. The session
-    * cache holds THIS sorted frame.
+    *
+    * t8 registers this frame and computes it on every run: its number
+    * measures the computation (the s2 discipline). The session cache
+    * holds this same sorted frame for t24 and p16 (`cachedTfidf`) and
+    * shares it only through the frame object, so t8's own plan is not
+    * served from it. (While the cache was `persist()`ed, the
+    * CacheManager served t8's whole registered plan by plan match; r17
+    * cached the UNSORTED pipeline instead and reverted it when t8 went
+    * from 0.16 to 0.77 s, which was t8 losing that match.)
     */
   def tfidf(spark: SparkSession, dir: String): DataFrame = {
     val tf = cachedWords(spark, dir)
@@ -501,10 +503,8 @@ object TextOps {
   /** Session-cached TF-IDF scores: t24 ranks them, and t8's tf agg
     * otherwise appears TWICE in any consumer's static plan (once as
     * the tf branch, once inside the df branch — runtime exchange
-    * reuse dedupes it, but the persisted copy makes the static plan
-    * honest). t8's registered query stays the UNCACHED `tfidf` (the
-    * s2 discipline: its bench number must measure the computation,
-    * not a persisted-scan read).
+    * reuse dedupes it, but the stored copy makes the static plan
+    * honest). t8's registered query stays the UNCACHED `tfidf`.
     */
   def cachedTfidf(spark: SparkSession, dir: String): DataFrame =
     SessionCache.cached(spark, dir, "tfidf")(tfidf(spark, dir))

@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Physical-plan audits for the headline queries: the properties that
   * make these plans survive a 100× scale-up, asserted so a refactor
@@ -10,6 +12,17 @@ import graft.SparkSpec
 class PlanAuditSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** Whether `df`'s plan scans the stored rows of the session-cached
+    * frame `cache` (a cache is a scan of its stored rows, so its build
+    * plan is not part of its consumers' plans).
+    */
+  private def scans(df: DataFrame, cache: DataFrame): Boolean = {
+    val stored = cache.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    df.queryExecution.analyzed
+      .collectWithSubqueries { case l: LogicalRDD => l.rdd }
+      .exists(_ eq stored)
+  }
 
   private def plan(name: String): String =
     graft.SparkEntry.queries(name)(spark, dir)
@@ -466,10 +479,10 @@ class PlanAuditSpec extends SparkSpec {
     // inside the cached frame; each consumer's own plan must read the
     // cache, never rebuild the gram agg
     // r18: pinned on the pre-checkpoint frame (the q6 audit discipline)
-    val p = Dedup.dupSpansFrame(spark, dir)
-      .queryExecution.executedPlan.toString
+    val d17 = Dedup.dupSpansFrame(spark, dir)
+    val p = d17.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), "d17 has a cartesian join")
-    assert(p.contains("InMemoryTableScan"),
+    assert(scans(d17, Dedup.cachedMarkedGrams(spark, dir)),
       "d17 no longer reads the shared marked-grams session cache")
     assert(!p.contains("a_id"), "d17 unexpectedly builds document pairs")
   }
@@ -494,12 +507,15 @@ class PlanAuditSpec extends SparkSpec {
   test("d2/d7 shingle joins carry the document-frequency cap") {
     // the cap is a hash-agg over sh + an anti-join against the hot
     // list (never a count-window partitioned by sh — that would be the
-    // hot-key single task the cap exists to avoid)
-    for (q <- Seq("d2_ngram_jaccard", "d7_lsh_rescore")) {
-      val p = plan(q)
-      assert("df#\\d+L? > 100".r.findFirstIn(p).isDefined,
-        s"$q plan shows no hot-shingle filter")
-      assert(p.contains("LeftAnti"), s"$q plan shows no anti-join")
-    }
+    // hot-key single task the cap exists to avoid). It is built into
+    // the session-cached shingles, so it is pinned on their
+    // pre-checkpoint frame, and d2/d7 must read that cache.
+    val p = Dedup.shingles(spark, dir).queryExecution.executedPlan.toString
+    assert("df#\\d+L? > 100".r.findFirstIn(p).isDefined,
+      "shingles plan shows no hot-shingle filter")
+    assert(p.contains("LeftAnti"), "shingles plan shows no anti-join")
+    for (q <- Seq("d2_ngram_jaccard", "d7_lsh_rescore"))
+      assert(scans(graft.SparkEntry.queries(q)(spark, dir),
+        Dedup.cachedShingles(spark, dir)), s"$q does not read the capped shingles")
   }
 }

@@ -7,11 +7,17 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 import graft.SparkSpec
+import org.apache.spark.graftest.ListenerBridge
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** The build-once rule of [[SessionCache]]: one build per key, no
   * caller waits for a build of another key, a failed build leaves no
-  * entry, and builds nest. Each test keys on a dir of its own, so no
-  * other suite's entries and no rerun interfere.
+  * entry, and builds nest; and what a cached frame holds: its rows, not
+  * its build plan. Each test keys on a dir of its own, so no other
+  * suite's entries and no rerun interfere.
   */
 class SessionCacheSpec extends SparkSpec {
 
@@ -104,5 +110,51 @@ class SessionCacheSpec extends SparkSpec {
         .union(spark.range(2).toDF()))
     assert(df.count() == 5)
     assert(SessionCache.existing(spark, dir, "innerFrame") != null)
+  }
+
+  test("a cached frame releases its build's broadcasts, keeping its rows and partitioning") {
+    val dir = freshDir()
+    val sc = spark.sparkContext
+    // hash-partitioned on j, then a broadcast hash join that keeps it
+    def build(): DataFrame = {
+      val small = spark.range(50).select(col("id").as("j"), (col("id") % 7).as("k"))
+      spark.range(0, 20000, 1, 4).select(col("id"), (col("id") % 50).as("j"))
+        .repartition(4, col("j"))
+        .join(broadcast(small), "j")
+    }
+    assert(build().queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    val before = ListenerBridge.broadcastIds(sc)
+    val frame = SessionCache.cached(spark, dir, "joined")(build())
+    assert(frame.count() == 20000)
+    val made = ListenerBridge.broadcastIds(sc) -- before
+    assert(made.nonEmpty, "the build made no broadcast")
+    // the build plan is unreachable once `cached` returns; the
+    // ContextCleaner removes its broadcasts after a GC notices
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    var held = made
+    while (held.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+      held = made.intersect(ListenerBridge.broadcastIds(sc))
+    }
+    assert(held.isEmpty, s"broadcasts $held of the cached frame's build are still held")
+    def rows(df: DataFrame) = df.orderBy("id").collect().toSeq
+    assert(rows(frame) == rows(build()))
+    // the partitioning consumers see at the scan of the stored rows
+    def scanPartitioning(df: DataFrame): String = {
+      def leaf(p: SparkPlan): SparkPlan = p match {
+        case a: AdaptiveSparkPlanExec => leaf(a.executedPlan)
+        case l if l.children.isEmpty => l
+        case other => leaf(other.children.head)
+      }
+      leaf(df.queryExecution.executedPlan).outputPartitioning.toString
+        .replaceAll("#\\d+", "")
+    }
+    val persisted = build().persist()
+    try {
+      persisted.count()
+      assert(scanPartitioning(frame) == scanPartitioning(persisted))
+      assert(scanPartitioning(frame).startsWith("hashpartitioning(j"))
+    } finally persisted.unpersist(blocking = true)
   }
 }

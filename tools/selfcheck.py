@@ -6,9 +6,20 @@ exact value compare with float tolerance reporting).
 
 Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir>
 (Run `sbt "runMain graft.Verify <sfDir> <outDir>"` first.)
+
+Verify writes its fitted-model and warehouse dumps to fixed paths under
+the checkout's target/ and stamps each with the data dir it was written
+for. Before comparing anything, this check refuses (exit 1, naming
+them) dumps stamped for another data dir: a Verify at another scale
+factor overwrote them, and the oracle rows that read them would fail
+for that reason alone.
 """
-import json, math, sys, os
+import glob, json, math, sys, os
 import duckdb
+
+# Verify.StampFile
+STAMP = "_sf_dir"
+TARGET = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "target")
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -25,8 +36,27 @@ def eq(a, b):
         return a == b
     return a == b
 
+def stale_dumps(sf_dir):
+    """(dump dir, stamped data dir) of each dump written for another dir."""
+    want = os.path.realpath(sf_dir)
+    stale = []
+    for stamp in sorted(glob.glob(os.path.join(TARGET, "*", STAMP))):
+        with open(stamp) as f:
+            got = f.read().strip()
+        if got != want:
+            stale.append((os.path.dirname(stamp), got))
+    return stale
+
 def main(sf_dir, out_dir):
     import time
+    stale = stale_dumps(sf_dir)
+    for dump, got in stale:
+        print(f"STALE {dump}: written by Verify for {got}, "
+              f"not {os.path.realpath(sf_dir)}")
+    if stale:
+        print(f"== {len(stale)} stale dump(s): rerun Verify on {sf_dir} "
+              "before checking it ==")
+        return 1
     age = time.time() - os.path.getmtime(f"{out_dir}/oracle_sql.json")
     if age > 1800:
         print(f"WARNING: verify output is {age/60:.0f} min old — "
