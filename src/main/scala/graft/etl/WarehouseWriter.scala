@@ -97,6 +97,11 @@ object WarehouseWriter {
     * downloaded=TRUE, num_chunks=? WHERE episode_id=?`): no in-place
     * update in parquet — left-join the updates and coalesce per column.
     * `updates` must carry `key` plus a subset of `table`'s columns.
+    * This returns the updated frame and commits nothing; the
+    * transactional form of the same update, for readers running beside
+    * writers, is a Delta MERGE: [[graft.sources.DeltaMerge.merge]], or
+    * [[graft.sources.DeltaMerge.applyChanges]] with a `txn` so that a
+    * redelivered batch commits nothing.
     */
   def pointUpdate(
       table: DataFrame,

@@ -19,13 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Tables build once per session per sf-dir (same fit-once discipline
   * as the warehouse/centroid dumps) under `target/graft_lakehouse/`,
-  * rebuilt fresh per JVM so stale tables from prior rounds never leak
-  * in.
+  * rebuilt fresh by a session's first build so stale tables from prior
+  * rounds never leak in.
   */
 object LakehouseScan {
-
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def deleteRec(p: Path): Unit =
     if (Files.exists(p)) {
@@ -35,22 +32,25 @@ object LakehouseScan {
       finally s.close()
     }
 
-  /** Build `kind` for `dir` exactly once per session; fresh per JVM. */
-  private def buildOnce(kind: String, dir: String)(
+  /** Build `kind` for `dir` once per session (`SessionCache.memo`: a
+    * caller of another table never waits for this build); the first
+    * build deletes whatever an earlier JVM left at the table's path.
+    */
+  private def buildOnce(spark: SparkSession, kind: String, dir: String)(
       f: String => Unit): String =
-    built.computeIfAbsent(s"$kind|$dir", { _ =>
+    SessionCache.memo(spark, dir, s"lake.$kind") {
       val sf = new java.io.File(dir).getName
       val t = graft.RepoPaths.target(s"graft_lakehouse/$sf/$kind")
       deleteRec(Paths.get(t))
       f(t)
       t
-    })
+    }
 
   /** Delta table from `customer` with a deletion-vector row delete:
     * every `c_custkey % 7 == 0` row is DV-deleted (no file rewrite).
     */
   private def deltaCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("delta_customer", dir) { t =>
+    buildOnce(spark, "delta_customer", dir) { t =>
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"))
@@ -64,7 +64,7 @@ object LakehouseScan {
     * delete on the `o_custkey` values `% 10 == 3`.
     */
   private def icebergOrders(spark: SparkSession, dir: String): String =
-    buildOnce("iceberg_orders", dir) { t =>
+    buildOnce(spark, "iceberg_orders", dir) { t =>
       // 8 data files, not 1: the scan parallelizes (a one-file table
       // reads single-task — measured 2.4 s vs ~0.4 s at sf0.1), the
       // position deletes name MULTIPLE files and the per-file
@@ -90,7 +90,7 @@ object LakehouseScan {
     * month so each partition dir gets ~one file, not one per task.
     */
   private def icebergLineitem(spark: SparkSession, dir: String): String =
-    buildOnce("iceberg_lineitem", dir) { t =>
+    buildOnce(spark, "iceberg_lineitem", dir) { t =>
       val li = spark.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_shipdate"))
@@ -115,7 +115,7 @@ object LakehouseScan {
     * gate, not just the surviving row set.
     */
   private def icebergV3Supplier(spark: SparkSession, dir: String): String =
-    buildOnce("iceberg_v3_supplier", dir) { t =>
+    buildOnce(spark, "iceberg_v3_supplier", dir) { t =>
       val supp = spark.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
         .repartitionByRange(4, col("s_suppkey"))
@@ -135,7 +135,7 @@ object LakehouseScan {
     * the hard oracle gate.
     */
   private def deltaMergeCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("delta_merge_customer", dir) { t =>
+    buildOnce(spark, "delta_merge_customer", dir) { t =>
       import graft.sources.DeltaMerge
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
@@ -170,7 +170,7 @@ object LakehouseScan {
     * must converge on the SAME final table.
     */
   private def icebergUpsertCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("iceberg_upsert_customer", dir) { t =>
+    buildOnce(spark, "iceberg_upsert_customer", dir) { t =>
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"))
@@ -201,7 +201,7 @@ object LakehouseScan {
     * reader has — fails the hash on c_nationkey itself.
     */
   private def icebergEvolvedCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("iceberg_evolved_customer", dir) { t =>
+    buildOnce(spark, "iceberg_evolved_customer", dir) { t =>
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"))
@@ -227,7 +227,7 @@ object LakehouseScan {
     * down to the hash.
     */
   private def icebergRelayoutCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("iceberg_relayout_customer", dir) { t =>
+    buildOnce(spark, "iceberg_relayout_customer", dir) { t =>
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"))
@@ -253,7 +253,7 @@ object LakehouseScan {
     * the id assignment as row_number() over each parity in key order.
     */
   private def deltaRowTrackedCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("delta_rowtracked_customer", dir) { t =>
+    buildOnce(spark, "delta_rowtracked_customer", dir) { t =>
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"))
@@ -278,7 +278,7 @@ object LakehouseScan {
     * DELETE at v3 (`% 10 == 5`, retiring those ids forever).
     */
   private def deltaRtMergeCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("delta_rt_merge_customer", dir) { t =>
+    buildOnce(spark, "delta_rt_merge_customer", dir) { t =>
       import graft.sources.DeltaMerge
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
@@ -314,7 +314,7 @@ object LakehouseScan {
     * snapshot — zero data bytes moved.
     */
   private def icebergCherryCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("iceberg_cherry_customer", dir) { t =>
+    buildOnce(spark, "iceberg_cherry_customer", dir) { t =>
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"))
@@ -337,7 +337,7 @@ object LakehouseScan {
     * read sees the new definition, time travel the old.
     */
   private def deltaReplacedOrders(spark: SparkSession, dir: String): String =
-    buildOnce("delta_replaced_orders", dir) { t =>
+    buildOnce(spark, "delta_replaced_orders", dir) { t =>
       val orders = spark.read.parquet(s"$dir/orders.parquet")
       DeltaExport.create(
         orders.select(col("o_orderkey"), col("o_custkey"),
@@ -360,7 +360,7 @@ object LakehouseScan {
     * fresh metaData id) — both must converge on the same table.
     */
   private def icebergReplacedOrders(spark: SparkSession, dir: String): String =
-    buildOnce("iceberg_replaced_orders", dir) { t =>
+    buildOnce(spark, "iceberg_replaced_orders", dir) { t =>
       val orders = spark.read.parquet(s"$dir/orders.parquet")
       IcebergExport.create(
         orders.select(col("o_orderkey"), col("o_custkey"),
@@ -380,7 +380,7 @@ object LakehouseScan {
     * position-delete parquet re-expressed as Delta deletion vectors.
     */
   private def ice2DeltaCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("ice2delta_customer", dir) { t =>
+    buildOnce(spark, "ice2delta_customer", dir) { t =>
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           col("c_acctbal"))
@@ -396,7 +396,7 @@ object LakehouseScan {
     * the write path and the as-of read path certify each other.
     */
   private def scd2Dim(spark: SparkSession, dir: String): String =
-    buildOnce("scd2_dim", dir) { t =>
+    buildOnce(spark, "scd2_dim", dir) { t =>
       val ev = graft.Tables.eventsUs(spark, dir)
         .select(col("user_id"), col("event_type"), col("tus"),
           col("event_id"))
@@ -465,7 +465,7 @@ object LakehouseScan {
     * `inCommitTimestamp`.
     */
   private def deltaWidenedSupplier(spark: SparkSession, dir: String): String =
-    buildOnce("delta_widened_supplier", dir) { t =>
+    buildOnce(spark, "delta_widened_supplier", dir) { t =>
       val sup = spark.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
       graft.sources.DeltaExport.create(
@@ -497,7 +497,7 @@ object LakehouseScan {
     * `variantType` feature both sides — r16).
     */
   private def deltaVariantEvents(spark: SparkSession, dir: String): String =
-    buildOnce("delta_variant_events", dir) { t =>
+    buildOnce(spark, "delta_variant_events", dir) { t =>
       val ev = spark.read.parquet(s"$dir/events.parquet")
         .select(col("event_type"), col("user_id"), col("value"),
           parse_json(col("props")).as("props_v"),
@@ -534,7 +534,7 @@ object LakehouseScan {
     * shredding schema, `variantShredding-preview` declared.
     */
   private def deltaShreddedEvents(spark: SparkSession, dir: String): String =
-    buildOnce("delta_variant_shredded", dir) { t =>
+    buildOnce(spark, "delta_variant_shredded", dir) { t =>
       val ev = spark.read.parquet(s"$dir/events.parquet")
         .select(col("event_type"), col("user_id"), col("value"),
           parse_json(col("props")).as("props_v"),
@@ -593,7 +593,7 @@ object LakehouseScan {
     * `delta.columnMapping.mode=name`.
     */
   private def deltaMappedCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("delta_mapped_customer", dir) { t =>
+    buildOnce(spark, "delta_mapped_customer", dir) { t =>
       import org.apache.spark.sql.types._
       val phys = Seq(
         ("c_custkey", 1L, "col-1key"), ("c_name", 2L, "col-2name"),
@@ -680,7 +680,7 @@ object LakehouseScan {
     * point (bespoke API → x27, SQL → here).
     */
   private def deltaSqlMergeCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("delta_sql_merge_customer", dir) { t =>
+    buildOnce(spark, "delta_sql_merge_customer", dir) { t =>
       graftCat(spark)
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
@@ -728,7 +728,7 @@ object LakehouseScan {
     * `DELETE FROM` (r17).
     */
   private def deltaSqlDmlCustomer(spark: SparkSession, dir: String): String =
-    buildOnce("delta_sql_dml_customer", dir) { t =>
+    buildOnce(spark, "delta_sql_dml_customer", dir) { t =>
       graftCat(spark)
       val cust = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),

@@ -21,13 +21,17 @@ import org.apache.spark.sql.types.StructType
   * fields PROTOCOL.md marks required for v1 readers, so a real
   * delta-spark reader has nothing unsupported to trip on.
   *
-  * Concurrency: versions are claimed with the same atomic-exclusive
-  * hardlink discipline as [[graft.etl.SnapshotStore]] (temp file +
-  * `createLink` onto the zero-padded name — exactly one contender
-  * wins a version; the loser retries on the next). Data files land
-  * under hive-style `k=v/` directories BEFORE the commit is linked,
-  * so a reader never sees a version whose files aren't durable
-  * (Delta's own write-then-commit order).
+  * Concurrency: each version is claimed with an atomic-exclusive
+  * hardlink ([[claim]]: the whole commit body goes to a temp file,
+  * then `createLink` onto the zero-padded name — POSIX link(2) fails
+  * if the name exists, so exactly one contender wins a version, the
+  * loser retries on the next, and no reader sees a half-written
+  * commit). Data files land under hive-style `k=v/` directories
+  * BEFORE the commit is linked, so a reader never sees a version
+  * whose files aren't durable (Delta's own write-then-commit order),
+  * and files of an attempt that crashed before its claim are in no
+  * version: readers never see them and [[vacuum]] reclaims them past
+  * its retention.
   *
   * Scale shape: the data write is a plain distributed
   * `df.write.partitionBy(...).parquet` (one job, no driver rows); the
@@ -344,9 +348,11 @@ object DeltaExport {
 
   private val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** Atomically claim `version`: returns false when another writer
-    * owns it (the SnapshotStore hardlink discipline). In-commit
-    * timestamps stamp here — see [[ictStamp]].
+  /** Atomically claim `version`: the body is written whole to a temp
+    * file and hardlinked onto the version's name, so the commit
+    * appears complete or not at all; returns false when another
+    * writer owns the version. In-commit timestamps stamp here — see
+    * [[ictStamp]].
     */
   private[sources] def claim(table: String, version: Long, lines: Seq[String]): Boolean = {
     val dir = logDir(table)
@@ -1420,8 +1426,8 @@ object DeltaExport {
     * redelivery after a sink restart) whose batchId ≤ the table's last
     * committed txn version for `appId` is a NO-OP — no data files, no
     * commit. Orphan files from a crash between stage-in and commit are
-    * never referenced by any log entry, so readers never see them (the
-    * same crash-window story as SnapshotStore's per-attempt dirs).
+    * never referenced by any log entry, so readers never see them, and
+    * the redelivered batch commits as the next free version.
     * Returns the committed version, or None for a skipped replay.
     *
     * Wire it to Structured Streaming as
@@ -1757,16 +1763,14 @@ object DeltaExport {
     * `partitionOverwriteMode` shape: atomically replace EXACTLY the
     * partitions present in `df` (removes for their currently-active
     * files + adds for the staged ones, one commit); partitions not in
-    * `df` are untouched. The multi-writer contract this repo's
-    * SnapshotStore discipline promises, now with real CONFLICT
-    * CHECKING instead of a documented scope bound: two racing
-    * overwriteWhere writers on DISJOINT partition sets both land (the
-    * loser's claim retries against the winner's state and passes
-    * validation); on OVERLAPPING partitions exactly one wins and the
-    * loser throws `ConcurrentModificationException` — serializable
-    * semantics, no lost rows, never last-writer-wins-silently.
-    * Unmapped tables only (this writer authors none mapped). Returns
-    * the committed version.
+    * `df` are untouched. Multi-writer safe through CONFLICT CHECKING
+    * at commit time: two racing overwriteWhere writers on DISJOINT
+    * partition sets both land (the loser's claim retries against the
+    * winner's state and passes validation); on OVERLAPPING partitions
+    * exactly one wins and the loser throws
+    * `ConcurrentModificationException` — serializable semantics, no
+    * lost rows, never last-writer-wins-silently. Unmapped tables only
+    * (this writer authors none mapped). Returns the committed version.
     */
   def overwriteWhere(
       df: DataFrame, table: String, partitionBy: Seq[String]): Long =

@@ -18,9 +18,9 @@ import graft.sources.dsv2.{DeltaDsv2, FilterPrune}
   * directory of zero-padded-version newline-delimited-JSON commits,
   * optionally compacted into parquet checkpoints referenced by
   * `_last_checkpoint`) — no delta-spark dependency, which this
-  * offline environment cannot resolve. This closes the "real
-  * pipelines read Delta tables" interop gap for the READ side; the
-  * write side is [[graft.etl.SnapshotStore]]'s own (simpler) format.
+  * offline environment cannot resolve. This is the READ side; the
+  * write side is [[DeltaExport]] (with [[DeltaMerge]] and
+  * [[DeltaUpdate]]), which authors the same protocol.
   *
   * Supported: protocol v1 readers — add/remove file replay with
   * last-action-wins per path, partition columns reconstructed from

@@ -87,7 +87,6 @@ object DeltaMerge {
   def applyChanges(
       spark: SparkSession, table: String, changes: DataFrame,
       keys: Seq[String], txn: Option[(String, Long)] = None): Option[Long] = {
-    import DeltaExport._
     require(changes.columns.contains("_change_type"),
       "applyChanges needs a _change_type column")
     txn.foreach { case (appId, batchV) =>
@@ -242,88 +241,11 @@ object DeltaMerge {
         val ins = insertRows.map(
           _.select(tableCols: _*)
             .withColumn("_change_type", lit("insert")))
-        val changes = (pre.toSeq ++ post.toSeq ++ ins.toSeq)
-          .reduceOption(_.unionByName(_))
-        changes match {
-          case None => Nil
-          case Some(c) =>
-            val stage = Files.createTempDirectory("delta_cdc")
-            val w = c.write.mode("overwrite")
-            (if (st.partitionCols.nonEmpty) w.partitionBy(st.partitionCols: _*)
-            else w).parquet(stage.toString)
-            listParquet(stage).toSeq.sorted.map { rel =>
-              val dest = Paths.get(table, "_change_data", rel)
-              Files.createDirectories(dest.getParent)
-              Files.move(stage.resolve(rel), dest)
-              val pv = partitionValuesOf(rel, st.partitionCols)
-              val pvJson = pv.toSeq.sortBy(_._1)
-                .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-                .mkString("{", ",", "}")
-              val full = s"_change_data/$rel"
-              s"""{"cdc":{"path":"${enc(full)}","partitionValues":$pvJson,"size":${Files.size(Paths.get(table, full))},"dataChange":false}}"""
-            }
-        }
+        cdcActions(table, st, (pre.toSeq ++ post.toSeq ++ ins.toSeq)
+          .reduceOption(_.unionByName(_)))
       }
 
-    val conf = Some(spark.sparkContext.hadoopConfiguration)
-    val byAbs = st.active.values
-      .map(a => DeltaLog.absPath(table, a.path) -> a).toMap
-    val removes = touched.map { abs =>
-      val a = byAbs(abs)
-      val dvPart = a.dv
-        .map(d => s""","deletionVector":${dvJson(d)}""").getOrElse("")
-      s"""{"remove":{"path":"${esc(a.path)}","deletionTimestamp":${System.currentTimeMillis()},"dataChange":true$dvPart}}"""
-    }
-    val txnLines = txn.toSeq.map { case (appId, batchV) =>
-      s"""{"txn":{"appId":"${esc(appId)}","version":$batchV}}"""
-    }
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val counts =
-      if (!rowTracking) Map.empty[String, Long]
-      else staged.map(rel => rel -> recordCount(
-        hconf, Paths.get(table, rel).toAbsolutePath.toString)).toMap
-    var v = nextVersion(table)
-    var committed = false
-    while (!committed) {
-      val cur = DeltaLog.stateAt(spark, table, None)
-      // the replay gate re-checks INSIDE the claim loop: a racing
-      // replica of the same app must not double-apply the batch
-      txn.foreach { case (appId, batchV) =>
-        if (cur.txns.get(appId).exists(_ >= batchV)) return None
-      }
-      val before = st.active.map { case (p, a) =>
-        p -> a.dv.map(_.pathOrInlineDv)
-      }
-      val now = cur.active.map { case (p, a) =>
-        p -> a.dv.map(_.pathOrInlineDv)
-      }
-      if (before != now)
-        throw new java.util.ConcurrentModificationException(
-          s"MERGE conflict on $table: a concurrent writer changed the " +
-            "active file set since this merge read its snapshot — " +
-            "aborted without committing; re-run against the new state")
-      val adds =
-        if (!rowTracking)
-          staged.map(rel =>
-            addJson(table, rel, partitionValuesOf(rel, st.partitionCols),
-              conf))
-        else {
-          var next = DeltaRowTracking.highWaterMark(cur) + 1
-          staged.map { rel =>
-            val l = addJson(table, rel,
-              partitionValuesOf(rel, st.partitionCols), conf,
-              rowId = Some((next, v)),
-              tags = DeltaRowTracking.matTag(true))
-            next += counts(rel)
-            l
-          } :+ DeltaRowTracking.domainJson(next - 1)
-        }
-      val lines = txnLines ++ cdcLines ++ removes ++ adds :+
-        s"""{"commitInfo":{"operation":"MERGE"}}"""
-      committed = claim(table, v, lines)
-      if (!committed) v = nextVersion(table)
-    }
-    Some(v)
+    commit(spark, table, st, touched, staged, cdcLines, txn, () => ())
   }
 
   /** Run the merge; returns the committed version, or None when the
@@ -490,30 +412,57 @@ object DeltaMerge {
         val ins = insertRows.map(
           _.select(tableCols: _*)
             .withColumn("_change_type", lit("insert")))
-        val changes = (pre.toSeq ++ post.toSeq ++ ins.toSeq)
-          .reduceOption(_.unionByName(_))
-        changes match {
-          case None => Nil
-          case Some(c) =>
-            val stage = Files.createTempDirectory("delta_cdc")
-            val w = c.write.mode("overwrite")
-            (if (st.partitionCols.nonEmpty) w.partitionBy(st.partitionCols: _*)
-            else w).parquet(stage.toString)
-            listParquet(stage).toSeq.sorted.map { rel =>
-              val dest = Paths.get(table, "_change_data", rel)
-              Files.createDirectories(dest.getParent)
-              Files.move(stage.resolve(rel), dest)
-              val pv = partitionValuesOf(rel, st.partitionCols)
-              val pvJson = pv.toSeq.sortBy(_._1)
-                .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-                .mkString("{", ",", "}")
-              val full = s"_change_data/$rel"
-              s"""{"cdc":{"path":"${enc(full)}","partitionValues":$pvJson,"size":${Files.size(Paths.get(table, full))},"dataChange":false}}"""
-            }
-        }
+        cdcActions(table, st, (pre.toSeq ++ post.toSeq ++ ins.toSeq)
+          .reduceOption(_.unionByName(_)))
       }
 
-    // ---- the commit -------------------------------------------------
+    commit(spark, table, st, touched, staged, cdcLines, None, beforeCommit)
+  }
+
+  /** `changes` staged under `_change_data/` as the commit's `cdc`
+    * actions (none when there are no changes).
+    */
+  private def cdcActions(
+      table: String, st: DeltaLog.State,
+      changes: Option[DataFrame]): Seq[String] = {
+    import DeltaExport._
+    changes.toSeq.flatMap { c =>
+      val stage = Files.createTempDirectory("delta_cdc")
+      val w = c.write.mode("overwrite")
+      (if (st.partitionCols.nonEmpty) w.partitionBy(st.partitionCols: _*)
+      else w).parquet(stage.toString)
+      listParquet(stage).toSeq.sorted.map { rel =>
+        val dest = Paths.get(table, "_change_data", rel)
+        Files.createDirectories(dest.getParent)
+        Files.move(stage.resolve(rel), dest)
+        val pv = partitionValuesOf(rel, st.partitionCols)
+        val pvJson = pv.toSeq.sortBy(_._1)
+          .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
+          .mkString("{", ",", "}")
+        val full = s"_change_data/$rel"
+        s"""{"cdc":{"path":"${enc(full)}","partitionValues":$pvJson,"size":${Files.size(Paths.get(table, full))},"dataChange":false}}"""
+      }
+    }
+  }
+
+  /** The one commit of [[merge]] and [[applyChanges]]: a `remove` per
+    * touched file (carrying its replaced deletion vector), an `add`
+    * per staged file, the `cdc` actions and the `txn`, claimed as the
+    * next free version. The claim loop is the serializable gate: if
+    * any data commit changed the active file set since `st` was read,
+    * the matched / not-matched sets may be stale, so it aborts with
+    * `ConcurrentModificationException` and commits nothing. It also
+    * re-checks the `txn` replay gate, so a racing replica of the same
+    * app cannot apply one batch twice (None). Row-tracking adds take
+    * fresh base ids past the CURRENT watermark and the claimed
+    * version as their default commit version.
+    */
+  private def commit(
+      spark: SparkSession, table: String, st: DeltaLog.State,
+      touched: Seq[String], staged: Seq[String], cdcLines: Seq[String],
+      txn: Option[(String, Long)], beforeCommit: () => Unit): Option[Long] = {
+    import DeltaExport._
+    val rowTracking = DeltaRowTracking.enabled(st)
     val conf = Some(spark.sparkContext.hadoopConfiguration)
     val byAbs = st.active.values
       .map(a => DeltaLog.absPath(table, a.path) -> a).toMap
@@ -523,21 +472,23 @@ object DeltaMerge {
         .map(d => s""","deletionVector":${dvJson(d)}""").getOrElse("")
       s"""{"remove":{"path":"${esc(a.path)}","deletionTimestamp":${System.currentTimeMillis()},"dataChange":true$dvPart}}"""
     }
+    val txnLines = txn.toSeq.map { case (appId, batchV) =>
+      s"""{"txn":{"appId":"${esc(appId)}","version":$batchV}}"""
+    }
     // staged row counts once (bounded footer reads) — the rt claim
     // loop re-derives base ids per attempt but never re-counts
-    val hconf = spark.sparkContext.hadoopConfiguration
     val counts =
       if (!rowTracking) Map.empty[String, Long]
       else staged.map(rel => rel -> recordCount(
-        hconf, Paths.get(table, rel).toAbsolutePath.toString)).toMap
+        conf.get, Paths.get(table, rel).toAbsolutePath.toString)).toMap
     beforeCommit()
     var v = nextVersion(table)
     var committed = false
     while (!committed) {
-      // serializable gate: any data commit since the read snapshot
-      // may invalidate the matched / not-matched sets — abort rather
-      // than committing a merge computed against a stale table
       val cur = DeltaLog.stateAt(spark, table, None)
+      txn.foreach { case (appId, batchV) =>
+        if (cur.txns.get(appId).exists(_ >= batchV)) return None
+      }
       val before = st.active.map { case (p, a) =>
         p -> a.dv.map(_.pathOrInlineDv)
       }
@@ -549,10 +500,6 @@ object DeltaMerge {
           s"MERGE conflict on $table: a concurrent writer changed the " +
             "active file set since this merge read its snapshot — " +
             "aborted without committing; re-run against the new state")
-      // ROW-TRACKING adds take fresh base ids past the CURRENT
-      // watermark and THIS attempt's version as the default commit
-      // version (covers updated + inserted rows, whose materialized
-      // slots are null); carried rows' materialized values shadow
       val adds =
         if (!rowTracking)
           staged.map(rel =>
@@ -569,7 +516,7 @@ object DeltaMerge {
             l
           } :+ DeltaRowTracking.domainJson(next - 1)
         }
-      val lines = cdcLines ++ removes ++ adds :+
+      val lines = txnLines ++ cdcLines ++ removes ++ adds :+
         s"""{"commitInfo":{"operation":"MERGE"}}"""
       committed = claim(table, v, lines)
       if (!committed) v = nextVersion(table)

@@ -40,10 +40,9 @@ import org.apache.spark.sql.types._
   * are a pruning optimization, not a semantics feature.
   *
   * Concurrency: metadata versions are claimed with the same
-  * atomic-exclusive hardlink discipline as [[DeltaExport]] /
-  * [[graft.etl.SnapshotStore]] — exactly the optimistic-commit
-  * protocol Iceberg's HadoopTableOperations implements with an atomic
-  * rename; the loser re-reads the table state and retries, which is
+  * atomic-exclusive hardlink discipline as [[DeltaExport]] — exactly
+  * the optimistic-commit protocol Iceberg's HadoopTableOperations
+  * implements with an atomic rename; the loser re-reads the table state and retries, which is
   * always safe for appends (disjoint uniquely-named data files).
   * `version-hint.text` is written LAST and non-atomically — the spec
   * treats it as a hint; [[IcebergTable]] falls back to a directory

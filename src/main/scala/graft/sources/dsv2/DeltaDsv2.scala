@@ -33,6 +33,13 @@ import graft.sources.{DeltaDv, DeltaLog}
   *   spark.readStream.format("graft-delta").load(path)    // snapshot+tail
   * }}}
   *
+  * A batch read is PINNED when its frame is made: `load` records the
+  * latest version beside the schema it resolves, and the scan reads
+  * that version however many commits land before the frame runs (a
+  * reader sees the snapshot it resolved); a new frame reads the new
+  * version. `versionAsOf`/`timestampAsOf`, `readChangeFeed`, streams,
+  * writes and `DELETE` resolve as they always did.
+  *
   * This is the one Delta read path: [[graft.sources.DeltaLog.read]]
   * and `readRange` are wrappers over it. `.filter(...)` pushes down
   * through `SupportsPushDownFilters` and prunes at TWO levels —
@@ -84,9 +91,11 @@ class DeltaTableProvider extends TableProvider with DataSourceRegister {
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new DeltaDsv2Table(path(properties), schema,
-      properties.asScala.toMap.map { case (k, v) => (k.toLowerCase, v) })
+      properties: JMap[String, String]): Table = {
+    val options = properties.asScala.toMap.map { case (k, v) => (k.toLowerCase, v) }
+    DeltaDsv2Table(path(properties), schema, options,
+      DeltaDsv2.pinFor(SparkSession.active, path(properties), options))
+  }
 }
 
 private[sources] object DeltaDsv2 {
@@ -111,6 +120,17 @@ private[sources] object DeltaDsv2 {
 
   def isCdf(options: Map[String, String]): Boolean =
     opt(options, "readChangeFeed").exists(_.equalsIgnoreCase("true"))
+
+  /** The version a batch read of `table` is pinned to when its frame
+    * is made: the latest version at load. None when the options name
+    * a version or a change feed, which resolve as they always did.
+    */
+  def pinFor(
+      spark: SparkSession, table: String,
+      options: Map[String, String]): Option[Long] =
+    if (isCdf(options) || opt(options, "versionAsOf").isDefined ||
+        opt(options, "timestampAsOf").isDefined) None
+    else Some(DeltaLog.version(spark, table))
 
   val cdfExtra: Seq[StructField] = Seq(
     StructField("_change_type", StringType),
@@ -259,7 +279,8 @@ object Dsv2Planning {
 // case class for the same reason as the Scan below: BatchScanExec's
 // equality covers its `table` field too
 private[dsv2] case class DeltaDsv2Table(
-    table: String, tableSchema: StructType, options: Map[String, String])
+    table: String, tableSchema: StructType, options: Map[String, String],
+    pinned: Option[Long])
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
@@ -302,11 +323,12 @@ private[dsv2] case class DeltaDsv2Table(
       : ScanBuilder =
     new DeltaScanBuilder(table, tableSchema,
       options ++ caseInsensitiveOptions.asScala.toMap
-        .map { case (k, v) => (k.toLowerCase, v) })
+        .map { case (k, v) => (k.toLowerCase, v) }, pinned)
 }
 
 private[dsv2] class DeltaScanBuilder(
-    table: String, tableSchema: StructType, options: Map[String, String])
+    table: String, tableSchema: StructType, options: Map[String, String],
+    pinned: Option[Long])
     extends ScanBuilder
     with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
@@ -329,7 +351,7 @@ private[dsv2] class DeltaScanBuilder(
       else StructType(Array(tableSchema.fields.minBy(_.name.length)))
 
   override def build(): Scan =
-    DeltaDsv2Scan(table, tableSchema, required, pushed.toSeq, options)
+    DeltaDsv2Scan(table, tableSchema, required, pushed.toSeq, options, pinned)
 }
 
 // a CASE class: AQE broadcast reuse (which dynamic partition pruning
@@ -337,7 +359,8 @@ private[dsv2] class DeltaScanBuilder(
 // a reference-equal scan silently degrades every DPP filter to `true`
 private[dsv2] case class DeltaDsv2Scan(
     table: String, tableSchema: StructType, required: StructType,
-    pushed: Seq[Filter], options: Map[String, String])
+    pushed: Seq[Filter], options: Map[String, String],
+    pinned: Option[Long] = None)
     extends Scan
     with SupportsReportStatistics
     with SupportsRuntimeFiltering
@@ -370,7 +393,7 @@ private[dsv2] case class DeltaDsv2Scan(
     runtimeFilters = filters
 
   private lazy val st = DeltaLog.stateAt(
-    spark, table, DeltaDsv2.versionFor(spark, table, options))
+    spark, table, DeltaDsv2.versionFor(spark, table, options).orElse(pinned))
 
   /** COLUMN MAPPING (r17): mode and the logical→physical name map —
     * `add.partitionValues`, `add.stats` and (name mode) the parquet

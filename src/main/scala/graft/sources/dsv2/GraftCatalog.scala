@@ -77,10 +77,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     formatOf(ident) match {
       case "delta" =>
         DeltaDsv2Table(path,
-          DeltaDsv2.schemaFor(SparkSession.active, path, opts), opts)
+          DeltaDsv2.schemaFor(SparkSession.active, path, opts), opts,
+          DeltaDsv2.pinFor(SparkSession.active, path, opts))
       case _ =>
         IcebergDsv2Table(path,
-          IcebergDsv2.plan(SparkSession.active, path, opts).schema, opts)
+          IcebergDsv2.plan(SparkSession.active, path, opts).schema, opts,
+          IcebergDsv2.pinFor(path, opts))
     }
   }
 

@@ -26,6 +26,14 @@ import graft.sources.{DeltaLog, IcebergBounds, IcebergTable}
   *     .option("timestampAsOf", "2026-08-01T00:00:00Z")
   * }}}
   *
+  * A batch read is PINNED when its frame is made: `load` records the
+  * current snapshot id beside the schema it resolves, and the scan
+  * plans that snapshot however many commits land before the frame
+  * runs — as [[IcebergTable.read]], which plans when called, always
+  * did; a new frame reads the new snapshot. `snapshotId`/`ref`/
+  * `timestampAsOf`, `readChangeFeed`, streams, writes and `DELETE`
+  * resolve as they always did.
+  *
   * `.filter(...)` prunes files against the manifests'
   * `lower_bounds`/`upper_bounds`/`null_value_counts` and exact
   * identity-partition values (the same state
@@ -80,9 +88,11 @@ class IcebergTableProvider extends TableProvider with DataSourceRegister {
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new IcebergDsv2Table(path(properties), schema,
-      properties.asScala.toMap.map { case (k, v) => (k.toLowerCase, v) })
+      properties: JMap[String, String]): Table = {
+    val options = properties.asScala.toMap.map { case (k, v) => (k.toLowerCase, v) }
+    IcebergDsv2Table(path(properties), schema, options,
+      IcebergDsv2.pinFor(path(properties), options))
+  }
 }
 
 private[dsv2] object IcebergDsv2 {
@@ -96,6 +106,18 @@ private[dsv2] object IcebergDsv2 {
 
   def isCdf(options: Map[String, String]): Boolean =
     opt(options, "readChangeFeed").exists(_.equalsIgnoreCase("true"))
+
+  /** The snapshot a batch read of `table` is pinned to when its frame
+    * is made: the current snapshot at load (None while the table has
+    * none). None when the options name a snapshot, ref, timestamp or
+    * change feed, which resolve as they always did.
+    */
+  def pinFor(table: String, options: Map[String, String]): Option[Long] =
+    if (isCdf(options) ||
+        Seq("snapshotId", "ref", "timestampAsOf").exists(opt(options, _).isDefined))
+      None
+    else Option(IcebergTable.metadataJson(table).get("current-snapshot-id"))
+      .map(_.asLong()).filter(_ != -1L)
 
   /** The changelog column triple (iceberg-spark's
     * `create_changelog_view` surface, the batch
@@ -142,7 +164,7 @@ private[dsv2] object IcebergDsv2 {
 
   def plan(
       spark: SparkSession, table: String,
-      options: Map[String, String]): Planned = {
+      options: Map[String, String], pinned: Option[Long] = None): Planned = {
     val meta = IcebergTable.metadataJson(table)
     val fv = meta.get("format-version").asInt()
     val snapId = opt(options, "snapshotId").map(_.toLong)
@@ -158,6 +180,7 @@ private[dsv2] object IcebergDsv2 {
           java.time.Instant.parse(ts).toEpochMilli)
         IcebergTable.snapshotAtTimestamp(table, ms)
       })
+      .orElse(pinned)
     // a freshly-created table has no snapshot yet (CTAS before the
     // first INSERT): zero entries under the declared schema
     val hasCurrent = Option(meta.get("current-snapshot-id"))
@@ -327,7 +350,8 @@ private[dsv2] object IcebergDsv2 {
 // case class for the same reason as the Scan below: BatchScanExec's
 // equality covers its `table` field too
 private[dsv2] case class IcebergDsv2Table(
-    table: String, tableSchema: StructType, options: Map[String, String])
+    table: String, tableSchema: StructType, options: Map[String, String],
+    pinned: Option[Long])
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
@@ -365,11 +389,12 @@ private[dsv2] case class IcebergDsv2Table(
       : ScanBuilder =
     new IcebergScanBuilder(table, tableSchema,
       options ++ caseInsensitiveOptions.asScala.toMap
-        .map { case (k, v) => (k.toLowerCase, v) })
+        .map { case (k, v) => (k.toLowerCase, v) }, pinned)
 }
 
 private[dsv2] class IcebergScanBuilder(
-    table: String, tableSchema: StructType, options: Map[String, String])
+    table: String, tableSchema: StructType, options: Map[String, String],
+    pinned: Option[Long])
     extends ScanBuilder
     with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
@@ -390,7 +415,7 @@ private[dsv2] class IcebergScanBuilder(
       else StructType(Array(tableSchema.fields.minBy(_.name.length)))
 
   override def build(): Scan =
-    IcebergDsv2Scan(table, tableSchema, required, pushed.toSeq, options)
+    IcebergDsv2Scan(table, tableSchema, required, pushed.toSeq, options, pinned)
 }
 
 // a CASE class: AQE broadcast reuse (which dynamic partition pruning
@@ -398,7 +423,8 @@ private[dsv2] class IcebergScanBuilder(
 // a reference-equal scan silently degrades every DPP filter to `true`
 private[dsv2] case class IcebergDsv2Scan(
     table: String, tableSchema: StructType, required: StructType,
-    pushed: Seq[Filter], options: Map[String, String])
+    pushed: Seq[Filter], options: Map[String, String],
+    pinned: Option[Long] = None)
     extends Scan
     with SupportsReportStatistics
     with SupportsRuntimeFiltering
@@ -424,7 +450,7 @@ private[dsv2] case class IcebergDsv2Scan(
     runtimeFilters = filters
 
   private[dsv2] lazy val p =
-    IcebergDsv2.plan(SparkSession.active, table, options)
+    IcebergDsv2.plan(SparkSession.active, table, options, pinned)
 
   private def keptFiles(): Seq[IcebergTable.FileEntry] = {
     val all = pushed ++ runtimeFilters

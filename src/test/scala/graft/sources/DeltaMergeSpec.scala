@@ -194,6 +194,19 @@ class DeltaMergeSpec extends SparkSpec {
     assert(rows(t).contains((1L, "U1", 111L)))
   }
 
+  test("applyChanges refuses two changes for one key: the caller nets them first") {
+    val t = tbl(); mk(t)
+    val changes = Seq((1L, "early", 1L), (1L, "late", 2L))
+      .map { case (k, s, n) => (k, s, n, "update_postimage") }
+      .toDF("id", "s", "n", "_change_type")
+    val e = intercept[IllegalArgumentException] {
+      DeltaMerge.applyChanges(spark, t, changes, Seq("id"))
+    }
+    assert(e.getMessage.contains("NET changes"), e.getMessage)
+    assert(DeltaLog.version(spark, t) == 1L, "a refused change set commits nothing")
+    assert(rows(t).contains((1L, "r1", 10L)))
+  }
+
   test("setProperties preserves the table id and upgrades the protocol for CDF") {
     val t = tbl(); mk(t)
     val id0 = DeltaLog.stateAt(spark, t, None).tableId
