@@ -14,12 +14,18 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** The five warehouse tables. `entityOver` builds the entity table
+    * over a given copy of the sentence table (`entity` is it over
+    * `sentence`): a caller that stores `sentence` aligns the entities
+    * to the stored rows instead of recomputing the sentence lineage.
+    */
   case class Warehouse(
       time: DataFrame,
       podcast: DataFrame,
       episode: DataFrame,
       sentence: DataFrame,
-      entity: DataFrame)
+      entity: DataFrame,
+      entityOver: DataFrame => DataFrame)
 
   /** Run the whole dataflow from fixture-fed sources.
     * @param feedsPath  directory of RSS XML files (E5)
@@ -38,9 +44,9 @@ object Pipeline {
     val ready = Transcripts.completeEpisodes(chunks, expected)
     val transcripts =
       Transcripts.reduceTranscripts(chunks.join(ready, Seq("episode_id")))
-    val entity = Entities.entityDimension(
-      Stubs.stubEntities(transcripts, "text"),
-      sentence)
-    Warehouse(dims.time, dims.podcast, dims.episode, sentence, entity)
+    val mentions = Stubs.stubEntities(transcripts, "text")
+    val entityOver = (s: DataFrame) => Entities.entityDimension(mentions, s)
+    Warehouse(dims.time, dims.podcast, dims.episode, sentence,
+      entityOver(sentence), entityOver)
   }
 }

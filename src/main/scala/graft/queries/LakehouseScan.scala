@@ -446,10 +446,10 @@ object LakehouseScan {
       .orderBy(col("c_custkey"))
 
   /** x23 — Iceberg v2 scan through manifest replay + BOTH
-    * merge-on-read delete kinds (position anti-join on
-    * (path, row_index); equality anti-join on o_custkey scoped by
-    * sequence number). Oracle: the original orders parquet minus both
-    * deleted sets.
+    * merge-on-read delete kinds (positions dropped by row index;
+    * equality deletes on o_custkey scoped by sequence number), read
+    * with `IcebergTable.read`. Oracle: the original orders parquet
+    * minus both deleted sets.
     */
   def icebergScan(spark: SparkSession, dir: String): DataFrame =
     IcebergTable.read(spark, icebergOrders(spark, dir))
@@ -1109,7 +1109,7 @@ object LakehouseScan {
          WHERE c_nationkey < 13
          ORDER BY c_custkey""",
     // x46: x32's oracle SQL verbatim — the DSv2 multi-era read must
-    // converge byte-identically with the bespoke era resolution
+    // converge byte-identically with x32's
     "x46_dsv2_iceberg_evolved" ->
       """SELECT c_custkey, c_name, c_nationkey, c_acctbal
          FROM customer

@@ -70,7 +70,9 @@ object WarehouseQueries {
 
   /** The warehouse tables as session-cached frames: each table is
     * stored (`SessionCache.cached` key `wh.<table>`) when a query
-    * first reads it, so a table no query reads is never computed.
+    * first reads it, so a table no query reads is never computed. The
+    * entity table is built over the stored sentence table, so the
+    * sentence lineage runs once per session.
     */
   private class Wh(spark: SparkSession) {
     private def table(name: String)(pick: Pipeline.Warehouse => DataFrame) =
@@ -79,7 +81,7 @@ object WarehouseQueries {
     def podcast: DataFrame = table("podcast")(_.podcast)
     def episode: DataFrame = table("episode")(_.episode)
     def sentence: DataFrame = table("sentence")(_.sentence)
-    def entity: DataFrame = table("entity")(_.entity)
+    def entity: DataFrame = table("entity")(_.entityOver(sentence))
   }
 
   private def wh(spark: SparkSession): Wh = new Wh(spark)

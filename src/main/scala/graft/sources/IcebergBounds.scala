@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
   * little-endian fixed-width for numerics, 4-byte LE epoch days for
   * dates, raw UTF-8 for strings, one 0/1 byte for booleans. Shared by
   * the manifest writer ([[IcebergExport]] — values lifted from
-  * parquet footer statistics) and the pruning reader
-  * ([[IcebergTable.prunedDataFiles]]).
+  * parquet footer statistics) and the `graft-iceberg` scan's file
+  * pruning ([[graft.sources.dsv2.IcebergDsv2.statsView]]).
   */
 private[sources] object IcebergBounds {
 
@@ -75,29 +75,5 @@ private[sources] object IcebergBounds {
     case BooleanType if bytes.length == 1 => Some(bytes(0) != 0)
     case StringType => Some(new String(bytes, StandardCharsets.UTF_8))
     case _ => None
-  }
-
-  /** Predicate bound (user-supplied) → the same comparison domain as
-    * [[decode]], or None when it cannot be compared (→ no pruning).
-    */
-  def bound(dt: DataType, v: Any): Option[Any] = (dt, v) match {
-    case (IntegerType | LongType | ShortType | ByteType | FloatType |
-      DoubleType, n: Number) => Some(BigDecimal(n.toString))
-    case (DateType, d: java.sql.Date) => Some(d.toLocalDate)
-    case (DateType, d: java.time.LocalDate) => Some(d)
-    case (DateType, s: String) =>
-      scala.util.Try(java.time.LocalDate.parse(s)).toOption
-    case (StringType, s: String) => Some(s)
-    case (BooleanType, b: Boolean) => Some(b)
-    case _ => None
-  }
-
-  /** a ≤ b in the shared comparison domain. */
-  def leq(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: BigDecimal, y: BigDecimal) => x <= y
-    case (x: java.time.LocalDate, y: java.time.LocalDate) => !x.isAfter(y)
-    case (x: String, y: String) => x <= y
-    case (x: Boolean, y: Boolean) => !x || y
-    case _ => true // incomparable → never prune on it
   }
 }

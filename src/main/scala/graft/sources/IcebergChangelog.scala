@@ -116,6 +116,10 @@ object IcebergChangelog {
       StructField("_change_type", StringType),
       StructField("_change_ordinal", IntegerType),
       StructField("_commit_snapshot_id", LongType)))
+    // the live rows of `files` at snapshot `at`, through the scan
+    def liveIn(at: Option[Long], files: Set[String]): DataFrame =
+      IcebergTable.read(spark, table, at)
+        .filter(col("_file").isin(files.toSeq: _*))
     def stamped(df: DataFrame, kind: String, ord: Int, sid: Long): DataFrame =
       df.select(schema.fields.map(f => col(f.name)) :+
         lit(kind).as("_change_type") :+
@@ -149,13 +153,11 @@ object IcebergChangelog {
         val inserts =
           if (added.isEmpty) None
           else Some(stamped(
-            IcebergTable.readCore(spark, table, Some(sid),
-              Some(added.toSet)), "insert", ord, sid))
+            liveIn(Some(sid), added.toSet), "insert", ord, sid))
         val fileDeletes =
           if (removed.isEmpty) None
           else Some(stamped(
-            IcebergTable.readCore(spark, table, parent,
-              Some(removed.toSet)), "delete", ord, sid))
+            liveIn(parent, removed.toSet), "delete", ord, sid))
 
         // ---- new row-level delete content on carried files --------
         val delS = IcebergTable.deleteFilesOf(table, meta, snap)
@@ -227,16 +229,17 @@ object IcebergChangelog {
               else Some(broadcast(dvNewPairs.toDF("__cl_f", "__cl_i")))
             val allNew = (newParq.toSeq ++ dvNew.toSeq)
               .reduce(_.unionByName(_))
-            // rows at the newly-dead positions, read at the PARENT
-            // restricted to carried files (removed files' rows
+            // rows at the newly-dead positions, read live at the
+            // PARENT restricted to carried files (removed files' rows
             // already fed as whole-file deletes; positions in
             // same-commit-added files never lived before S)
-            val rows = IcebergTable.readCore(spark, table, parent,
-              Some(common), withPos = true)
+            val live = liveIn(parent, common)
+            val rows = live.select(live.columns.toSeq.map(col) ++
+              Seq(col("_file"), col("_pos")): _*)
             Some(stamped(rows.join(
               allNew,
-              rows("__pos_file") === allNew("__cl_f") &&
-                rows("__pos_index") === allNew("__cl_i"),
+              rows("_file") === allNew("__cl_f") &&
+                rows("_pos") === allNew("__cl_i"),
               "left_semi"), "delete", ord, sid))
           }
 
@@ -248,8 +251,7 @@ object IcebergChangelog {
             val schemaNode = IcebergTable.schemaNodeOf(meta)
             val idToField = schemaNode.get("fields").elements().asScala
               .map(f => f.get("id").asInt() -> f).toMap
-            val live = IcebergTable.readCore(spark, table, parent,
-              Some(common))
+            val live = liveIn(parent, common)
             val matchedFrames = eqNew.groupBy(_.equalityIds).toSeq
               .sortBy(_._1.mkString(","))
               .map { case (ids, files) =>

@@ -743,7 +743,7 @@ object IcebergExport {
       prevManifestList: Option[String]): Seq[ManifestRef] =
     prevManifestList.toSeq.flatMap { ml =>
       val r = new DataFileReader[GenericRecord](
-        new File(ml.replaceFirst("^file:/*", "/")),
+        new File(DeltaLog.canonFile(ml)),
         new GenericDatumReader[GenericRecord]())
       try r.iterator().asScala.map { rec =>
         def opt(f: String): Option[AnyRef] =
@@ -2038,7 +2038,7 @@ object IcebergExport {
     */
   private def rewriteManifestRowIds(
       table: String, srcPath: String, base: Long): (String, Long, Long) = {
-    val src = new File(srcPath.replaceFirst("^file:/*", "/"))
+    val src = new File(DeltaLog.canonFile(srcPath))
     val r = new DataFileReader[GenericRecord](
       src, new GenericDatumReader[GenericRecord]())
     try {
@@ -2362,7 +2362,7 @@ object IcebergExport {
         mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
       if (committed) {
         victims.foreach(p => Files.deleteIfExists(
-          Paths.get(p.replaceFirst("^file:/*", "/"))))
+          Paths.get(DeltaLog.canonFile(p))))
         deleted = victims.sorted
       }
     }
@@ -2407,18 +2407,20 @@ object IcebergExport {
       victims: Set[String], fv0: Int, pfs: Seq[PartField],
       schemaNode: com.fasterxml.jackson.databind.JsonNode,
       bins: Int): Seq[Added] = {
-    val rows =
-      (if (fv0 >= 3)
-        IcebergTable.readCore(spark, table, None, Some(victims),
-          withLineage = true)
-      else IcebergTable.readKeep(spark, table, victims)).coalesce(bins)
+    import org.apache.spark.sql.functions.col
+    val all = IcebergTable.read(spark, table)
+    val rows = all.filter(col("_file").isin(victims.toSeq: _*))
+      .select(all.columns.toSeq.map(col) ++
+        (if (fv0 >= 3)
+          Seq(col("_row_id"), col("_last_updated_sequence_number"))
+        else Nil): _*)
+      .coalesce(bins)
     val lineageFieldIds = Map(
       "_row_id" -> 2147483540L,
       "_last_updated_sequence_number" -> 2147483539L)
     val staged =
       if (fv0 < 3) deriveCols(rows, pfs)
       else {
-        import org.apache.spark.sql.functions.col
         val d = deriveCols(rows, pfs)
         d.select(d.columns.toSeq.map { c =>
           lineageFieldIds.get(c) match {
@@ -2901,14 +2903,13 @@ object IcebergExport {
     * the prior manifests forward PLUS one content=1 delete manifest,
     * upgrading the table to format-version 2 on first use. No data
     * file is rewritten; time travel to pre-delete snapshots sees the
-    * rows; deletes are CUMULATIVE across snapshots (re-deleting an
-    * already-deleted position is harmless — the reader's anti-join
-    * dedups). Position deletes target files by UNIQUE path, so the
-    * application needs no sequence-number bookkeeping (the numbers
-    * are still written for spec shape). Scope: tables whose manifests
-    * all carry the CURRENT schema (delete-after-evolution would need
-    * per-era scan plumbing) and equality deletes never. Returns the
-    * new snapshot id, or None when nothing matched.
+    * rows; deletes are CUMULATIVE across snapshots, and the condition
+    * matches only rows live at the current snapshot (one matching
+    * only deleted rows commits nothing). Position deletes target
+    * files by UNIQUE path, so the application needs no
+    * sequence-number bookkeeping (the numbers are still written for
+    * spec shape). Returns the new snapshot id, or None when no live
+    * row matched.
     */
   def deleteWhere(
       spark: org.apache.spark.sql.SparkSession, table: String,
@@ -2921,15 +2922,13 @@ object IcebergExport {
         "(puffin deletion vectors)")
     val snap0 = IcebergTable.currentSnapshotNode(meta0)
     if (IcebergTable.dataFilesOf(table, meta0, snap0).isEmpty) return None
-    // per-era position-preserving scan (r13 — the schema-evolution
-    // refusal lifted): evolution resolves by field-id exactly as a
-    // read does, identity partition sources attach so the condition
-    // may reference them, and each row carries its (file, row index).
-    // Rows already dead under existing deletes may re-match — a
-    // duplicate position entry is harmless by the reader's anti-join.
-    val matched = IcebergTable.readWithPos(spark, table)
+    // the live rows the condition matches, by (file, position): the
+    // read resolves evolution by field-id and attaches identity
+    // partition sources so the condition may reference them; rows
+    // already dead under existing deletes never match
+    val matched = IcebergTable.read(spark, table)
       .filter(condition)
-      .select(col("__pos_file"), col("__pos_index")).collect()
+      .select(col("_file"), col("_pos")).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     if (matched.isEmpty) return None
     // ONE sorted position-delete parquet file under data/, with the
@@ -3263,7 +3262,7 @@ object IcebergExport {
     */
   private def deleteManifestKinds(mp: String): Set[String] = {
     val r = new DataFileReader[GenericRecord](
-      new File(mp.replaceFirst("^file:/*", "/")),
+      new File(DeltaLog.canonFile(mp)),
       new GenericDatumReader[GenericRecord]())
     try r.iterator().asScala
       .filter(_.get("status").toString.toInt != 2)
@@ -3288,7 +3287,7 @@ object IcebergExport {
     * with their sequence scoping intact. Time travel to pre-delete
     * snapshots sees the rows (old snapshots keep the old puffin
     * files; [[expireSnapshots]] reclaims them). Returns the snapshot
-    * id, or None when nothing matched.
+    * id, or None when no live row matched.
     */
   def deleteWhereDv(
       spark: org.apache.spark.sql.SparkSession, table: String,
@@ -3300,11 +3299,10 @@ object IcebergExport {
         "(v1/v2 row deletes go through deleteWhere)")
     val snap0 = IcebergTable.currentSnapshotNode(meta0)
     if (IcebergTable.dataFilesOf(table, meta0, snap0).isEmpty) return None
-    // per-era position-preserving scan; rows already dead under
-    // existing vectors may re-match — the merge below dedups
-    val matched = IcebergTable.readWithPos(spark, table)
+    // the live rows the condition matches, by (file, position)
+    val matched = IcebergTable.read(spark, table)
       .filter(condition)
-      .select(col("__pos_file"), col("__pos_index")).collect()
+      .select(col("_file"), col("_pos")).collect()
       .map(r => (r.getString(0), r.getLong(1)))
     if (matched.isEmpty) return None
     val newByFile: Map[String, Array[Long]] =

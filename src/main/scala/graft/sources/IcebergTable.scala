@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Read-only Apache Iceberg table reader built from the OPEN Iceberg
+/** Apache Iceberg table METADATA reader built from the OPEN Iceberg
   * table spec (iceberg.apache.org/spec: a `metadata/` directory of
   * `v<N>.metadata.json` files — the HadoopCatalog layout — each
   * naming a current snapshot whose avro manifest list references avro
@@ -21,30 +21,18 @@ import org.apache.spark.sql.types._
   * lakehouse formats' interop tier; [[IcebergExport]] is the write
   * side.
   *
-  * Supported: format-version 1 and 2 READS — current or
-  * time-traveled snapshot by snapshot-id, manifest-list or (legacy
-  * v1) inline-manifests snapshots, multi-manifest snapshots,
-  * `version-hint.text` or max-version discovery, Iceberg→Spark schema
-  * conversion (primitives, struct/list/map, decimal, fixed), SCHEMA
-  * EVOLUTION resolved by FIELD-ID through each manifest's embedded
-  * write-time schema (see [[read]]) incl. the spec's lossless type
-  * promotions, v2 POSITION deletes applied as a broadcast anti-join
-  * on (canonical path, `_metadata.row_index`), v2 EQUALITY deletes
-  * (content=2 — what CDC writers like Flink emit) applied as
-  * broadcast anti-joins on the `equality_ids` key columns scoped by
-  * SEQUENCE NUMBER (a delete hits only data files with a strictly
-  * smaller data sequence number, the spec's rule), and
-  * manifest-bounds file skipping ([[prunedDataFiles]]/[[readRange]]).
-  * IDENTITY-partition source columns are materialized from the
-  * manifests' typed partition structs as per-file constants — exactly
-  * Iceberg's own `PartitionUtil.constantsMap` read path — via ONE
-  * broadcast equi-join on the scan's canonical file path, so
-  * [[IcebergExport]]'s hive-staged tables, UniForm-converted Delta
-  * tables, and Hive-migrated tables (none of which carry the source
-  * columns in their data files) all read correctly; non-identity
-  * transforms need no reconstruction (Iceberg always writes their
-  * source columns into the files). Unsupported features fail LOUDLY
-  * rather than return wrong rows: format-version ≥ 3, non-parquet
+  * This object resolves snapshots (by id, ref, timestamp or
+  * `version-hint.text`/max-version discovery), schemas (Iceberg→Spark
+  * type conversion, the schema history field-id resolution walks),
+  * manifests (manifest-list or legacy v1 inline form, each with its
+  * embedded write-time schema and partition spec), data-file entries
+  * (partition values, bounds, sequence numbers, row lineage) and
+  * delete-file entries (position, equality, v3 puffin deletion
+  * vectors). Every read of DATA files goes through the
+  * `graft-iceberg` DataSourceV2 scan
+  * ([[graft.sources.dsv2.IcebergTableProvider]]); [[read]] and its
+  * siblings are wrappers over it. Unsupported features fail LOUDLY
+  * rather than return wrong rows: format-version > 3, non-parquet
   * file formats, type changes beyond the spec's promotions, equality
   * deletes whose key field-id left the current schema, and — for
   * out-of-spec manifests without an embedded schema — a sampled
@@ -55,21 +43,13 @@ import org.apache.spark.sql.types._
   * by files-in-snapshot (the same state the Iceberg library's
   * planning keeps); avro decoding uses the file-embedded writer
   * schema (`GenericDatumReader`), so real manifests with optional
-  * fields this reader doesn't know still decode. The DATA read is one
-  * `spark.read.parquet` over the snapshot's file set — distributed
-  * scan, schema projection pushed down.
+  * fields this reader doesn't know still decode.
   */
 object IcebergTable {
 
   private val mapper = new ObjectMapper()
 
   private def metaDir(table: String): Path = Paths.get(table, "metadata")
-
-  /** Strip a `file:` scheme — manifests written by real engines carry
-    * absolute URIs; ours carry absolute paths.
-    */
-  private def local(uri: String): String =
-    uri.replaceFirst("^file:/*", "/")
 
   /** The newest `v<N>.metadata.json`. `version-hint.text` (when
     * present and valid) is a STARTING POINT, not the answer — the
@@ -288,7 +268,7 @@ object IcebergTable {
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), ManifestData]()
 
   private def avroRecordsWithMeta(path: String): ManifestData = {
-    val f = new File(local(path))
+    val f = new File(DeltaLog.canonFile(path))
     val key = (f.getAbsolutePath, f.length(), f.lastModified())
     val hit = manifestMemo.get(key)
     if (hit != null) return hit
@@ -369,6 +349,10 @@ object IcebergTable {
       // field name, source field-id) — the columns that must
       // reconstruct from `pv` for THIS file (they are not in it)
       idFields: Seq[(String, Int)] = Nil,
+      // TEMPORAL (day/month/year/hour) fields of the file's manifest
+      // spec, as (partition field name, transform, source field-id):
+      // monotonic, so their ordinals bound the source column's values
+      temporalFields: Seq[(String, String, Int)] = Nil,
       // write-time record (manifest avro meta, r15): this file's
       // null-first_row_id entries carry materialized lineage columns
       // — true skips the footer probe; None = foreign manifest, probe
@@ -447,8 +431,8 @@ object IcebergTable {
       .flatMap { case (mp, _, _) =>
         avroRecordsWithMeta(mp).records.flatMap { e =>
           if (e.get("status").toString.toInt == 2) None
-          else Some(str(
-            e.get("data_file").asInstanceOf[GenericRecord], "file_path"))
+          else Some(DeltaLog.canonFile(str(
+            e.get("data_file").asInstanceOf[GenericRecord], "file_path")))
         }
       }.toSet
 
@@ -502,8 +486,8 @@ object IcebergTable {
               "puffin deletion-vector entry without " +
                 "referenced_data_file: refused rather than guessing")
             Some(DeleteFile(
-              local(str(df, "file_path")), content, seq, eqIds,
-              format, refFile.map(local),
+              DeltaLog.canonFile(str(df, "file_path")), content, seq, eqIds,
+              format, refFile.map(DeltaLog.canonFile),
               opt(df, "content_offset").map(_.toString.toLong),
               opt(df, "content_size_in_bytes").map(_.toString.toLong)))
           }
@@ -565,6 +549,9 @@ object IcebergTable {
         }
       val manifestIdFields: Seq[(String, Int)] = specFields
         .filter(_._2 == "identity").map(f => (f._1, f._3))
+      val manifestTemporal: Seq[(String, String, Int)] = specFields
+        .filter(f => Set("day", "month", "year", "hour")(f._2))
+        .map(f => (f._1, f._2, f._3))
       records.flatMap { entry =>
         val status = entry.get("status").toString.toInt
         if (status == 2) None // DELETED: not part of this snapshot
@@ -589,7 +576,7 @@ object IcebergTable {
               }.toMap
             }
           Some(FileEntry(
-            local(str(df, "file_path")), pv, writerSchema,
+            DeltaLog.canonFile(str(df, "file_path")), pv, writerSchema,
             records = opt(df, "record_count")
               .map(_.toString.toLong).getOrElse(-1L),
             lower = kvMap(opt(df, "lower_bounds"))
@@ -602,6 +589,7 @@ object IcebergTable {
               .map(_.toString.toLong).getOrElse(listSeq),
             firstRowId = opt(df, "first_row_id").map(_.toString.toLong),
             idFields = manifestIdFields,
+            temporalFields = manifestTemporal,
             lineageMat = md.lineageMat))
         }
       }
@@ -630,7 +618,7 @@ object IcebergTable {
       else Nil).toSet.flatMap { (mp: String) =>
         avroRecords(mp)
           .filter(_.get("status").toString.toInt == 1) // ADDED
-          .map(e => local(str(
+          .map(e => DeltaLog.canonFile(str(
             e.get("data_file").asInstanceOf[GenericRecord], "file_path")))
       }
     dataFilesWithPartitions(table, meta, snap)
@@ -669,7 +657,8 @@ object IcebergTable {
   }
 
   /** Rename-without-rewrite detection (a bounded ONE-footer driver
-    * read): parquet columns are resolved by NAME below, but the spec
+    * read): the `graft-iceberg` scan resolves the parquet columns of a
+    * manifest without an embedded schema by NAME, but the spec
     * requires field-id resolution — a real table whose column was
     * renamed in place would name-resolve to silent nulls. A sampled
     * data file whose footer lacks an expected column name fails
@@ -693,39 +682,14 @@ object IcebergTable {
         "rather than returning null columns")
   }
 
-  /** The literal a schema field's `initial-default` (v3 column
-    * defaults) assigns to rows predating the column — typed per the
-    * field; null when no default is declared. Unsupported default
-    * types refuse loudly rather than silently nulling (the
-    * wrong-rows failure this reader's contract forbids).
-    */
-  private def initialDefaultLit(
-      cf: JsonNode, dt: DataType): org.apache.spark.sql.Column =
-    Option(cf.get("initial-default")).filterNot(_.isNull) match {
-      case None => lit(null).cast(asNullableType(dt))
-      case Some(v) =>
-        val l = dt match {
-          case LongType => lit(v.asLong())
-          case IntegerType => lit(v.asInt())
-          case DoubleType => lit(v.asDouble())
-          case FloatType => lit(v.floatValue())
-          case StringType => lit(v.asText())
-          case BooleanType => lit(v.asBoolean())
-          case d: DecimalType => lit(new java.math.BigDecimal(v.asText()))
-          case other => throw new IllegalArgumentException(
-            s"initial-default on unsupported type $other: refused " +
-              "rather than returning nulls for defaulted rows")
-        }
-        l.cast(asNullableType(dt))
-    }
-
   /** Whether a data file physically carries MATERIALIZED row-lineage
     * columns (`_row_id` / `_last_updated_sequence_number`) — what v3
     * lineage-preserving compaction writes for rewritten rows, whose
     * manifest `first_row_id` stays null (the spec: inheritance applies
-    * only to rows WITHOUT materialized lineage). One bounded driver
-    * footer read per candidate file — probed only for v3 files with a
-    * null `first_row_id` on lineage reads — cached per path (data
+    * only to rows WITHOUT materialized lineage). The `graft-iceberg`
+    * scan asks only for v3 files with a null `first_row_id` whose
+    * manifest lacks the write-time marker (a foreign writer's); one
+    * bounded driver footer read per such file, cached per path (data
     * files are immutable).
     */
   private val matLineageCache =
@@ -736,7 +700,8 @@ object IcebergTable {
     */
   private[sources] val lineageProbes =
     new java.util.concurrent.atomic.AtomicLong(0L)
-  private def footerHasLineage(spark: SparkSession, path: String): Boolean =
+  private[sources] def footerHasLineage(
+      spark: SparkSession, path: String): Boolean =
     matLineageCache.computeIfAbsent(path, { p: String =>
       lineageProbes.incrementAndGet()
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -749,12 +714,11 @@ object IcebergTable {
       finally reader.close()
     }).booleanValue()
 
-  /** Structural compatibility ignoring field NAMES (renames are the
-    * point of field-id resolution), admitting exactly the spec's
-    * LOSSLESS type promotions (int → long, float → double, decimal
-    * precision widening at the same scale — the cast below is then
-    * value-preserving); anything else — narrowing, reshapes, changed
-    * primitives — is refused loudly rather than miscast.
+  /** The spec's LOSSLESS primitive type promotions (int → long,
+    * float → double, decimal precision widening at the same scale),
+    * which Spark's parquet readers perform at decode; anything else —
+    * narrowing, changed primitives — is refused loudly rather than
+    * miscast.
     */
   private[sources] def promotable(from: DataType, to: DataType): Boolean =
     (from, to) match {
@@ -763,56 +727,13 @@ object IcebergTable {
       case (FloatType, DoubleType) => true
       case (a: DecimalType, b: DecimalType) =>
         b.scale == a.scale && b.precision >= a.precision
-      case (x: StructType, y: StructType) =>
-        x.fields.length == y.fields.length &&
-          x.fields.zip(y.fields).forall { case (f, g) =>
-            promotable(f.dataType, g.dataType)
-          }
-      case (x: ArrayType, y: ArrayType) =>
-        promotable(x.elementType, y.elementType)
-      case (x: MapType, y: MapType) =>
-        promotable(x.keyType, y.keyType) &&
-          promotable(x.valueType, y.valueType)
       case _ => false
-    }
-
-  /** NESTED alignment check choosing between the two evolved-read
-    * strategies below: the structurally-identical cast renames nested
-    * struct fields BY POSITION, which is only value-correct when the
-    * writer's and the current schema's nested fields pair up by
-    * FIELD-ID in the same order — the overwhelmingly common case, and
-    * codegen-friendly (one cast). When they DON'T (a foreign table
-    * whose nested struct fields were reordered across schema eras —
-    * two same-typed fields swapped would otherwise silently SWAP
-    * VALUES), [[remapByIds]] rebuilds the nested value field-by-field
-    * instead. Ids compare when both sides carry them (the spec
-    * requires them); names are the fallback for out-of-spec nodes.
-    */
-  private[sources] def nestedAligned(wt: JsonNode, ct: JsonNode): Boolean =
-    if (wt.isTextual || ct.isTextual) true // primitives: promotable() rules
-    else (wt.get("type").asText(), ct.get("type").asText()) match {
-      case ("struct", "struct") =>
-        val wf = wt.get("fields").elements().asScala.toSeq
-        val cf = ct.get("fields").elements().asScala.toSeq
-        wf.length == cf.length && wf.zip(cf).forall { case (w, c) =>
-          val idsOk = (Option(w.get("id")), Option(c.get("id"))) match {
-            case (Some(a), Some(b)) => a.asInt() == b.asInt()
-            case _ => w.get("name").asText() == c.get("name").asText()
-          }
-          idsOk && nestedAligned(w.get("type"), c.get("type"))
-        }
-      case ("list", "list") =>
-        nestedAligned(wt.get("element"), ct.get("element"))
-      case ("map", "map") =>
-        nestedAligned(wt.get("key"), ct.get("key")) &&
-          nestedAligned(wt.get("value"), ct.get("value"))
-      case _ => true // shape mismatch: promotable() refuses it anyway
     }
 
   /** Writer nested field matching one current field — by id when both
     * sides carry ids (the spec requires them), by name otherwise.
     */
-  private def writerNestedField(
+  private[sources] def writerNestedField(
       wt: JsonNode, cf: JsonNode): Option[JsonNode] = {
     val wfs = wt.get("fields").elements().asScala.toSeq
     (Option(cf.get("id")) match {
@@ -826,9 +747,10 @@ object IcebergTable {
     * nested REORDERS and nested adds/drops: every current nested
     * field either matches a writer field by id (recursively
     * remappable, incl. the spec's lossless primitive promotions) or
-    * reads null (added after this era). The guard for [[remapByIds]].
+    * reads null (added after this era). What an era of the
+    * `graft-iceberg` scan may read a writer-era column as.
     */
-  private def remappable(wt: JsonNode, ct: JsonNode): Boolean =
+  private[sources] def remappable(wt: JsonNode, ct: JsonNode): Boolean =
     if (wt.isTextual || ct.isTextual)
       wt.isTextual && ct.isTextual &&
         promotable(toSparkType(wt), toSparkType(ct))
@@ -846,86 +768,24 @@ object IcebergTable {
       case _ => false
     }
 
-  /** Full NESTED BY-ID projection (r13): rebuild an evolved nested
-    * value field-by-field so reordered/renamed/added/dropped nested
-    * fields resolve by FIELD-ID exactly like top-level columns —
-    * struct fields look up their writer-era counterpart by id (null
-    * when added later), lists remap per element via `transform`, maps
-    * per key/value. Used only when [[nestedAligned]] fails; the
-    * aligned fast path stays a single cast.
-    */
-  private def remapByIds(
-      e: org.apache.spark.sql.Column, wt: JsonNode,
-      ct: JsonNode): org.apache.spark.sql.Column = {
-    val target = asNullableType(toSparkType(ct))
-    if (wt.isTextual || ct.isTextual) {
-      if (toSparkType(wt) == toSparkType(ct)) e else e.cast(target)
-    } else (wt.get("type").asText(), ct.get("type").asText()) match {
-      case ("struct", "struct") =>
-        val parts = ct.get("fields").elements().asScala.toSeq.map { cf =>
-          val cName = cf.get("name").asText()
-          writerNestedField(wt, cf) match {
-            case Some(wf) =>
-              remapByIds(e.getField(wf.get("name").asText()),
-                wf.get("type"), cf.get("type")).as(cName)
-            case None =>
-              lit(null).cast(asNullableType(toSparkType(cf.get("type"))))
-                .as(cName)
-          }
-        }
-        // a null input struct must stay null (struct() of nulls isn't)
-        when(e.isNotNull, struct(parts: _*).cast(target))
-      case ("list", "list") =>
-        transform(e, x =>
-          remapByIds(x, wt.get("element"), ct.get("element"))).cast(target)
-      case ("map", "map") =>
-        map_from_arrays(
-          transform(map_keys(e), k =>
-            remapByIds(k, wt.get("key"), ct.get("key"))),
-          transform(map_values(e), v =>
-            remapByIds(v, wt.get("value"), ct.get("value")))).cast(target)
-      case _ => throw new IllegalStateException(
-        s"unremappable shape change (guarded by remappable): $wt → $ct")
-    }
-  }
-
-  /** Fully-nullable rendering of a type — file sources force nullable
-    * output, so cast TARGETS must not demand non-null (a cast to a
-    * non-null array element is unresolvable even when types match).
-    */
-  private def asNullableType(dt: DataType): DataType = dt match {
-    case s: StructType =>
-      StructType(s.fields.map(f =>
-        f.copy(dataType = asNullableType(f.dataType), nullable = true)))
-    case a: ArrayType =>
-      ArrayType(asNullableType(a.elementType), containsNull = true)
-    case m: MapType =>
-      MapType(asNullableType(m.keyType), asNullableType(m.valueType),
-        valueContainsNull = true)
-    case other => other
-  }
-
-  /** Read the table at `snapshotId` (or the current snapshot).
-    * Columns appear in CURRENT-schema order with Iceberg-declared
-    * types. SCHEMA EVOLUTION (r12) is resolved the way the spec
-    * demands — by FIELD-ID, not name: every manifest embeds the table
-    * schema at write time (`schema` avro metadata, required by the
-    * spec), so each group of data files is read under ITS OWN
-    * physical column names (current field-id → that era's name) and
-    * remapped to current names; a column added after a manifest was
-    * written reads as null there, a renamed column resolves to its
-    * old physical name, a dropped column is simply not projected.
-    * Groups = DISTINCT historical schemas (a handful on any real
-    * table), unioned by name. Manifests WITHOUT the embedded schema
-    * (out-of-spec) fall back to name resolution guarded by the
-    * footer check. Identity-partition source columns are materialized
-    * from the manifests' partition structs (see the object Scaladoc)
-    * via one broadcast join on the file path.
+  /** Read the table at `snapshotId` (or the current snapshot)
+    * through the `graft-iceberg` DataSourceV2 scan, pinned to that
+    * snapshot when the frame is made. Columns appear in the
+    * snapshot's schema order with Iceberg-declared types; schema
+    * evolution resolves by FIELD-ID per write-time era, identity
+    * partition columns attach from the manifests, deletes apply per
+    * file on the executors, and filters on the result prune files
+    * ([[graft.sources.dsv2.IcebergTableProvider]]). The scan's
+    * metadata columns `_file`, `_pos`, `_row_id` and
+    * `_last_updated_sequence_number` are selectable on the result.
     */
   def read(
       spark: SparkSession, table: String,
-      snapshotId: Option[Long] = None): DataFrame =
-    readCore(spark, table, snapshotId, None)
+      snapshotId: Option[Long] = None): DataFrame = {
+    val reader = spark.read.format("graft-iceberg")
+    snapshotId.fold(reader)(id => reader.option("snapshotId", id))
+      .load(table)
+  }
 
   /** Named snapshot refs of the table (`refs` metadata map):
     * ref name → (snapshot id, "branch" | "tag"). `main` is implicit
@@ -947,13 +807,6 @@ object IcebergTable {
           s"no branch or tag named $ref on $table"))
       read(spark, table, Some(id))
     }
-
-  /** [[read]] restricted to the given data files, deletes still
-    * applied — the MoR-resolved row view compaction rewrites.
-    */
-  private[sources] def readKeep(
-      spark: SparkSession, table: String, keep: Set[String]): DataFrame =
-    readCore(spark, table, None, Some(keep))
 
   /** The snapshot-log as (made-current timestamp ms, snapshot id) in
     * commit order — rollbacks APPEND an entry for the re-current
@@ -1119,543 +972,52 @@ object IcebergTable {
     }
   }
 
-  /** MANIFEST-level file skipping — (kept, total): the data files
-    * whose spec bounds (`lower_bounds`/`upper_bounds`, decoded per
-    * [[IcebergBounds]]) or identity-partition VALUE could admit a row
-    * with `column` ∈ [lo, hi]. Files without bounds for the column
-    * are kept (skipping is an optimization, never a correctness
-    * decision); all-null files (null_value_counts == record_count)
-    * and out-of-range partition values drop. Driver-side metadata
-    * work bounded by files-in-snapshot — exactly the pruning
-    * Iceberg's own planning does before a scan task is ever created.
+  /** MANIFEST-level file skipping — (kept, total): the data files of
+    * the snapshot that COULD hold a row with `column` ∈ [lo, hi], by
+    * the same per-file admission the `graft-iceberg` scan prunes with
+    * (manifest bounds, null counts, identity-partition values and
+    * temporal-transform ordinals of each file's own spec era). Files
+    * without metadata for the column are kept (skipping is an
+    * optimization, never a correctness decision).
     */
-  /** ALL default-spec partition fields as (name, transform,
-    * source-id, partition-field-id) — temporal-transform pruning
-    * needs the non-identity ones [[identityPartitionSources]] skips.
-    */
-  private def allPartitionFields(
-      meta: JsonNode): Seq[(String, String, Int, Int)] = {
-    val specFields: Seq[JsonNode] =
-      if (meta.has("partition-specs")) {
-        val defId =
-          if (meta.has("default-spec-id")) meta.get("default-spec-id").asInt()
-          else 0
-        meta.get("partition-specs").elements().asScala
-          .find(_.get("spec-id").asInt() == defId)
-          .map(_.get("fields").elements().asScala.toSeq)
-          .getOrElse(Nil)
-      } else if (meta.has("partition-spec"))
-        meta.get("partition-spec").elements().asScala.toSeq
-      else Nil
-    specFields.map(f => (
-      f.get("name").asText(), f.get("transform").asText(),
-      f.get("source-id").asInt(),
-      Option(f.get("field-id")).map(_.asInt()).getOrElse(-1)))
-  }
-
-  /** The TEMPORAL transforms' int ordinal of a probe bound — these
-    * transforms are MONOTONIC, so a value range maps to an ordinal
-    * range and partition values prune exactly like identity values
-    * (bucket/truncate are not monotonic and never prune ranges).
-    */
-  private def temporalOrdinal(transform: String, v: Any): Option[Long] = {
-    import java.time._
-    val utc = ZoneOffset.UTC
-    val zdt: Option[ZonedDateTime] = v match {
-      case t: java.sql.Timestamp => Some(t.toInstant.atZone(utc))
-      case d: java.sql.Date => Some(d.toLocalDate.atStartOfDay(utc))
-      case d: LocalDate => Some(d.atStartOfDay(utc))
-      case d: LocalDateTime => Some(d.atZone(utc))
-      case i: Instant => Some(i.atZone(utc))
-      case s: String =>
-        scala.util.Try(LocalDate.parse(s).atStartOfDay(utc)).toOption
-          .orElse(scala.util.Try(Instant.parse(s).atZone(utc)).toOption)
-      case _ => None
-    }
-    zdt.flatMap { z =>
-      transform match {
-        case "day" => Some(z.toLocalDate.toEpochDay)
-        case "month" =>
-          Some((z.getYear - 1970).toLong * 12 + z.getMonthValue - 1)
-        case "year" => Some((z.getYear - 1970).toLong)
-        case "hour" =>
-          Some(Math.floorDiv(z.toInstant.getEpochSecond, 3600L))
-        case _ => None
-      }
-    }
-  }
-
   def prunedDataFiles(
       table: String, column: String, lo: Any, hi: Any,
       snapshotId: Option[Long] = None): (Seq[String], Int) = {
-    val meta = metadataJson(table)
-    val schemaNode = schemaNodeOf(meta)
-    val snap = snapshotNode(meta, snapshotId)
-    val idParts = identityPartitionSources(meta)
-    val field = schemaNode.get("fields").elements().asScala
-      .find(_.get("name").asText() == column)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no top-level column $column to prune on"))
-    val fid = field.get("id").asInt()
-    val dt = toSparkType(field.get("type"))
-    // temporal transform fields over THIS column, with their probe
-    // ordinal ranges (None when the bound doesn't parse → no pruning)
-    val temporal = allPartitionFields(meta)
-      .filter(f => f._3 == fid &&
-        Set("day", "month", "year", "hour")(f._2))
-      .flatMap { case (pfName, transform, _, pfId) =>
-        for {
-          l <- temporalOrdinal(transform, lo)
-          h <- temporalOrdinal(transform, hi)
-        } yield (pfName, pfId, l, h)
-      }
-    val entries = dataFilesWithPartitions(table, meta, snap)
-    val total = entries.size
-    // bounds in the value domain — when the probe type has no bound
-    // encoding (e.g. timestamps), identity/temporal partition pruning
-    // below still applies; only the min/max check degrades to keep
-    val (loB, hiB) = (IcebergBounds.bound(dt, lo), IcebergBounds.bound(dt, hi))
-    def rawVal(raw: String): Option[Any] = dt match {
-      case DateType =>
-        scala.util.Try(java.time.LocalDate.parse(raw)).toOption
-      case StringType => Some(raw)
-      case BooleanType => scala.util.Try(raw.toBoolean).toOption
-      case _ => scala.util.Try(BigDecimal(raw)).toOption
-    }
-    val asPart = idParts.find(_._2 == column)
-    val kept = entries.filter { e =>
-      // ABSENT key ≠ null value: a file written under an OLDER spec
-      // (partition evolution) never had the field — no metadata to
-      // prune on, so it must be KEPT; Some(None) is a genuine null
-      val identityAdmits = asPart match {
-        case Some((pfName, _, _)) =>
-          // identity partition: the VALUE itself is the bound
-          e.pv.get(pfName) match {
-            case None => true // other-era file: cannot prune on this
-            case Some(None) => false // null never matches a range
-            case Some(Some(raw)) => (loB, hiB) match {
-              case (Some(l), Some(h)) => rawVal(raw).forall(x =>
-                IcebergBounds.leq(l, x) && IcebergBounds.leq(x, h))
-              case _ => true
-            }
-          }
-        case None => true
-      }
-      // each temporal transform's partition ordinal must fall in the
-      // probe's ordinal range (null value → all-null file → drop)
-      val temporalAdmits = temporal.forall { case (pfName, _, l, h) =>
-        e.pv.get(pfName) match {
-          case None => true // other-era file: cannot prune on this
-          case Some(None) => false
-          case Some(Some(raw)) =>
-            // the ordinal arrives as an int, except day values whose
-            // date logical type decodes to an ISO string
-            scala.util.Try(raw.toLong).toOption
-              .orElse(scala.util.Try(
-                java.time.LocalDate.parse(raw).toEpochDay).toOption)
-              .forall(o => o >= l && o <= h)
-        }
-      }
-      val boundsAdmit = {
-        val allNull =
-          e.records > 0L && e.nullCounts.get(fid).contains(e.records)
-        if (allNull) false
-        else {
-          val lom = e.lower.get(fid).flatMap(IcebergBounds.decode(dt, _))
-          val him = e.upper.get(fid).flatMap(IcebergBounds.decode(dt, _))
-          (lom, him, loB, hiB) match {
-            case (Some(a), Some(b), Some(l), Some(h)) =>
-              IcebergBounds.leq(a, h) && IcebergBounds.leq(l, b)
-            case _ => true
-          }
-        }
-      }
-      identityAdmits && temporalAdmits &&
-        (asPart.isDefined || boundsAdmit)
-    }.map(_.path).sorted
-    (kept, total)
+    val p = dsv2.IcebergDsv2.plan(SparkSession.active, table,
+      snapshotId.map(id => "snapshotid" -> id.toString).toMap)
+    require(p.schema.fieldNames.contains(column),
+      s"no top-level column $column to prune on")
+    val range = org.apache.spark.sql.sources.And(
+      org.apache.spark.sql.sources.GreaterThanOrEqual(column, lo),
+      org.apache.spark.sql.sources.LessThanOrEqual(column, hi))
+    val kept = p.entries.filter(e =>
+      dsv2.FilterPrune.admits(dsv2.IcebergDsv2.statsView(e, p), range))
+    (kept.map(_.path).sorted, p.entries.size)
   }
 
-  /** Manifest-level file-skipping read: [[read]] restricted to
-    * [[prunedDataFiles]] of `column` ∈ [lo, hi] with the row filter
-    * still applied — identical rows to the unpruned filtered read,
-    * cost ∝ files that can match (the [[DeltaLog.readRange]] twin
-    * for the other format).
+  /** FILE-SKIPPING read: `read(...)` filtered to `column` ∈ [lo, hi].
+    * The filter pushes down into the `graft-iceberg` scan, which plans
+    * only the [[prunedDataFiles]] and re-applies the filter row by row
+    * (the [[DeltaLog.readRange]] twin).
     */
   def readRange(
       spark: SparkSession, table: String, column: String,
-      lo: Any, hi: Any, snapshotId: Option[Long] = None): DataFrame = {
-    val keep = prunedDataFiles(table, column, lo, hi, snapshotId)._1.toSet
-    readCore(spark, table, snapshotId, Some(keep))
-      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
+      lo: Any, hi: Any, snapshotId: Option[Long] = None): DataFrame =
+    read(spark, table, snapshotId).filter(col(column).between(lo, hi))
 
-  /** [[readCore]] keeping each row's physical position: the table's
-    * schema columns PLUS `__pos_file` (canonical data-file path) and
-    * `__pos_index` (in-file row index) — what a row-level delete
-    * writer needs to name positions. Evolution resolves per era like
-    * any read; existing deletes are NOT applied (re-deleting an
-    * already-dead position is harmless by the reader's anti-join).
-    */
-  private[sources] def readWithPos(
-      spark: SparkSession, table: String): DataFrame =
-    readCore(spark, table, None, None, withPos = true)
-
-  /** [[read]] plus the v3 ROW LINEAGE columns — `_row_id` (the file's
-    * `first_row_id` + the row's in-file position; null for files
-    * written before the table carried lineage) and
-    * `_last_updated_sequence_number` (the file's data sequence
-    * number) — the spec's inheritance rules for rows without
-    * materialized lineage columns. Deletes apply as in any read;
+  /** [[read]] plus the v3 ROW LINEAGE columns: `_row_id` (a
+    * materialized value in files lineage-preserving compaction wrote,
+    * otherwise the file's `first_row_id` + the row's in-file position;
+    * null for files written before the table carried lineage) and
+    * `_last_updated_sequence_number` (materialized, otherwise the
+    * file's data sequence number). Deletes apply as in any read;
     * surviving rows keep their ids.
     */
   def readLineage(
       spark: SparkSession, table: String,
-      snapshotId: Option[Long] = None): DataFrame =
-    readCore(spark, table, snapshotId, None, withLineage = true)
-
-  private[sources] def readCore(
-      spark: SparkSession, table: String,
-      snapshotId: Option[Long],
-      keep: Option[Set[String]],
-      withPos: Boolean = false,
-      withLineage: Boolean = false): DataFrame = {
-    val meta = metadataJson(table)
-    val fv = meta.get("format-version").asInt()
-    // a freshly-created table (CREATE TABLE before the first INSERT,
-    // r17) has no current snapshot: zero rows under the declared schema
-    val noCurrent = snapshotId.isEmpty &&
-      !Option(meta.get("current-snapshot-id")).exists(_.asLong() != -1L)
-    if (noCurrent) {
-      require(!withPos, "readWithPos on an empty table")
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schemaOf(meta))
-    }
-    val snap = snapshotNode(meta, snapshotId)
-    // the spec's snapshot `schema-id`: a snapshot committed under an
-    // OLDER schema (e.g. pre-REPLACE) time-travels with ITS schema,
-    // not the current one — resolved from the schemas history;
-    // snapshots without the field (pre-r15 writers, plain evolution)
-    // read under the current schema via field-id resolution as before
-    val schemaNode = Option(snap.get("schema-id")).map(_.asInt())
-      .filter(_ => meta.has("schemas"))
-      .flatMap(sid => meta.get("schemas").elements().asScala
-        .find(_.get("schema-id").asInt() == sid))
-      .getOrElse(schemaNodeOf(meta))
-    val schema = toSparkType(schemaNode).asInstanceOf[StructType]
-    val entries0 = dataFilesWithPartitions(table, meta, snap)
-    val entries = keep match {
-      case Some(k) => entries0.filter(e => k.contains(e.path))
-      case None => entries0
-    }
-    // identity reconstruction is PER FILE ERA (partition evolution):
-    // each file's manifest spec says which columns are NOT in it and
-    // must come from partition metadata — a column identity-
-    // partitioned in one era reads from metadata there and from the
-    // data files everywhere else
-    val idToName: Map[Int, String] = schemaNode.get("fields")
-      .elements().asScala
-      .map(f => f.get("id").asInt() -> f.get("name").asText()).toMap
-    def branchSrcOf(e: FileEntry): Seq[(String, String)] =
-      e.idFields.flatMap { case (pfName, sid) =>
-        idToName.get(sid).filter(schema.fieldNames.contains)
-          .map(src => (pfName, src))
-      }
-    val anyIdentity = entries.exists(e => branchSrcOf(e).nonEmpty)
-    val deletes =
-      if (withPos) Nil else deleteFilesOf(table, meta, snap)
-    // v3 splits position deletes: puffin DELETION VECTORS (decoded
-    // driver-side, bounded by deleted rows) vs the v2 parquet
-    // position-delete files v3 FORBIDS (a v3 table carrying them is
-    // out of spec — refused rather than guessing which to trust)
-    val dvFiles = deletes.filter(d => d.content == 1 && d.format == "PUFFIN")
-    val posDeletes = deletes
-      .filter(d => d.content == 1 && d.format != "PUFFIN").map(_.path)
-    require(fv < 3 || posDeletes.isEmpty,
-      s"format-version 3 table $table carries parquet position-delete " +
-        "files (the spec requires deletion vectors): refused")
-    val eqDeletes = deletes.filter(_.content == 2)
-    if (entries.isEmpty) {
-      require(!withPos, "readWithPos on an empty snapshot")
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    val allCurFields = schemaNode.get("fields").elements().asScala.toSeq
-    // MATERIALIZED lineage files (v3 compaction output) read their
-    // row ids from the file, not from first_row_id inheritance —
-    // they scan as their own branch with two extra physical columns
-    def matOf(e: FileEntry): Boolean =
-      withLineage && fv >= 3 && e.firstRowId.isEmpty &&
-        e.lineageMat.getOrElse(footerHasLineage(spark, e.path))
-    val branches = entries
-      .groupBy(e => (e.writerSchemaJson, branchSrcOf(e), matOf(e))).toSeq
-      .sortBy { case ((ws, bs, mat), _) =>
-        (ws.getOrElse(""), bs.map(_._1).mkString(","), mat)
-      }
-      .map { case ((ws, branchSrc, mat), files) =>
-        val srcCols = branchSrc.map(_._2)
-        val curFields = allCurFields
-          .filterNot(f => srcCols.contains(f.get("name").asText()))
-        val writerById: Map[Int, JsonNode] = ws.map { js =>
-          mapper.readTree(js).get("fields").elements().asScala
-            .map(f => f.get("id").asInt() -> f).toMap
-        }.getOrElse(Map.empty)
-        val resolved = curFields.map { cf =>
-          val name = cf.get("name").asText()
-          val logicalDt = toSparkType(cf.get("type"))
-          val nullable = !cf.get("required").asBoolean()
-          writerById.get(cf.get("id").asInt()) match {
-            case Some(wf) =>
-              val physName = wf.get("name").asText()
-              val physDt = toSparkType(wf.get("type"))
-              val aligned = nestedAligned(wf.get("type"), cf.get("type"))
-              require(
-                if (aligned) promotable(physDt, logicalDt)
-                else remappable(wf.get("type"), cf.get("type")),
-                s"column $name (field-id ${cf.get("id").asInt()}) changed " +
-                  s"TYPE across the schema history ($physDt → $logicalDt) " +
-                  "beyond the spec's lossless promotions (int→long, " +
-                  "float→double, decimal widening): refused rather than " +
-                  "miscast")
-              val colExpr =
-                if (physName == name && physDt == logicalDt) col(name)
-                else if (aligned)
-                  // the structurally-identical cast renames nested
-                  // levels positionally (the DeltaLog column-mapping
-                  // discipline); fully-nullable target — file sources
-                  // force nullable output
-                  col(physName).cast(asNullableType(logicalDt)).as(name)
-                else
-                  // nested REORDER across eras: rebuild by field-id
-                  remapByIds(col(physName), wf.get("type"), cf.get("type"))
-                    .as(name)
-              (Some(StructField(physName, physDt, nullable)), colExpr)
-            case None if ws.isDefined =>
-              // the column was ADDED after this manifest's files were
-              // written: the spec's answer is the field's
-              // `initial-default` (a v3 feature — what pre-existing
-              // rows read back), null when absent. Emitting null for
-              // a defaulted column would be WRONG ROWS on any v3
-              // table a defaults-aware writer authored.
-              (None, initialDefaultLit(cf, logicalDt).as(name))
-            case None =>
-              // out-of-spec manifest without an embedded schema: name
-              // resolution, guarded by the footer check below
-              (Some(StructField(name, logicalDt, nullable)), col(name))
-          }
-        }
-        val readSchema = StructType(resolved.flatMap(_._1))
-        if (ws.isEmpty)
-          requireFooterNames(spark, files.head.path, readSchema.fieldNames.toSeq)
-        // the scan's own file/row-index metadata feeds the
-        // position-delete anti-join, the partition attach AND the
-        // equality-delete sequence scope — it must come from inside
-        // each branch (expressions like input_file_name() cannot span
-        // the joins below)
-        val needFile = withPos || withLineage ||
-          posDeletes.nonEmpty || dvFiles.nonEmpty ||
-          anyIdentity || eqDeletes.nonEmpty
-        val metaCols =
-          (if (needFile)
-            Seq(DeltaLog.canonPath(col("_metadata.file_path")).as("__ib_f"))
-          else Nil) ++
-            (if (posDeletes.nonEmpty || dvFiles.nonEmpty ||
-              withPos || withLineage)
-              Seq(col("_metadata.row_index").as("__ib_i"))
-            else Nil)
-        // lineage reads emit uniform __mat_* columns from every
-        // branch (real reads on materialized files, typed nulls
-        // elsewhere) so the union below stays shape-identical and the
-        // attach step can coalesce(materialized, inherited)
-        val lineageCols =
-          if (!withLineage) Nil
-          else if (mat) Seq(
-            col("_row_id").as("__mat_rid"),
-            col("_last_updated_sequence_number").as("__mat_seq"))
-          else Seq(
-            lit(null).cast(LongType).as("__mat_rid"),
-            lit(null).cast(LongType).as("__mat_seq"))
-        val scanSchema =
-          if (!mat) readSchema
-          else StructType(readSchema.fields ++ Seq(
-            StructField("_row_id", LongType),
-            StructField("_last_updated_sequence_number", LongType)))
-        // listing-free scan over the manifest's exact file set (see
-        // graftext.KnownFiles: spark.read.parquet over >32 explicit
-        // paths launches a one-task-per-path discovery JOB per read)
-        val scanned = org.apache.spark.sql.graftext.KnownFiles
-          .parquetFrame(spark, scanSchema, files.map(_.path))
-          .select(resolved.map(_._2) ++ lineageCols ++ metaCols: _*)
-        // attach THIS era's identity columns from partition metadata
-        // (one metadata-sized broadcast equi-join on the canonical
-        // path), cast to their declared types so every branch unions
-        // with an identical column set and typing
-        if (branchSrc.isEmpty) scanned
-        else {
-          import spark.implicits._
-          val pvFrame = files.map { e =>
-            (e.path, branchSrc.map { case (pf, _) =>
-              e.pv.getOrElse(pf, None).orNull
-            })
-          }.toDF("__pv_file", "__pv")
-            .select(col("__pv_file") +:
-              branchSrc.zipWithIndex.map { case ((_, src), i) =>
-                col("__pv").getItem(i).as(src)
-              }: _*)
-          val joined = scanned.join(
-            broadcast(pvFrame), col("__ib_f") === col("__pv_file"))
-            .drop("__pv_file")
-          branchSrc.foldLeft(joined) { case (d, (_, src)) =>
-            d.withColumn(src, col(src).cast(schema(src).dataType))
-          }
-        }
-      }
-    val data0 = branches.reduce(_.unionByName(_))
-    val data1 =
-      if (posDeletes.isEmpty && dvFiles.isEmpty) data0
-      else {
-        // the delete frame is bounded by DELETED rows; broadcast
-        // anti-join on (canonical path, in-file row index) — the
-        // DeltaLog deletion-vector discipline in manifest form.
-        // Parquet position deletes read distributed; puffin DVs
-        // decode driver-side (each blob names one data file's
-        // deleted positions) and union in.
-        import spark.implicits._
-        val parquetDel =
-          if (posDeletes.isEmpty) None
-          else Some(spark.read
-            .schema(StructType.fromDDL("file_path STRING, pos BIGINT"))
-            .parquet(posDeletes: _*)
-            .select(
-              DeltaLog.canonFile(col("file_path")).as("__del_f"),
-              col("pos").as("__del_i")))
-        val dvDel =
-          if (dvFiles.isEmpty) None
-          else {
-            val pairs: Seq[(String, Long)] = dvFiles.flatMap { d =>
-              val blob = (d.contentOffset, d.contentSize) match {
-                case (Some(off), Some(len)) =>
-                  Puffin.readBlob(d.path, off, len)
-                case _ =>
-                  // a foreign writer relying on the footer alone:
-                  // resolve the blob by referenced-data-file property
-                  val metaBlob = Puffin.readFooter(d.path)
-                    .find(b => b.tpe == "deletion-vector-v1" &&
-                      b.properties.get("referenced-data-file")
-                        .map(local).contains(d.referencedDataFile.get))
-                    .getOrElse(throw new IllegalStateException(
-                      s"no deletion-vector-v1 blob for " +
-                        s"${d.referencedDataFile.get} in ${d.path}"))
-                  Puffin.readBlob(d.path, metaBlob.offset, metaBlob.length)
-              }
-              Puffin.dvBlobIndexes(blob)
-                .map(i => (d.referencedDataFile.get, i))
-            }
-            Some(pairs.toDF("__del_f", "__del_i"))
-          }
-        val del = (parquetDel.toSeq ++ dvDel.toSeq).reduce(_.unionByName(_))
-        data0.join(
-          broadcast(del),
-          col("__ib_f") === col("__del_f") &&
-            col("__ib_i") === col("__del_i"),
-          "left_anti")
-      }
-    // v3 ROW LINEAGE attaches per-file constants (first_row_id, seq)
-    // through one metadata-sized broadcast join, BEFORE __ib_i is
-    // dropped: _row_id = first_row_id + position (null when the file
-    // predates lineage), _last_updated_sequence_number = the file's
-    // data sequence number — the spec's inheritance rules
-    val data = {
-      val base =
-        if (!withLineage) data1
-        else {
-          import spark.implicits._
-          val lf = entries.map(e => (e.path, e.firstRowId, e.seq))
-            .toDF("__lf", "__lfr", "__lseq")
-          data1
-            .join(broadcast(lf), col("__ib_f") === col("__lf"))
-            .withColumn("_row_id",
-              coalesce(col("__mat_rid"),
-                when(col("__lfr").isNotNull, col("__lfr") + col("__ib_i"))))
-            .withColumn("_last_updated_sequence_number",
-              coalesce(col("__mat_seq"), col("__lseq")))
-            .drop("__lf", "__lfr", "__lseq", "__mat_rid", "__mat_seq")
-        }
-      if ((posDeletes.nonEmpty || dvFiles.nonEmpty) && !withPos)
-        base.drop("__ib_i")
-      else base
-    }
-    // the file's data sequence number (equality deletes scope on it)
-    // attaches via ONE metadata-sized broadcast equi-join on the
-    // canonical path — identity partition columns already attached
-    // PER BRANCH above. Fast path: a snapshot whose files all share
-    // one sequence number (every table until its first post-delete
-    // append) attaches the seq as a LITERAL — no join at all.
-    val oneSeq = entries.map(_.seq).distinct match {
-      case Seq(s) => Some(s)
-      case _ => None
-    }
-    val withParts =
-      if (eqDeletes.isEmpty) {
-        if (withPos) data else data.drop("__ib_f")
-      } else if (oneSeq.isDefined) {
-        val d = data.withColumn("__ib_seq", lit(oneSeq.get))
-        if (withPos) d else d.drop("__ib_f")
-      } else {
-        import spark.implicits._
-        val seqFrame = entries.map(e => (e.path, e.seq))
-          .toDF("__file", "__ib_seq")
-        val joined = data
-          .join(broadcast(seqFrame), col("__ib_f") === col("__file"))
-          .drop("__file")
-        if (withPos) joined else joined.drop("__ib_f")
-      }
-    // EQUALITY deletes (v2 merge-on-read, the CDC-writer form): a row
-    // is deleted when its equality-column values null-safe-match ANY
-    // delete row whose sequence number is STRICTLY ABOVE the row's
-    // file's. One broadcast anti-join per distinct key-column set
-    // (build side bounded by deleted keys); applied AFTER the
-    // partition attach so key columns living only in partition
-    // metadata still compare.
-    val afterEq =
-      if (eqDeletes.isEmpty) withParts
-      else {
-        val idToField = schemaNode.get("fields").elements().asScala
-          .map(f => f.get("id").asInt() -> f).toMap
-        eqDeletes.groupBy(_.equalityIds).toSeq.sortBy(_._1.mkString(","))
-          .foldLeft(withParts) { case (d, (ids, files)) =>
-            val keyCols = ids.map { id =>
-              val f = idToField.getOrElse(id,
-                throw new IllegalStateException(
-                  s"equality delete references field-id $id which is " +
-                    "not in the current schema (dropped key column): " +
-                    "refused rather than returning undeleted rows"))
-              (f.get("name").asText(), toSparkType(f.get("type")))
-            }
-            val del = files.map { df =>
-              spark.read.parquet(df.path)
-                .select(keyCols.map { case (n, dt) =>
-                  col(n).cast(dt).as(s"__eq_$n")
-                } :+ lit(df.seq).as("__eq_seq"): _*)
-            }.reduce(_.unionByName(_))
-            // the delete frame's columns are all __eq_-prefixed, so
-            // bare col(n) resolves to the data side unambiguously;
-            // identity sources were attached TYPED per branch, so the
-            // cast is a no-op there and harmless everywhere else
-            val cond = keyCols.map { case (n, dt) =>
-              col(n).cast(dt) <=> col(s"__eq_$n")
-            }.reduce(_ && _) && col("__ib_seq") < col("__eq_seq")
-            d.join(broadcast(del), cond, "left_anti")
-          }
-      }
-    val posCols =
-      (if (withPos)
-        Seq(col("__ib_f").as("__pos_file"), col("__ib_i").as("__pos_index"))
-      else Nil) ++
-        (if (withLineage)
-          Seq(col("_row_id"), col("_last_updated_sequence_number"))
-        else Nil)
-    afterEq.select(schema.fields.map(f => col(f.name)) ++ posCols: _*)
+      snapshotId: Option[Long] = None): DataFrame = {
+    val df = read(spark, table, snapshotId)
+    df.select(df.columns.map(col) ++
+      Seq(col("_row_id"), col("_last_updated_sequence_number")): _*)
   }
 }

@@ -2,10 +2,10 @@ package graft.sources.dsv2
 
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Coalesce, Expression, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.{DeleteAccess, DeltaDv, DeltaLog, Puffin}
@@ -38,11 +38,15 @@ import graft.sources.{DeleteAccess, DeltaDv, DeltaLog, Puffin}
   *  - equality deletes (Iceberg v2 MoR): per-file applicable delete
   *    sets (scoped by the planner to delete files with sequence
   *    number STRICTLY above the data file's), loaded per executor
-  *    and checked per row against a hash set of the key tuples;
+  *    and checked per row against a hash set of the key tuples —
+  *    nested (struct/list/map) keys by value, and a key column the
+  *    file predates by its era's constant;
   *  - `constants`: per-slice output columns that do not live in the
   *    file (`_change_type` for computed CDF rows, `_commit_version`,
-  *    schema-evolution initial-defaults), compiled into the output
-  *    projection as literals.
+  *    schema-evolution initial-defaults, Iceberg's `_file`), compiled
+  *    into the output projection as literals;
+  *  - `lineage`: Iceberg v3 row lineage, inherited from the file's
+  *    metadata unless the era reads materialized values.
   *
   * MULTI-ERA READS (r17): a factory carries one [[EraReader]] per
   * distinct write-time schema / partition-spec era; each slice names
@@ -126,6 +130,15 @@ private[dsv2] object GraftFileBatch {
       readFunc: PartitionedFile => Iterator[InternalRow])
       extends Serializable
 
+  /** The Iceberg v3 row lineage one data file's rows inherit:
+    * `_row_id` = `firstRowId` + the row's position (null when the file
+    * predates lineage) and `_last_updated_sequence_number` = `seq`,
+    * the file's data sequence number. An era that reads MATERIALIZED
+    * lineage columns (lineage-preserving compaction's output) emits
+    * those instead.
+    */
+  case class RowLineage(firstRowId: Option[Long], seq: Long)
+
   // ----------------------------------------------------------- resolver
 
   /** Per-JVM (= per-executor) resolution cache: each delete blob /
@@ -197,10 +210,11 @@ private[dsv2] object GraftFileBatch {
         val pf = org.apache.spark.sql.graftext.ParquetReadBridge
           .wholeFile(emptyRow, spec.path, spec.length, 0L)
         val set = new java.util.HashSet[Any]()
+        val norm = spec.dataTypes.map(keyValue(_, copy = true))
         spec.readFunc(pf).foreach { r =>
           val vals = spec.dataTypes.indices.map { i =>
             if (r.isNullAt(i)) null
-            else copyInternal(r.get(i, spec.dataTypes(i)))
+            else norm(i)(r.get(i, spec.dataTypes(i)))
           }
           set.add(if (vals.size == 1) vals.head else vals)
         }
@@ -241,6 +255,18 @@ private[dsv2] object GraftFileBatch {
         if (m.isEmpty) p else p.filterNot(m)
     }
 
+    /** A key column's value in the form equality-delete sets hold:
+      * atomic values as read (copied out of the reader's reused
+      * buffers when `copy`), nested ones as external Rows/Seqs/Maps,
+      * which compare by value whatever row class a reader produced.
+      */
+    def keyValue(dt: DataType, copy: Boolean): Any => Any = dt match {
+      case _: StructType | _: ArrayType | _: MapType =>
+        CatalystTypeConverters.createToScalaConverter(dt)
+      case _ if copy => copyInternal
+      case _ => identity
+    }
+
     private def copyInternal(v: Any): Any = v match {
       case u: UTF8String => u.copy()
       case b: Array[Byte] => b.clone()
@@ -257,7 +283,8 @@ private[dsv2] object GraftFileBatch {
     * "rows matching the NEW delete keys" extraction) ADMITS only rows
     * matching at least one listed set. `constants` override
     * same-named read columns in the output projection. `era` indexes
-    * the factory's [[EraReader]] array.
+    * the factory's [[EraReader]] array. `lineage` supplies the
+    * `_row_id`/`_last_updated_sequence_number` output columns.
     */
   case class GraftInputPartition(
       pf: PartitionedFile,
@@ -266,7 +293,8 @@ private[dsv2] object GraftFileBatch {
       eqDrop: Seq[EqDeleteSpec],
       eqKeep: Seq[EqDeleteSpec],
       constants: Map[String, Any],
-      era: Int = 0)
+      era: Int = 0,
+      lineage: Option[RowLineage] = None)
       extends InputPartition
 
   /** One write-time era's reader: the per-file read function (built
@@ -301,24 +329,38 @@ private[dsv2] object GraftFileBatch {
       private val emitted = era.emitted
       private val rowIdxPos = era.rowIdxPos
 
+      private def emittedRef(name: String): Option[Expression] = {
+        val i = emitted.fieldNames.indexOf(name)
+        if (i < 0) None
+        else Some(BoundReference(i, emitted(i).dataType, nullable = true))
+      }
+
       // output projection: the slice's constant when one is declared
       // (constants WIN over a same-named read column — a computed-CDF
       // slice's `_change_type` literal must override the null the
-      // parquet reader yields for the column a data file lacks), else
-      // the emitted column by position — one codegen'd projection
+      // parquet reader yields for the column a data file lacks), then
+      // row lineage (a materialized value, else the inherited one),
+      // else the emitted column by position — one codegen'd projection
       private val proj: UnsafeProjection = {
         val exprs: Seq[Expression] = output.fields.toSeq.map { f =>
-          p.constants.get(f.name) match {
-            case Some(ext) =>
+          (p.constants.get(f.name), p.lineage, f.name) match {
+            case (Some(ext), _, _) =>
               Literal(
                 CatalystTypeConverters
                   .createToCatalystConverter(f.dataType)(ext),
                 f.dataType)
-            case None =>
-              val i = emitted.fieldNames.indexOf(f.name)
-              if (i < 0) throw new IllegalStateException(
-                s"output column ${f.name} neither read nor constant")
-              BoundReference(i, emitted(i).dataType, nullable = true)
+            case (None, Some(l), "_row_id") =>
+              val inherited = l.firstRowId.fold[Expression](
+                Literal(null, LongType))(
+                b => Add(Literal(b), emittedRef("_pos").get))
+              emittedRef("_row_id")
+                .fold(inherited)(m => Coalesce(Seq(m, inherited)))
+            case (None, Some(l), "_last_updated_sequence_number") =>
+              emittedRef(f.name).fold[Expression](Literal(l.seq))(m =>
+                Coalesce(Seq(m, Literal(l.seq))))
+            case _ =>
+              emittedRef(f.name).getOrElse(throw new IllegalStateException(
+                s"output column ${f.name} neither read nor constant"))
           }
         }
         UnsafeProjection.create(exprs)
@@ -340,22 +382,37 @@ private[dsv2] object GraftFileBatch {
           "era reader did not request the row-index column: refusing " +
           "rather than returning undeleted rows")
 
-      // equality-delete sets in INTERNAL value form, loaded per
-      // executor through the resolver cache
-      private def eqSetsOf(
-          specs: Seq[EqDeleteSpec]): Array[(Array[Int], java.util.HashSet[Any])] =
-        specs.map { d =>
-          val pos = d.cols.map { c =>
+      private val dts: Array[DataType] = emitted.fields.map(_.dataType)
+
+      /** One equality-delete key column's value per row: the era's
+        * constant when the file predates the column, else the value
+        * read at its emitted position.
+        */
+      private def keyPart(c: String, dt: DataType): InternalRow => Any =
+        p.constants.get(c) match {
+          case Some(ext) =>
+            val v = Option(CatalystTypeConverters
+              .createToCatalystConverter(dt)(ext))
+              .map(DeleteResolver.keyValue(dt, copy = false)).orNull
+            _ => v
+          case None =>
             val at = emitted.fieldNames.indexOf(c)
             require(at >= 0, s"equality-delete column $c not in read schema")
-            at
-          }.toArray
-          (pos, DeleteResolver.eqDeleteSet(d))
+            val norm = DeleteResolver.keyValue(dts(at), copy = false)
+            r => if (r.isNullAt(at)) null else norm(r.get(at, dts(at)))
+        }
+
+      // equality-delete sets in key-value form, loaded per executor
+      // through the resolver cache
+      private def eqSetsOf(specs: Seq[EqDeleteSpec])
+          : Array[(Array[InternalRow => Any], java.util.HashSet[Any])] =
+        specs.map { d =>
+          (d.cols.zip(d.dataTypes).map { case (c, dt) => keyPart(c, dt) }
+            .toArray, DeleteResolver.eqDeleteSet(d))
         }.toArray
       private val eqSets = eqSetsOf(p.eqDrop)
       private val eqKeepSets = eqSetsOf(p.eqKeep)
 
-      private val dts: Array[DataType] = emitted.fields.map(_.dataType)
       // a keep-mode slice whose keep set resolved EMPTY emits nothing:
       // skip opening the data file entirely (the changelog planner
       // emits candidate slices for every carried file when a new
@@ -377,12 +434,9 @@ private[dsv2] object GraftFileBatch {
       }
 
       private def keyOf(
-          pos: Array[Int], row: InternalRow): Any =
-        if (pos.length == 1)
-          (if (row.isNullAt(pos(0))) null else row.get(pos(0), dts(pos(0))))
-        else
-          pos.toSeq.map(at =>
-            if (row.isNullAt(at)) null else row.get(at, dts(at)))
+          parts: Array[InternalRow => Any], row: InternalRow): Any =
+        if (parts.length == 1) parts(0)(row)
+        else parts.toSeq.map(_(row))
 
       private def eqAdmits(row: InternalRow): Boolean = {
         var i = 0

@@ -14,7 +14,7 @@ import org.apache.spark.sql.graftext.ParquetReadBridge
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 
-import graft.sources.{DeltaLog, IcebergBounds, IcebergTable}
+import graft.sources.{IcebergBounds, IcebergTable}
 
 /** DataSourceV2 read path over the Iceberg metadata reader — the
   * [[DeltaTableProvider]] twin:
@@ -35,11 +35,11 @@ import graft.sources.{DeltaLog, IcebergBounds, IcebergTable}
   * resolve as they always did.
   *
   * `.filter(...)` prunes files against the manifests'
-  * `lower_bounds`/`upper_bounds`/`null_value_counts` and exact
-  * identity-partition values (the same state
-  * [[IcebergTable.prunedDataFiles]] consults), then pushes into
-  * parquet row-group skipping; `.select(...)` prunes columns to the
-  * scan. Merge-on-read semantics apply per file inside the shared
+  * `lower_bounds`/`upper_bounds`/`null_value_counts`, exact
+  * identity-partition values and temporal-transform ordinals (the
+  * one pruning rule, [[IcebergTable.prunedDataFiles]] included), then
+  * pushes into parquet row-group skipping; `.select(...)` prunes
+  * columns to the scan. Merge-on-read semantics apply per file inside the shared
   * [[GraftFileBatch]] readers, from DESCRIPTORS resolved on the
   * executors (r17): position deletes and puffin deletion vectors as
   * row-index drops, equality deletes as per-row key-set checks SCOPED
@@ -50,14 +50,23 @@ import graft.sources.{DeltaLog, IcebergBounds, IcebergTable}
   *
   * MULTI-ERA tables (r17): entries group by their write-time schema
   * and partition-spec era — resolved by FIELD-ID against the query
-  * schema, so renames read under their old physical names, the
-  * spec's lossless promotions (int→long, float→double, decimal
-  * widening) decode at scan, columns added later come back as their
-  * `initial-default` (null when none), dropped columns are not
+  * schema at every nesting level, so renames read under their old
+  * physical names, nested fields reordered across eras keep their
+  * values, the spec's lossless promotions (int→long, float→double,
+  * decimal widening) decode at scan, columns added later come back
+  * as their `initial-default` (null when none) — an equality-delete
+  * key among them matches on that constant — dropped columns are not
   * projected, and each era's identity-partition columns attach from
-  * ITS manifests' partition structs. Nested field REORDERS across
-  * eras (a foreign-writer shape needing per-field rebuild) are
-  * refused toward [[IcebergTable.read]], which implements them.
+  * ITS manifests' partition structs.
+  *
+  * METADATA COLUMNS (iceberg-spark's names): `_file` (the row's data
+  * file, canonical path; a pushed `_file IN (...)` prunes files),
+  * `_pos` (its in-file position), and the v3 row lineage `_row_id`
+  * (materialized in lineage-preserving compaction output, otherwise
+  * the file's `first_row_id` + `_pos`, null before lineage) and
+  * `_last_updated_sequence_number`. The writers that name positions
+  * or rewrite rows select them from this scan, so every read of
+  * Iceberg data files goes through it.
   */
 class IcebergTableProvider extends TableProvider with DataSourceRegister {
 
@@ -95,7 +104,7 @@ class IcebergTableProvider extends TableProvider with DataSourceRegister {
   }
 }
 
-private[dsv2] object IcebergDsv2 {
+private[sources] object IcebergDsv2 {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -127,6 +136,15 @@ private[dsv2] object IcebergDsv2 {
     StructField("_change_type", StringType),
     StructField("_change_ordinal", IntegerType),
     StructField("_commit_snapshot_id", LongType))
+
+  /** The scan's metadata columns (a table column of the same name
+    * hides one, as in any DataSourceV2 table).
+    */
+  val metadataColumns: Seq[StructField] = Seq(
+    StructField("_file", StringType, nullable = false),
+    StructField("_pos", LongType, nullable = false),
+    StructField("_row_id", LongType),
+    StructField("_last_updated_sequence_number", LongType))
 
   /** One equality-delete file's METADATA — key columns (current
     * names + types), file coordinates, sequence number. Content loads
@@ -160,7 +178,8 @@ private[dsv2] object IcebergDsv2 {
       posDeleteFiles: Seq[GraftFileBatch.PosDeleteFile],
       eqDeletes: Seq[EqDeleteMeta],
       fieldIdOf: Map[String, Int],
-      idToName: Map[Int, String])
+      idToName: Map[Int, String],
+      formatVersion: Int)
 
   def plan(
       spark: SparkSession, table: String,
@@ -218,7 +237,7 @@ private[dsv2] object IcebergDsv2 {
     val dvByFile: Map[String, Seq[GraftFileBatch.PuffinDvPositions]] =
       dvFiles.flatMap { d =>
         d.referencedDataFile.map { ref =>
-          DeltaLog.canonFile(ref) -> GraftFileBatch.PuffinDvPositions(
+          ref -> GraftFileBatch.PuffinDvPositions(
             d.path, d.contentOffset, d.contentSize, ref)
         }
       }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
@@ -237,17 +256,11 @@ private[dsv2] object IcebergDsv2 {
               "the current schema (dropped key column): refused rather " +
               "than returning undeleted rows"))
       }
-      keyCols.foreach { case (n, dt) =>
-        require(!dt.isInstanceOf[StructType] && !dt.isInstanceOf[ArrayType]
-          && !dt.isInstanceOf[MapType],
-          s"equality-delete key $n has non-atomic type $dt: use " +
-            "graft.sources.IcebergTable.read")
-      }
       EqDeleteMeta(keyCols, d.path, Files.size(Paths.get(d.path)), d.seq)
     }
 
     Planned(schema, schemaNode, entries, dvByFile, posDeleteFiles,
-      eqDeleteMetas, fieldIdOf, idToName)
+      eqDeleteMetas, fieldIdOf, idToName, fv)
   }
 
   /** The entry's OWN era's identity columns as
@@ -260,8 +273,10 @@ private[dsv2] object IcebergDsv2 {
         .map(src => (src, pfName))
     }
 
-  /** Manifest bounds as a [[FilterPrune.ColumnStats]] view — exact
-    * values from the ENTRY's own spec era's identity fields.
+  /** Manifest metadata as a [[FilterPrune.ColumnStats]] view — exact
+    * values from the ENTRY's own spec era's identity fields (and the
+    * file itself for `_file`), min/max from its bounds, else from its
+    * era's temporal-transform partition values.
     */
   def statsView(
       e: IcebergTable.FileEntry, p: Planned): FilterPrune.ColumnStats =
@@ -270,8 +285,21 @@ private[dsv2] object IcebergDsv2 {
       private def fid(column: String): Option[Int] = p.fieldIdOf.get(column)
       private def dt(column: String): Option[DataType] =
         p.schema.fields.find(_.name == column).map(_.dataType)
+      // the UTC range every TEMPORAL partition value of the column
+      // admits (the tightest when several transforms cover it)
+      private def temporal(column: String)
+          : Option[(java.time.Instant, java.time.Instant)] = {
+        val ranges = fid(column).toSeq.flatMap(id =>
+          e.temporalFields.filter(_._3 == id).flatMap { case (pf, tr, _) =>
+            e.pv.get(pf).flatten.flatMap(temporalRange(tr, _))
+          })
+        if (ranges.isEmpty) None
+        else Some((ranges.map(_._1).max, ranges.map(_._2).min))
+      }
       override def exact(column: String): Option[Option[Any]] =
-        idCols.find(_._1 == column).flatMap { case (_, pfName) =>
+        if (column == "_file" && !p.fieldIdOf.contains(column))
+          Some(Some(e.path))
+        else idCols.find(_._1 == column).flatMap { case (_, pfName) =>
           e.pv.get(pfName).map(_.map { raw =>
             dt(column) match {
               case Some(DateType) => java.time.LocalDate.parse(raw)
@@ -283,21 +311,51 @@ private[dsv2] object IcebergDsv2 {
           })
         }
       override def min(column: String): Option[Any] =
-        for {
+        (for {
           id <- fid(column); t <- dt(column)
           b <- e.lower.get(id); v <- IcebergBounds.decode(t, b)
-        } yield v
+        } yield v).orElse(temporal(column).map(_._1))
       override def max(column: String): Option[Any] =
-        for {
+        (for {
           id <- fid(column); t <- dt(column)
           b <- e.upper.get(id); v <- IcebergBounds.decode(t, b)
-        } yield v
+        } yield v).orElse(temporal(column).map(_._2.minusNanos(1000L)))
       override def allNull(column: String): Option[Boolean] =
         fid(column).flatMap(id => e.nullCounts.get(id))
           .map(nc => e.records > 0L && nc == e.records)
       override def mayHaveNull(column: String): Boolean =
         fid(column).flatMap(id => e.nullCounts.get(id)).forall(_ > 0L)
     }
+
+  /** The UTC instant range [start, end) a TEMPORAL transform's
+    * partition value covers. The transforms are monotonic, so the
+    * value bounds its source column as min/max stats do. Values
+    * arrive as the int ordinal, except day values, whose date logical
+    * type decodes to an ISO date.
+    */
+  private def temporalRange(
+      transform: String, raw: String)
+      : Option[(java.time.Instant, java.time.Instant)] = {
+    import java.time.{Instant, LocalDate, ZoneOffset}
+    val ord = scala.util.Try(raw.toLong).toOption
+    val epoch = LocalDate.of(1970, 1, 1)
+    def days(d: LocalDate, next: LocalDate) =
+      (d.atStartOfDay(ZoneOffset.UTC).toInstant,
+        next.atStartOfDay(ZoneOffset.UTC).toInstant)
+    transform match {
+      case "year" => ord.map(y => epoch.plusYears(y))
+        .map(d => days(d, d.plusYears(1)))
+      case "month" => ord.map(m => epoch.plusMonths(m))
+        .map(d => days(d, d.plusMonths(1)))
+      case "day" =>
+        scala.util.Try(LocalDate.parse(raw)).toOption
+          .orElse(ord.map(LocalDate.ofEpochDay))
+          .map(d => days(d, d.plusDays(1)))
+      case "hour" => ord.map(h =>
+        (Instant.ofEpochSecond(h * 3600L), Instant.ofEpochSecond((h + 1) * 3600L)))
+      case _ => None
+    }
+  }
 
   /** The EXTERNAL value a field's `initial-default` assigns to rows
     * predating the column (v3 column defaults); null when absent.
@@ -321,20 +379,27 @@ private[dsv2] object IcebergDsv2 {
     }
 
   /** The read-time rendering of a writer-era type against the current
-    * type (nestedAligned-guarded): WRITER names at every nesting
-    * level (that's what the parquet files carry), CURRENT primitive
-    * types (Spark's parquet readers perform the spec's lossless
-    * promotions at decode).
+    * type ([[IcebergTable.remappable]]-guarded): the CURRENT shape and
+    * field order, nested fields matched to the writer's BY FIELD-ID
+    * and named as the writer named them (the parquet reader resolves
+    * struct fields by name, so a nested reorder or rename reads each
+    * value under its own id; a field the writer era lacks gets a name
+    * no file carries and reads null), CURRENT primitive types (Spark's
+    * parquet readers perform the spec's lossless promotions at
+    * decode).
     */
   def readType(wt: JsonNode, ct: JsonNode): DataType =
     if (wt.isTextual || ct.isTextual) IcebergTable.toSparkType(ct)
     else (wt.get("type").asText(), ct.get("type").asText()) match {
       case ("struct", "struct") =>
-        val wf = wt.get("fields").elements().asScala.toSeq
-        val cf = ct.get("fields").elements().asScala.toSeq
-        StructType(wf.zip(cf).map { case (w, c) =>
-          StructField(w.get("name").asText(),
-            readType(w.get("type"), c.get("type")), nullable = true)
+        StructType(ct.get("fields").elements().asScala.toSeq.map { c =>
+          IcebergTable.writerNestedField(wt, c) match {
+            case Some(w) => StructField(w.get("name").asText(),
+              readType(w.get("type"), c.get("type")), nullable = true)
+            case None => StructField(
+              s"__graft_absent_${c.get("name").asText()}",
+              IcebergTable.toSparkType(c.get("type")), nullable = true)
+          }
         })
       case ("list", "list") =>
         ArrayType(readType(wt.get("element"), ct.get("element")),
@@ -353,6 +418,7 @@ private[dsv2] case class IcebergDsv2Table(
     table: String, tableSchema: StructType, options: Map[String, String],
     pinned: Option[Long])
     extends Table with SupportsRead
+    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
@@ -370,6 +436,16 @@ private[dsv2] case class IcebergDsv2Table(
       .getOrElse(org.apache.spark.sql.functions.lit(true))
     graft.sources.IcebergExport.deleteWhere(SparkSession.active, table, cond)
   }
+
+  override def metadataColumns()
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    IcebergDsv2.metadataColumns.map { f =>
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = f.name
+        override def dataType(): DataType = f.dataType
+        override def isNullable(): Boolean = f.nullable
+      }
+    }.toArray
 
   override def name(): String = s"graft-iceberg:$table"
   override def schema(): StructType = tableSchema
@@ -462,6 +538,16 @@ private[dsv2] case class IcebergDsv2Scan(
     kept
   }
 
+  /** A data file's size on disk: a file the manifests name that the
+    * disk lacks fails the read rather than reading as empty.
+    */
+  private def sizeOnDisk(path: String): Long = {
+    val f = new java.io.File(path)
+    if (!f.isFile) throw new java.io.FileNotFoundException(
+      s"data file $path of $table is missing")
+    f.length()
+  }
+
   /** Post-pushdown statistics from the manifests: bytes of the
     * surviving files, rows from their `record_count` — what lets
     * Spark auto-broadcast a selectively-pruned probe at scale.
@@ -473,7 +559,7 @@ private[dsv2] case class IcebergDsv2Scan(
         override def numRows() = java.util.OptionalLong.empty()
       }
     val kept = keptFiles()
-    val size = kept.map(e => Files.size(Paths.get(e.path))).sum
+    val size = kept.map(e => sizeOnDisk(e.path)).sum
     val rows = kept.map(_.records)
     new Statistics {
       override def sizeInBytes() = java.util.OptionalLong.of(size)
@@ -498,19 +584,48 @@ private[dsv2] case class IcebergDsv2Scan(
       // same share one era
       signature: String)
 
+  /** An era: write-time schema, identity columns, and whether its
+    * files carry materialized row lineage.
+    */
+  private type EraKey = (Option[String], Seq[(String, String)], Boolean)
+
   private def anyDrop: Boolean =
     p.dvByFile.nonEmpty || p.posDeleteFiles.nonEmpty
 
   private lazy val eqColsNeeded: Seq[String] =
     p.eqDeletes.flatMap(_.keyCols.map(_._1)).distinct
 
+  /** The metadata columns the query reads from this scan. */
+  private lazy val metaWanted: Set[String] =
+    IcebergDsv2.metadataColumns.map(_.name).toSet
+      .intersect(required.fieldNames.toSet) -- p.schema.fieldNames
+
+  private lazy val wantsLineage: Boolean =
+    metaWanted("_row_id") || metaWanted("_last_updated_sequence_number")
+
+  // the in-file position rides when deletes drop rows by it or the
+  // query reads it (directly or through inherited `_row_id`s)
+  private lazy val readsPos: Boolean =
+    anyDrop || metaWanted("_pos") || metaWanted("_row_id")
+
+  /** Whether `e`'s rows carry MATERIALIZED lineage columns (v3
+    * lineage-preserving compaction output, null `first_row_id`) —
+    * decided only when the query reads lineage.
+    */
+  private def matOf(e: IcebergTable.FileEntry): Boolean =
+    wantsLineage && p.formatVersion >= 3 && e.firstRowId.isEmpty &&
+      e.lineageMat.getOrElse(
+        IcebergTable.footerHasLineage(SparkSession.active, e.path))
+
+  private def eraKeyOf(e: IcebergTable.FileEntry): EraKey =
+    (e.writerSchemaJson, IcebergDsv2.idColsOf(e, p), matOf(e))
+
   /** Resolve one era: every required column (plus equality-delete
     * keys) located in the writer schema BY FIELD-ID — writer physical
     * names, current types, initial-defaults for columns added later.
     */
-  private def resolveEra(
-      ws: Option[String], idCols: Seq[(String, String)],
-      sampleFile: Option[String]): EraSpec = {
+  private def resolveEra(key: EraKey, sampleFile: Option[String]): EraSpec = {
+    val (ws, idCols, mat) = key
     val spark = SparkSession.active
     val partitionCols = idCols.map(_._1)
     val partitionSchema = StructType(
@@ -523,12 +638,14 @@ private[dsv2] case class IcebergDsv2Scan(
     }.getOrElse(Map.empty)
 
     val wantRead: Seq[String] =
-      required.fields.map(_.name).filterNot(partitionCols.contains) ++
+      required.fields.map(_.name)
+        .filterNot(c => partitionCols.contains(c) || metaWanted(c)) ++
         eqColsNeeded.filterNot(c =>
           partitionCols.contains(c) ||
             required.fieldNames.contains(c))
 
-    // (logical name, physical read field) or (logical name, constant)
+    // (logical name, physical read field) or (logical name, constant);
+    // an equality-delete key that reads as a constant matches on it
     val resolved: Seq[(String, Either[StructField, Any])] =
       wantRead.map { name =>
         val cf = curFields.getOrElse(name, throw new IllegalStateException(
@@ -536,14 +653,13 @@ private[dsv2] case class IcebergDsv2Scan(
         val logicalDt = IcebergTable.toSparkType(cf.get("type"))
         writerById.get(cf.get("id").asInt()) match {
           case Some(wf) =>
-            val physDt = IcebergTable.toSparkType(wf.get("type"))
-            require(
-              IcebergTable.nestedAligned(wf.get("type"), cf.get("type")) &&
-                IcebergTable.promotable(physDt, logicalDt),
-              s"column $name of $table changed shape across the schema " +
-                s"history ($physDt → $logicalDt) beyond aligned lossless " +
-                "promotions: use graft.sources.IcebergTable.read, which " +
-                "rebuilds reordered nested fields by field-id")
+            require(IcebergTable.remappable(wf.get("type"), cf.get("type")),
+              s"column $name (field-id ${cf.get("id").asInt()}) of $table " +
+                "changed TYPE across the schema history " +
+                s"(${IcebergTable.toSparkType(wf.get("type"))} → " +
+                s"$logicalDt) beyond the spec's lossless promotions " +
+                "(int→long, float→double, decimal widening): refused " +
+                "rather than miscast")
             name -> Left(StructField(wf.get("name").asText(),
               IcebergDsv2.readType(wf.get("type"), cf.get("type")),
               nullable = true))
@@ -554,14 +670,6 @@ private[dsv2] case class IcebergDsv2Scan(
             name -> Left(StructField(name, logicalDt, nullable = true))
         }
       }
-    // an equality-delete KEY that reads as a constant in this era
-    // cannot feed the per-row key check — refused, not mis-deleted
-    resolved.foreach { case (name, r) =>
-      if (r.isRight && eqColsNeeded.contains(name))
-        throw new IllegalStateException(
-          s"equality-delete key $name was added after some files of " +
-            s"$table were written: use graft.sources.IcebergTable.read")
-    }
 
     val readFields = resolved.collect { case (name, Left(sf)) => (name, sf) }
     val constants = resolved.collect { case (name, Right(v)) => name -> v }
@@ -572,17 +680,21 @@ private[dsv2] case class IcebergDsv2Scan(
       IcebergTable.requireFooterNames(
         spark, sampleFile.get, readFields.map(_._2.name))
 
-    val physRead = StructType(readFields.map(_._2) ++
-      (if (anyDrop)
+    val lineageFields =
+      if (!mat) Nil
+      else Seq(StructField("_row_id", LongType),
+        StructField("_last_updated_sequence_number", LongType))
+    val physRead = StructType(readFields.map(_._2) ++ lineageFields ++
+      (if (readsPos)
         Seq(StructField(ParquetReadBridge.RowIndexColumn, LongType))
       else Nil))
+    // the row index is emitted as `_pos`: rows are positional, so the
+    // logical name costs nothing
     val emitted = StructType(
       readFields.map { case (name, sf) =>
         StructField(name, sf.dataType, nullable = true)
-      } ++
-        (if (anyDrop)
-          Seq(StructField(ParquetReadBridge.RowIndexColumn, LongType))
-        else Nil) ++
+      } ++ lineageFields ++
+        (if (readsPos) Seq(StructField("_pos", LongType)) else Nil) ++
         partitionSchema.fields)
     // the era's full data schema (for the bridge): every current
     // column the writer era carries, physically rendered
@@ -597,7 +709,7 @@ private[dsv2] case class IcebergDsv2Scan(
             StructField(wf.get("name").asText(),
               IcebergDsv2.readType(wf.get("type"), cf.get("type")),
               nullable = true))
-        })
+        } ++ lineageFields)
     // parquet-level pushdown only when this era reads identity
     // (logical names = physical names): a renamed era's files don't
     // carry the filters' column names. File-level stats pruning and
@@ -610,7 +722,7 @@ private[dsv2] case class IcebergDsv2Scan(
     val readFunc = ParquetReadBridge.reader(
       spark, dataSchema, partitionSchema, physRead, dataFilters)
     val rowIdxPos =
-      if (anyDrop)
+      if (readsPos)
         physRead.fieldNames.indexOf(ParquetReadBridge.RowIndexColumn)
       else -1
     val signature =
@@ -620,7 +732,7 @@ private[dsv2] case class IcebergDsv2Scan(
         // the CDF planner dedups eras ACROSS pinned scans by this
         // signature: a no-deletes snapshot's era (no row-index read)
         // must not swallow a with-deletes one
-        Seq(s"rowidx=${rowIdxPos >= 0}")).mkString("|")
+        Seq(s"rowidx=${rowIdxPos >= 0}", s"lineage=$mat")).mkString("|")
     EraSpec(idCols, partitionSchema, constants,
       EraReader(readFunc, emitted, rowIdxPos), signature)
   }
@@ -630,20 +742,15 @@ private[dsv2] case class IcebergDsv2Scan(
     * files all predate the stream, or an empty table). Built once;
     * the factory array is immutable after that.
     */
-  private lazy val eras: (Array[EraSpec], Map[(Option[String], Seq[(String, String)]), Int]) = {
-    val keys = p.entries
-      .map(e => (e.writerSchemaJson, IcebergDsv2.idColsOf(e, p)))
-      .distinct.sortBy(k => (k._1.getOrElse(""), k._2.mkString(",")))
-    val sampleOf: Map[(Option[String], Seq[(String, String)]), String] =
-      p.entries.groupBy(e =>
-        (e.writerSchemaJson, IcebergDsv2.idColsOf(e, p)))
-        .map { case (k, es) => k -> es.head.path }
+  private lazy val eras: (Array[EraSpec], Map[EraKey, Int]) = {
+    val sampleOf: Map[EraKey, String] =
+      p.entries.groupBy(eraKeyOf).map { case (k, es) => k -> es.head.path }
+    val keys = sampleOf.keys.toSeq
+      .sortBy(k => (k._1.getOrElse(""), k._2.mkString(","), k._3))
     val buf = scala.collection.mutable.ArrayBuffer.empty[EraSpec]
-    val idx = scala.collection.mutable.Map
-      .empty[(Option[String], Seq[(String, String)]), Int]
-    def add(key: (Option[String], Seq[(String, String)]),
-        sample: Option[String]): Unit = {
-      val spec = resolveEra(key._1, key._2, sample)
+    val idx = scala.collection.mutable.Map.empty[EraKey, Int]
+    def add(key: EraKey, sample: Option[String]): Unit = {
+      val spec = resolveEra(key, sample)
       buf.indexWhere(_.signature == spec.signature) match {
         case -1 => buf += spec; idx(key) = buf.size - 1
         case i => idx(key) = i
@@ -656,17 +763,17 @@ private[dsv2] case class IcebergDsv2Scan(
       IcebergTable.identityPartitionSources(IcebergTable.metadataJson(table))
         .collect { case (pfName, src, _)
           if p.schema.fieldNames.contains(src) => (src, pfName) }
-    add((None, curIdCols), None)
+    add((None, curIdCols, false), None)
     (buf.toArray, idx.toMap)
   }
 
   private def eraIndexOf(e: IcebergTable.FileEntry): Int = {
-    val key = (e.writerSchemaJson, IcebergDsv2.idColsOf(e, p))
+    val key = eraKeyOf(e)
     eras._2.get(key).getOrElse {
       // an era unseen at plan/factory time (a mid-stream schema or
       // spec change): match semantically, else fail loudly — the
       // factory array is already shipped
-      val spec = resolveEra(key._1, key._2, Some(e.path))
+      val spec = resolveEra(key, Some(e.path))
       val i = eras._1.indexWhere(_.signature == spec.signature)
       require(i >= 0,
         s"file ${e.path} of $table was written under a schema/spec era " +
@@ -714,27 +821,30 @@ private[dsv2] case class IcebergDsv2Scan(
         val raw = e.pv.get(pfName).flatten.orNull
         DeltaDsv2.internalPartValue(raw, f.dataType)
       }.toArray[Any])
-    val canonPath = DeltaLog.canonFile(e.path)
     val drop: Seq[PositionSpec] =
-      p.dvByFile.getOrElse(canonPath, Nil) ++
+      p.dvByFile.getOrElse(e.path, Nil) ++
         (if (p.posDeleteFiles.isEmpty) Nil
         else Seq(ParquetPosDeletes(
-          p.posDeleteFiles, canonPath, posDeleteReadFunc)))
+          p.posDeleteFiles, e.path, posDeleteReadFunc)))
     // equality deletes apply when the data file's sequence
     // number is STRICTLY below the delete's (spec scoping rule)
     val eqDrop = p.eqDeletes.zipWithIndex
       .collect { case (d, i) if e.seq < d.seq => eqSpecs(i) }
+    val fileConst =
+      if (metaWanted("_file")) Map[String, Any]("_file" -> e.path)
+      else Map.empty[String, Any]
     GraftInputPartition(
       ParquetReadBridge.wholeFile(pv, e.path,
-        Files.size(Paths.get(e.path)), 0L),
-      drop, null, eqDrop, Nil, era.constants, eraIndexOf(e))
+        sizeOnDisk(e.path), 0L),
+      drop, null, eqDrop, Nil, era.constants ++ fileConst, eraIndexOf(e),
+      if (wantsLineage) Some(RowLineage(e.firstRowId, e.seq)) else None)
   }
 
   private[dsv2] override def batchPartitions(): Array[InputPartition] =
     if (IcebergDsv2.isCdf(options)) cdfPartitions()
     else {
       val kept = keptFiles()
-      val sized = kept.map(e => e -> Files.size(Paths.get(e.path)))
+      val sized = kept.map(e => e -> sizeOnDisk(e.path))
       // large files split at Spark's own maxSplitBytes formula (r17) —
       // delete state is file-scoped and row indexes file-absolute, so
       // every split carries its file's descriptors and admits only
@@ -921,13 +1031,12 @@ private[dsv2] class IcebergCdfPlanner(
     val pS = sScan.p
     val parentScan = parent.map(pinned)
     val parentByPath: Map[String, IcebergTable.FileEntry] =
-      parentScan.map(_.p.entries.map(e =>
-        DeltaLog.canonFile(e.path) -> e).toMap).getOrElse(Map.empty)
-    val sPaths: Set[String] =
-      pS.entries.map(e => DeltaLog.canonFile(e.path)).toSet
+      parentScan.map(_.p.entries.map(e => e.path -> e).toMap)
+        .getOrElse(Map.empty)
+    val sPaths: Set[String] = pS.entries.map(_.path).toSet
 
     val inserts = pS.entries
-      .filterNot(e => parentByPath.contains(DeltaLog.canonFile(e.path)))
+      .filterNot(e => parentByPath.contains(e.path))
       .sortBy(_.path)
       .map(e => stamp(remap(sScan, sScan.sliceFor(e)), "insert", ord, sid))
     if (parentScan.isEmpty) return inserts
@@ -935,7 +1044,7 @@ private[dsv2] class IcebergCdfPlanner(
     val pP = pScan.p
 
     val fileDeletes = pP.entries
-      .filterNot(e => sPaths.contains(DeltaLog.canonFile(e.path)))
+      .filterNot(e => sPaths.contains(e.path))
       .sortBy(_.path)
       .map(e => stamp(remap(pScan, pScan.sliceFor(e)), "delete", ord, sid))
 
@@ -953,7 +1062,7 @@ private[dsv2] class IcebergCdfPlanner(
         "refused rather than emitting a wrong feed")
 
     val common = pS.entries
-      .filter(e => parentByPath.contains(DeltaLog.canonFile(e.path)))
+      .filter(e => parentByPath.contains(e.path))
       .sortBy(_.path)
 
     // ---- newly-dead positions on carried files ----------------------
@@ -965,11 +1074,10 @@ private[dsv2] class IcebergCdfPlanner(
     def dvChanged(c: String): Boolean =
       pS.dvByFile.get(c) != pP.dvByFile.get(c)
     val posSlices = common.flatMap { e =>
-      val c = DeltaLog.canonFile(e.path)
-      if (newPosFiles.isEmpty && !dvChanged(c)) None
+      if (newPosFiles.isEmpty && !dvChanged(e.path)) None
       else {
         val sS = sScan.sliceFor(e)
-        val sP = pScan.sliceFor(parentByPath(c))
+        val sP = pScan.sliceFor(parentByPath(e.path))
         // keep = dead(S) ∖ dead(parent); the row must also have been
         // LIVE at the parent, so its equality-delete scope applies
         Some(stamp(remap(sScan, sS.copy(
@@ -997,7 +1105,7 @@ private[dsv2] class IcebergCdfPlanner(
           // S's era (it reads the NEW key columns); parent's delete
           // state (the row must have been live at the parent)
           val sS = sScan.sliceFor(e)
-          val sP = pScan.sliceFor(parentByPath(DeltaLog.canonFile(e.path)))
+          val sP = pScan.sliceFor(parentByPath(e.path))
           stamp(remap(sScan, sS.copy(
             drop = sP.drop, keep = null,
             eqDrop = sP.eqDrop, eqKeep = specs)), "delete", ord, sid)

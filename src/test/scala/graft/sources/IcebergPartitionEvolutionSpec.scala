@@ -85,7 +85,7 @@ class IcebergPartitionEvolutionSpec extends SparkSpec {
     // wrongly dropped (the pre-evolution reader attached NULLS here)
     val (kept, total) = IcebergTable.prunedDataFiles(t, "p", "p0", "p0")
     assert(kept.size < total, "era-1 p=p1 files must prune")
-    val keptRows = IcebergTable.readKeep(spark, t, kept.toSet)
+    val keptRows = IcebergReadReference.readKeep(spark, t, kept.toSet)
       .filter(col("p") === "p0").select(col("id"))
       .collect().map(_.getLong(0)).toSet
     assert(keptRows == Set(0L, 4L, 10L, 12L),
@@ -141,7 +141,7 @@ class IcebergPartitionEvolutionSpec extends SparkSpec {
     // pruning on q is now provable for ALL files
     val (kept, total) = IcebergTable.prunedDataFiles(t, "q", "q0", "q0")
     assert(kept.size < total, "q pruning must drop non-q0 files")
-    val keptRows = IcebergTable.readKeep(spark, t, kept.toSet)
+    val keptRows = IcebergReadReference.readKeep(spark, t, kept.toSet)
       .filter(col("q") === "q0").select(col("id"))
       .collect().map(_.getLong(0)).toSet
     assert(keptRows == preRows.filter(_._3 == "q0").map(_._1),

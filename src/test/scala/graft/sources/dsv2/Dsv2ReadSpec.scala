@@ -3,7 +3,7 @@ package graft.sources.dsv2
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.sources.{DeltaExport, DeltaReadReference, IcebergExport, IcebergTable}
+import graft.sources.{DeltaExport, DeltaReadReference, IcebergExport, IcebergReadReference, IcebergTable}
 import org.apache.spark.sql.functions._
 
 /** The DataSourceV2 read path: `spark.read.format("graft-delta")` /
@@ -218,7 +218,7 @@ class Dsv2ReadSpec extends SparkSpec {
     IcebergExport.deleteWhere(spark, t, col("id") % 5 === 0)
     IcebergExport.deleteWhereEquality(
       spark, t, Seq(1, 3).map(g => Tuple1(g)).toDF("grp"))
-    val bespoke = IcebergTable.read(spark, t)
+    val bespoke = IcebergReadReference.read(spark, t)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     val dsv2 = spark.read.format("graft-iceberg").load(t)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
@@ -243,7 +243,7 @@ class Dsv2ReadSpec extends SparkSpec {
   test("identity-partitioned iceberg: values attach from metadata, filter prunes") {
     val t = tmp("dsv2_iceberg_idpart")
     IcebergExport.create(rows100, t, partitionBy = Seq("grp"))
-    val bespoke = IcebergTable.read(spark, t)
+    val bespoke = IcebergReadReference.read(spark, t)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("grp"))).toSet
     val dsv2 = spark.read.format("graft-iceberg").load(t)
     assert(dsv2.schema.fieldNames.toSet == Set("id", "grp", "name"))
@@ -275,7 +275,7 @@ class Dsv2ReadSpec extends SparkSpec {
     val asOf = spark.read.format("graft-iceberg")
       .option("snapshotId", snaps0.head.toString).load(t)
     assert(asOf.count() == 100L)
-    val sameAsBespoke = IcebergTable.read(spark, t)
+    val sameAsBespoke = IcebergReadReference.read(spark, t)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(cur == sameAsBespoke)
   }

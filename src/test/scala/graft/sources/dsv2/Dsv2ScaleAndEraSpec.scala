@@ -4,7 +4,7 @@ import java.io.{ByteArrayOutputStream, ObjectOutputStream}
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.sources.{DeleteAccess, DeltaExport, IcebergExport, IcebergTable}
+import graft.sources.{DeleteAccess, DeltaExport, IcebergExport, IcebergReadReference, IcebergTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,8 +20,8 @@ import org.apache.spark.sql.types._
   *
   * Eras: a schema-evolved (rename / lossless promotion / add / drop)
   * or partition-evolved Iceberg table reads through DSv2 row-identical
-  * to [[IcebergTable.read]] — per-file field-id resolution, per-era
-  * identity-partition attach.
+  * to [[graft.sources.IcebergReadReference]] — per-file field-id
+  * resolution, per-era identity-partition attach.
   */
 class Dsv2ScaleAndEraSpec extends SparkSpec {
   import spark.implicits._
@@ -108,7 +108,7 @@ class Dsv2ScaleAndEraSpec extends SparkSpec {
     val got = spark.read.format("graft-iceberg").load(big)
       .select(col("id"), col("g")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
-    val bespoke = IcebergTable.read(spark, big)
+    val bespoke = IcebergReadReference.read(spark, big)
       .select(col("id"), col("g")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(got == bespoke)
@@ -153,7 +153,7 @@ class Dsv2ScaleAndEraSpec extends SparkSpec {
     assert(dsv2.schema.fieldNames.toSeq == cols)
     assert(dsv2.schema("id").dataType == LongType)
     val got = dsv2.collect().map(eraKey(_, cols)).toSet
-    val bespoke = IcebergTable.read(spark, t)
+    val bespoke = IcebergReadReference.read(spark, t)
       .collect().map(eraKey(_, cols)).toSet
     assert(got == bespoke, s"\ndsv2: $got\nbespoke: $bespoke")
     assert(got == Set(
@@ -178,7 +178,7 @@ class Dsv2ScaleAndEraSpec extends SparkSpec {
     val cols = Seq("id", "grp", "name")
     val dsv2 = spark.read.format("graft-iceberg").load(t)
     val got = dsv2.collect().map(eraKey(_, cols)).toSet
-    val bespoke = IcebergTable.read(spark, t)
+    val bespoke = IcebergReadReference.read(spark, t)
       .collect().map(eraKey(_, cols)).toSet
     assert(got == bespoke, s"\ndsv2: $got\nbespoke: $bespoke")
     assert(got.nonEmpty && !got.exists(r => r.head.asInstanceOf[Long] % 9 == 4))
